@@ -62,8 +62,6 @@ NODE_TYPE = 1
 WAY_TYPE = 2
 RELATION_TYPE = 4
 
-TYPE_NAMES = {NODE_TYPE: "node", WAY_TYPE: "way", RELATION_TYPE: "relation"}
-
 
 def deg_to_unit(deg: float) -> int:
     return int(round(deg * 1e7))

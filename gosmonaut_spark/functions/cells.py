@@ -96,21 +96,6 @@ def cell_xy(cell: Column | str, res: int) -> tuple[Column, Column]:
     return x, y
 
 
-def cell_children(cell: Column | str, res: int) -> Column:
-    """Array of the 4 child cells at res+1 (raster→vector descent)."""
-    x, y = cell_xy(cell, res)
-    r1 = res + 1
-    kids = []
-    for dx in (0, 1):
-        for dy in (0, 1):
-            kids.append(
-                cell_from_xy(
-                    F.shiftleft(x, 1) + F.lit(dx), F.shiftleft(y, 1) + F.lit(dy), r1
-                )
-            )
-    return F.array(*kids)
-
-
 def cell_ring(cell: Column | str, res: int, k: int = 1) -> Column:
     """Array of cells in the (2k+1)^2 square ring neighborhood (k-ring),
     clamped at grid edges, x wrapping across the antimeridian.
@@ -136,15 +121,6 @@ def cell_ring(cell: Column | str, res: int, k: int = 1) -> Column:
             ).otherwise(F.lit(None).cast("long"))
             cells.append(c)
     return F.array_distinct(F.array_compact(F.array(*cells)))
-
-
-def cell_center(cell: Column | str, res: int) -> tuple[Column, Column]:
-    """(lat, lon) of the cell center — for distance pruning bounds."""
-    x, y = cell_xy(cell, res)
-    n = float(_grid_n(res))
-    lon = (x.cast("double") + F.lit(0.5)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    lat = F.lit(90.0) - (y.cast("double") + F.lit(0.5)) / F.lit(n) * F.lit(180.0)
-    return lat, lon
 
 
 def cell_np(lat, lon, res: int):
@@ -176,11 +152,6 @@ def cell_sql(lat_expr: str, lon_expr: str, res: int) -> str:
     return f"({1 << (2 * res)} + ({x}) * {n} + ({y}))"
 
 
-def cell_parent_sql(lat_expr: str, lon_expr: str, parent_res: int) -> str:
-    """Oracle-side parent = recompute at the coarser res (same floor math)."""
-    return cell_sql(lat_expr, lon_expr, parent_res)
-
-
 # ---------------------------------------------------------------------------
 # Z-order (Morton) codes — the LAYOUT twin of the x-major cell id above.
 # cell_from_xy keys are x-major (x*2^r + y): perfect for equi-joins and
@@ -190,7 +161,7 @@ def cell_parent_sql(lat_expr: str, lon_expr: str, parent_res: int) -> str:
 # Delta/Iceberg Z-ORDER clustering exploits for file skipping: a bbox
 # becomes a handful of contiguous morton ranges, and a scan over a
 # morton-sorted table prunes everything outside them. Pure integer
-# magic-number spreads (shift/and/or), bit-identical in ANSI SQL.
+# magic-number spreads (shift/and/or).
 # ---------------------------------------------------------------------------
 
 _MORTON_SPREADS = (  # 16-bit -> 32-bit even-bit spread (res <= 15 fits)
@@ -218,32 +189,6 @@ def morton_expr(lat: Column | str, lon: Column | str, res: int) -> Column:
     if not MIN_RES <= res <= MAX_RES:
         raise ValueError(f"res must be in [{MIN_RES},{MAX_RES}]")
     return morton_from_xy(cell_x(lon, res), cell_y(lat, res))
-
-
-def _spread_bits_sql(e: str) -> str:
-    for sh, mask in _MORTON_SPREADS:
-        e = f"((({e}) << {sh} | ({e})) & {mask})"
-    return e
-
-
-def morton_from_xy_sql(x_expr: str, y_expr: str) -> str:
-    return (
-        f"({_spread_bits_sql(x_expr)} | ({_spread_bits_sql(y_expr)} << 1))"
-    )
-
-
-def morton_sql(lat_expr: str, lon_expr: str, res: int) -> str:
-    """DuckDB twin of :func:`morton_expr` — identical shifts and masks."""
-    n = _grid_n(res)
-    x = (
-        f"least(greatest(cast(floor((({lon_expr}) + 180.0) / 360.0 * {float(n)}) "
-        f"as bigint), 0), {n - 1})"
-    )
-    y = (
-        f"least(greatest(cast(floor((90.0 - ({lat_expr})) / 180.0 * {float(n)}) "
-        f"as bigint), 0), {n - 1})"
-    )
-    return morton_from_xy_sql(x, y)
 
 
 # ---------------------------------------------------------------------------

@@ -33,24 +33,6 @@ STRICT = "strict"
 SKIP_MISSING = "skip_missing"
 
 
-def _pos_cmp(l: Column, r: Column) -> Column:
-    return (
-        F.when(l["pos"] < r["pos"], F.lit(-1))
-        .when(l["pos"] > r["pos"], F.lit(1))
-        .otherwise(F.lit(0))
-    )
-
-
-def ordered_collect(pos: str, value: Column, out_field: str = "v") -> Column:
-    """collect_list + array_sort-by-pos + project — the Column-expression
-    form of the ordered re-agg. A comparator lambda is required because
-    structs containing maps are not natively orderable — which makes this
-    form INTERPRETED per comparison; prefer :func:`ordered_collect_rows`
-    (engine-side window sort, no lambdas) on hot paths."""
-    paired = F.collect_list(F.struct(F.col(pos).alias("pos"), value.alias(out_field)))
-    return F.transform(F.array_sort(paired, _pos_cmp), lambda s: s[out_field])
-
-
 def ordered_collect_rows(
     df: DataFrame,
     key: str,
@@ -58,7 +40,6 @@ def ordered_collect_rows(
     value: Column,
     out_name: str,
     keep: Column | None = None,
-    order: str = "permute",
     carry: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Order-preserving re-agg in ONE aggregation, no duplication, and —
@@ -74,8 +55,8 @@ def ordered_collect_rows(
     2. A native permutation sort fixes the order *by construction*: sort
        only the (pos, index) pairs — plain longs, natively orderable, no
        comparator lambda over the map-bearing payload structs (structs
-       containing maps are not natively orderable, which is what forced the
-       interpreted comparator in :func:`ordered_collect`) — then gather the
+       containing maps are not natively orderable, so sorting them needs
+       an interpreted comparator) — then gather the
        payloads through the sorted indices with O(1) element_at. On
        already-ordered input (our sessions) the sort is a single linear
        verification pass (TimSort); in a foreign session whose
@@ -108,28 +89,7 @@ def ordered_collect_rows(
     equi-join costs (measured: one full exchange+SMJ removed from each
     assembly pass).
 
-    ``order``: what stage 2 does about element order.
-
-    * ``"permute"`` (default — correct in ANY session): the native
-      permutation sort described above. Safe even when a foreign
-      session's ObjectHashAggregate sort-based fallback destroyed the
-      within-key pos order.
-    * ``"verify"`` (hot-path opt-in for sessions built by
-      :func:`..session.build_session`, whose SortAggregate pin makes the
-      streamed collect_list append preserve the stage-1 secondary sort):
-      assert the collected positions are already ascending — a LONGS-ONLY
-      check (strip, native comparator-free array_sort, array equality) —
-      then strip the payload once. This skips the permutation's
-      ``zip_with`` struct build and the random-access ``element_at``
-      gather, the allocation-heavy half of the re-agg's per-element work
-      (the stitch stage is memory-bandwidth bound at high core counts, so
-      per-element allocations are wall time). A session whose aggregation
-      mode broke the order fails LOUD with a pointer here — it cannot
-      return misordered arrays.
-
     Returns ``df.select(key, out_name)`` with one row per key."""
-    if order not in ("permute", "verify"):
-        raise ValueError(f"unknown order mode {order!r}")
     elem = F.struct(F.col(pos).cast("long").alias("_p"), value.alias("_v"))
     if keep is not None:
         elem = F.when(keep, elem)
@@ -146,25 +106,6 @@ def ordered_collect_rows(
     agg = df2.groupBy(key).agg(
         F.collect_list(elem).alias("_arr"), *carry_aggs
     )
-    if order == "verify":
-        ps = F.transform("_arr", lambda s: s["_p"])
-        sorted_ok = F.array_sort(ps) == ps  # longs: native ordering, no lambda
-        check = F.assert_true(
-            sorted_ok,
-            F.concat(
-                F.lit("ordered_collect_rows(order='verify'): collected "),
-                F.lit("positions not ascending for key "),
-                F.col(key).cast("string"),
-                F.lit(
-                    " — this session's aggregation does not preserve the "
-                    "secondary sort (use order='permute' or build the "
-                    "session with gosmonaut_spark.session.build_session)"
-                ),
-            ),
-        ).isNull()
-        gathered = F.transform("_arr", lambda s: s["_v"])
-        out = F.when(check | (F.rand() < F.lit(-1.0)), gathered)
-        return agg.select(key, *carry_names, out.alias(out_name))
     perm = F.array_sort(
         F.zip_with(
             F.transform("_arr", lambda s: s["_p"]),
@@ -208,14 +149,6 @@ def needed_way_ids(needed_rels_members: DataFrame) -> DataFrame:
     )
 
 
-def needed_node_ids_from_rels(needed_rels_members: DataFrame) -> DataFrame:
-    return (
-        needed_rels_members.filter(F.col("member_type") == NODE_TYPE)
-        .select(F.col("member_id").alias("id"))
-        .distinct()
-    )
-
-
 def ways_to_assemble(
     ways_raw: DataFrame, predicate: Column, want_ways: bool, rel_way_ids: DataFrame | None
 ) -> DataFrame:
@@ -245,7 +178,6 @@ def assemble_ways(
     nodes: DataFrame,
     mode: str = STRICT,
     metrics: AssemblyMetrics | None = None,
-    order: str = "permute",
 ) -> DataFrame:
     """Stitch each selected way's refs into a full node array, order
     preserved (reference scanWays, /root/reference/gosmonaut.go:350-403).
@@ -330,7 +262,6 @@ def assemble_ways(
         F.col("node"),
         "nodes",
         keep=F.col("node_id").isNotNull() & F.col("node").isNotNull(),
-        order=order,
         carry={"__meta": F.col("__meta")},
     )
     return stitched.select(
@@ -352,7 +283,6 @@ def assemble_relations(
     assembled_ways: DataFrame,
     nodes: DataFrame,
     metrics: AssemblyMetrics | None = None,
-    order: str = "permute",
     broadcast_members_max_rows: int = 20_000_000,
     materialize_members: bool = False,
 ) -> DataFrame:
@@ -537,7 +467,6 @@ def assemble_relations(
         member_struct,
         "members",
         keep=F.col("member_type").isNotNull(),
-        order=order,
         carry={"__meta": F.col("__meta")},
     )
     out = agg.select(

@@ -130,31 +130,13 @@ def ray_cast_inside(
     return F.pmod(crossings, F.lit(2)) == F.lit(1)
 
 
-def _numpy_pnpoly(plat, plon, lats, lons):
-    """Vectorized PNPOLY — *identical* arithmetic to :func:`ray_cast_inside`
-    (same IEEE op order), so the two exact engines agree bit-for-bit."""
-    import numpy as np
-
-    inside = np.zeros(plat.shape, dtype=bool)
-    for i in range(len(lats) - 1):
-        y1, y2 = lats[i], lats[i + 1]
-        x1, x2 = lons[i], lons[i + 1]
-        cond = (y1 > plat) != (y2 > plat)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xcross = (x2 - x1) * (plat - y1) / (y2 - y1) + x1
-        inside ^= cond & (plon < xcross)
-    return inside
-
-
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int = 13,
     lat: str = "lat",
     lon: str = "lon",
-    broadcast_polygons: bool | None = None,
     engine: str = "edges",
-    vectorized_max_polygons: int = 1_000_000,
 ) -> DataFrame:
     """Spatial join: every (point, polygon) pair where the point lies inside.
 
@@ -177,50 +159,16 @@ def point_in_polygon_join(
       *shuffled* cover join: the path for polygon sides too large to
       broadcast at all. Zero Python, but lambda evaluation is interpreted
       (~10us/row): right for selective workloads.
-    * ``"vectorized"`` — numpy PNPOLY over Arrow batches (``mapInArrow``);
-      vertices come from a driver-built broadcast vertex store (the
-      reference's broadcast build-side pattern,
-      binary_entity_map.go:17-90). SMALL-POLYGON-SIDE ONLY: the build
-      collects the polygon table to the driver, guarded by
-      ``vectorized_max_polygons`` (raises, pointing at ``edges``, above
-      it) — never the default, never unbounded.
 
-    All three engines produce identical rows (same IEEE arithmetic);
-    asserted against a brute-force numpy oracle in tests.
+    Both engines produce identical rows (same IEEE arithmetic); asserted
+    against a brute-force numpy oracle in tests. Any other ``engine``
+    raises ``ValueError``.
 
     Returns point columns + ``polygon_id``.
     """
+    if engine not in ("edges", "native"):
+        raise ValueError(f"unknown engine {engine!r}")
     res_min = max(0, res - 8)
-    # points and polygons usually share lineage (both derive from the same
-    # extraction pass) — rename the polygon-side payload columns to unique
-    # names *before* the join so the ray-cast expression can never bind to
-    # the wrong side (higher-order functions are fragile under self-join
-    # attribute dedup).
-    if engine == "native":
-        # distributed cover: repartition first — assembled-polygon tables
-        # often arrive AQE-coalesced into very few partitions, and the
-        # adaptive-cover expression (interpreted lambdas) would run
-        # single-threaded otherwise
-        spread = polygons.repartition(
-            int(polygons.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        )
-        cover = polygon_cover_cells(spread, res, res_min=res_min).select(
-            F.col("polygon_id"),
-            F.col("cell"),
-            F.col("lats").alias("__pg_lats"),
-            F.col("lons").alias("__pg_lons"),
-            F.array_min("lats").alias("__pg_min_lat"),
-            F.array_max("lats").alias("__pg_max_lat"),
-            F.array_min("lons").alias("__pg_min_lon"),
-            F.array_max("lons").alias("__pg_max_lon"),
-        )
-    else:
-        # vectorized engine: polygons are collected anyway for the vertex
-        # store, so the adaptive cover is computed driver-side in numpy —
-        # no interpreted HOFs, and the broadcast side carries only scalars
-        cover = None
-    if broadcast_polygons is True and cover is not None:
-        cover = F.broadcast(cover)
     # Re-alias every point column to a fresh attribute (`__pt_*`) before the
     # join. Points and polygons often share lineage (both derive from the
     # same extraction pass), so without this the two join inputs carry
@@ -237,8 +185,8 @@ def point_in_polygon_join(
     # the cover is multi-resolution (adaptive), so each point carries its
     # cell at every level the cover actually uses; ids are disjoint per
     # res, so one exploded column joins them all — explode factor = #levels
-    def pts_at(levels):
-        return ptsr.withColumn(
+    def pts_at(src: DataFrame, levels) -> DataFrame:
+        return src.withColumn(
             "cell",
             F.explode(
                 F.array(
@@ -247,16 +195,38 @@ def point_in_polygon_join(
             ),
         )
 
-    if engine == "native":
-        # cover is computed distributed — levels unknown at plan time, so
-        # carry every res in [res_min, res]
-        pts = pts_at(range(res_min, res + 1))
-        cand = pts.join(cover, "cell", "inner").filter(
+    def bbox_candidates(pts: DataFrame, cover: DataFrame) -> DataFrame:
+        return pts.join(cover, "cell", "inner").filter(
             (plat >= F.col("__pg_min_lat"))
             & (plat <= F.col("__pg_max_lat"))
             & (plon >= F.col("__pg_min_lon"))
             & (plon <= F.col("__pg_max_lon"))
         )
+
+    if engine == "native":
+        # distributed cover: repartition first — assembled-polygon tables
+        # often arrive AQE-coalesced into very few partitions, and the
+        # adaptive-cover expression (interpreted lambdas) would run
+        # single-threaded otherwise. The polygon-side payload columns are
+        # renamed to unique names *before* the join so the ray-cast
+        # expression can never bind to the wrong side (higher-order
+        # functions are fragile under self-join attribute dedup).
+        spread = polygons.repartition(
+            int(polygons.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        )
+        cover = polygon_cover_cells(spread, res, res_min=res_min).select(
+            F.col("polygon_id"),
+            F.col("cell"),
+            F.col("lats").alias("__pg_lats"),
+            F.col("lons").alias("__pg_lons"),
+            F.array_min("lats").alias("__pg_min_lat"),
+            F.array_max("lats").alias("__pg_max_lat"),
+            F.array_min("lons").alias("__pg_min_lon"),
+            F.array_max("lons").alias("__pg_max_lon"),
+        )
+        # cover is computed distributed — levels unknown at plan time, so
+        # carry every res in [res_min, res]
+        cand = bbox_candidates(pts_at(ptsr, range(res_min, res + 1)), cover)
         hit = cand.select(
             *[F.col(f"__pt_{c}").alias(c) for c in point_cols],
             "polygon_id",
@@ -266,8 +236,12 @@ def point_in_polygon_join(
         )
         return hit.filter(F.col("__inside")).drop("__inside")
 
-    if engine not in ("vectorized", "edges"):
-        raise ValueError(f"unknown engine {engine!r}")
+    # engine == "edges". Fully distributed build: the vertex/chunk table and
+    # the adaptive cover are DataFrame plans over the polygon side, broadcast
+    # by the planner (Tungsten-packed, 8 GiB-capped BroadcastExchange) — no
+    # driver .collect() into Python lists, so a fat polygon layer cannot OOM
+    # the driver.
+    from pyspark.storagelevel import StorageLevel
 
     spark = points.sparkSession
     n_shuffle = int(
@@ -275,354 +249,164 @@ def point_in_polygon_join(
             "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
         )
     )
-
-    if engine == "edges":
-        # Fully distributed build: the vertex/chunk table and the adaptive
-        # cover are DataFrame plans over the polygon side, broadcast by the
-        # planner (Tungsten-packed, 8 GiB-capped BroadcastExchange) — no
-        # unbounded driver .collect() into Python lists, so a fat polygon
-        # layer no longer OOMs the driver. (For polygon sides too big to
-        # broadcast at all, the "native" engine is the shuffled-join path.)
-        from pyspark.storagelevel import StorageLevel
-
-        cap = 24
-        max_cells = 64
-        # slim projection cached: the stats action below and the main job
-        # would otherwise both recompute the upstream assembly subtree.
-        # O(#polygons) rows — the same order as the broadcast itself.
-        polys_slim = polygons.select("polygon_id", "lats", "lons").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-        b_min_lat, b_max_lat = F.array_min("lats"), F.array_max("lats")
-        b_min_lon, b_max_lon = F.array_min("lons"), F.array_max("lons")
-
-        def _span_cells(r: int):
-            x0, x1 = cell_x(b_min_lon, r), cell_x(b_max_lon, r)
-            y0, y1 = cell_y(b_max_lat, r), cell_y(b_min_lat, r)
-            return (x1 - x0 + 1) * (y1 - y0 + 1)
-
-        # per-polygon chosen cover res — the identical adaptive rule
-        # polygon_cover_cells applies, so the point explode below is
-        # guaranteed to hit every cover row's resolution
-        chosen = F.lit(res_min)
-        for r in range(res_min + 1, res + 1):
-            chosen = F.when(_span_cells(r) <= F.lit(max_cells), F.lit(r)).otherwise(chosen)
-
-        stats = polys_slim.agg(
-            F.collect_set(chosen).alias("levels"),
-            F.max(F.size("lats")).alias("max_nv"),
-        ).first()
-        used_res = sorted(stats["levels"] or [res_min])
-        max_ne = max(int(stats["max_nv"] or 2) - 1, 1)
-        cap = min(cap, max_ne)
-        n_chunks_max = -(-max_ne // cap)  # ceil: chunks of the largest ring
-
-        cover = F.broadcast(
-            polygon_cover_cells(
-                polys_slim, res, res_min=res_min, levels=used_res
-            ).select(
-                "polygon_id",
-                "cell",
-                F.array_min("lats").alias("__pg_min_lat"),
-                F.array_max("lats").alias("__pg_max_lat"),
-                F.array_min("lons").alias("__pg_min_lon"),
-                F.array_max("lons").alias("__pg_max_lon"),
-            )
-        )
-
-        # fixed-width padded vertex chunks, built relationally: explode one
-        # row per cap-edge chunk, slice the ring arrays, zero-pad to cap+1
-        ne = F.size("lats") - 1
-        n_ch = F.greatest(F.ceil(ne / F.lit(cap)).cast("int"), F.lit(1))
-        chunked = polys_slim.select(
-            "polygon_id",
-            "lats",
-            "lons",
-            ne.alias("__ne"),
-            F.explode(F.sequence(F.lit(0), n_ch - 1)).alias("__ci"),
-        )
-        start = F.col("__ci") * F.lit(cap)
-
-        def _seg(arr: str):
-            s = F.slice(F.col(arr), start + 1, cap + 1)
-            return F.concat(
-                s, F.array_repeat(F.lit(0.0), F.lit(cap + 1) - F.size(s))
-            )
-
-        verts_df = F.broadcast(
-            chunked.select(
-                "polygon_id",
-                F.col("__ci").alias("__vx_ci"),
-                F.least(F.col("__ne") - start, F.lit(cap)).cast("int").alias("__vx_ne"),
-                _seg("lats").alias("__vx_lats"),
-                _seg("lons").alias("__vx_lons"),
-            )
-        )
-
-        # round-robin the points before explode+join — see the skew note on
-        # the vectorized path below (B10: spread before the skew exists).
-        # SKIPPED when the scan already arrives in >= half the session's
-        # shuffle partitions: the probe stage is map-side-only (both join
-        # sides are broadcast), so input splits that are already numerous
-        # and size-bounded parallelize identically and the round-robin
-        # exchange (a full extra pass + local sort over every point row —
-        # measured ~3-4s of the bench PIP leg) buys nothing. Single-file /
-        # coalesced inputs still get spread.
-        if ptsr.rdd.getNumPartitions() >= max(n_shuffle // 2, 2):
-            ptsr_rr = ptsr
-        else:
-            ptsr_rr = ptsr.repartition(n_shuffle)
-        pts = ptsr_rr.withColumn(
-            "cell",
-            F.explode(
-                F.array(*[cell_expr(f"__pt_{lat}", f"__pt_{lon}", r) for r in used_res])
-            ),
-        )
-        cand = pts.join(cover, "cell", "inner").filter(
-            (plat >= F.col("__pg_min_lat"))
-            & (plat <= F.col("__pg_max_lat"))
-            & (plon >= F.col("__pg_min_lon"))
-            & (plon <= F.col("__pg_max_lon"))
-        )
-
-        # unrolled whole-stage-codegen PNPOLY fold — arithmetic matches
-        # ray_cast_inside / the numpy kernels bit-for-bit (see the r1 notes:
-        # ~1.5KB bytecode per edge term, 24 terms JIT-compilable with
-        # -XX:-DontCompileHugeMethods from session.py)
-        la_c, lo_c = F.col("__vx_lats"), F.col("__vx_lons")
-        terms = []
-        for e in range(cap):
-            y1 = F.element_at(la_c, e + 1)
-            y2 = F.element_at(la_c, e + 2)
-            x1 = F.element_at(lo_c, e + 1)
-            x2 = F.element_at(lo_c, e + 2)
-            terms.append(
-                F.when(
-                    (F.lit(e) < F.col("__vx_ne"))
-                    & ((y1 > plat) != (y2 > plat))
-                    & (plon < (x2 - x1) * (plat - y1) / (y2 - y1) + x1),
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            )
-        crossings = terms[0]
-        for t in terms[1:]:
-            crossings = crossings + t
-
-        from ..functions.caching import attach_cached
-
-        cand_slim = cand.select(*[f"__pt_{c}" for c in point_cols], "polygon_id")
-        if n_chunks_max == 1:
-            joined = cand_slim.join(verts_df, "polygon_id")
-            hit = joined.filter(F.pmod(crossings, F.lit(2)) == 1)
-            return attach_cached(
-                hit.select(
-                    *[F.col(f"__pt_{c}").alias(c) for c in point_cols], "polygon_id"
-                ),
-                [polys_slim],
-            )
-        # chunked rings: aggregate the parity on a key derived purely from
-        # the DATA, not from physical placement. (The previous synthetic
-        # monotonically_increasing_id depended on partition index/row order
-        # downstream of a round-robin shuffle — an indeterminate-stage
-        # recomputation after executor loss could reassign ids, splitting/
-        # merging chunk groups and corrupting parity on retry.) The JSON
-        # rendering of the point row handles non-groupable map columns;
-        # byte-identical duplicate point rows DO merge under this key, so
-        # carry their multiplicity d explicitly: the group holds
-        # d x nch rows (crossings summed d times) — divide d back out for
-        # the parity test and re-emit d copies on a hit.
-        pjson = F.to_json(F.struct(*[F.col(f"__pt_{c}") for c in point_cols]))
-        cand_keyed = cand_slim.withColumn("__pjson", pjson)
-        joined = cand_keyed.join(verts_df, "polygon_id")
-        per_pair = joined.groupBy("__pjson", "polygon_id").agg(
-            *[F.first(f"__pt_{c}").alias(f"__pt_{c}") for c in point_cols],
-            F.sum(crossings).alias("__cs"),
-            F.count(F.lit(1)).alias("__cnt"),
-            F.countDistinct("__vx_ci").alias("__nch"),
-        )
-        dup = (F.col("__cnt") / F.col("__nch")).cast("long")
-        total = (F.col("__cs") / dup).cast("long")
-        hits = per_pair.filter(F.pmod(total, F.lit(2)) == 1)
-        return attach_cached(
-            hits.select(
-                *[F.col(f"__pt_{c}").alias(c) for c in point_cols],
-                "polygon_id",
-                F.explode(F.sequence(F.lit(1), dup)).alias("__dup"),
-            ).drop("__dup"),
-            [polys_slim],
-        )
-
-    import numpy as np
-    import pandas as pd
-
-    # Bounded build: the vectorized engine is the documented
-    # small-polygon-side path — count first and fail fast instead of an
-    # unbounded driver collect (the scale engines never collect at all).
-    n_polys = polygons.select("polygon_id").count()
-    if n_polys > vectorized_max_polygons:
-        raise ValueError(
-            f"engine='vectorized' collects the polygon side to the driver "
-            f"({n_polys} polygons > vectorized_max_polygons="
-            f"{vectorized_max_polygons}); use engine='edges' (distributed "
-            f"broadcast build) or engine='native' (shuffled join) instead"
-        )
-    rows = polygons.select("polygon_id", "lats", "lons").collect()
-    verts = {
-        r["polygon_id"]: (
-            np.array(r["lats"], dtype=np.float64),
-            np.array(r["lons"], dtype=np.float64),
-        )
-        for r in rows
-    }
-    if engine == "vectorized":
-        # Pack the vertex store by ring SIZE class: all rings with the same
-        # vertex count become two (n_rings, nv) matrices. The exact kernel
-        # can then test a whole candidate batch against its polygons in ~one
-        # vectorized pass per size class (a handful) instead of one Python
-        # loop iteration per polygon (thousands) — the per-batch overhead is
-        # what dominated dense PIP workloads.
-        pid_arr = np.array(sorted(verts), dtype=np.int64)
-        len_arr = np.array([len(verts[p][0]) for p in pid_arr])
-        cls_of = np.zeros(len(pid_arr), dtype=np.int32)
-        idx_in = np.zeros(len(pid_arr), dtype=np.int64)
-        class_mats: list[tuple] = []
-        for ci, nv in enumerate(np.unique(len_arr)):
-            sel = np.where(len_arr == nv)[0]
-            la_m = np.stack([verts[pid_arr[i]][0] for i in sel])
-            lo_m = np.stack([verts[pid_arr[i]][1] for i in sel])
-            cls_of[sel] = ci
-            idx_in[sel] = np.arange(len(sel))
-            class_mats.append((la_m, lo_m))
-        bc = spark.sparkContext.broadcast((pid_arr, cls_of, idx_in, class_mats))
-
-    # driver-side adaptive cover, fully vectorized (numpy): per polygon, the
-    # finest res in [res_min, res] whose bbox cover stays <= max_cells. The
-    # loop formulation this replaces was O(n_polys * cells) of interpreter
-    # time, single-threaded on the driver — a serial phase that capped the
-    # operator's scaling (Amdahl) once the cluster side got fast.
+    cap = 24
     max_cells = 64
-    order = [r0["polygon_id"] for r0 in rows]
-    pids_a = np.array(order, dtype=np.int64)
-    b_lat0 = np.array([verts[p][0].min() for p in order])
-    b_lat1 = np.array([verts[p][0].max() for p in order])
-    b_lon0 = np.array([verts[p][1].min() for p in order])
-    b_lon1 = np.array([verts[p][1].max() for p in order])
-    m = len(order)
-    chosen = np.full(m, res_min, dtype=np.int64)
-    cx0 = np.zeros(m, dtype=np.int64); cx1 = np.zeros(m, dtype=np.int64)
-    cy0 = np.zeros(m, dtype=np.int64); cy1 = np.zeros(m, dtype=np.int64)
-    unresolved = np.ones(m, dtype=bool)
-    for rr in range(res, res_min - 1, -1):
-        if not unresolved.any():
-            break
-        n = np.int64(1 << rr)
-        x0 = np.clip(((b_lon0 + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-        x1 = np.clip(((b_lon1 + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-        y0 = np.clip(((90.0 - b_lat1) / 180.0 * n).astype(np.int64), 0, n - 1)
-        y1 = np.clip(((90.0 - b_lat0) / 180.0 * n).astype(np.int64), 0, n - 1)
-        span = (x1 - x0 + 1) * (y1 - y0 + 1)
-        take = unresolved & ((span <= max_cells) | (rr == res_min))
-        chosen[take] = rr
-        cx0[take] = x0[take]; cx1[take] = x1[take]
-        cy0[take] = y0[take]; cy1[take] = y1[take]
-        unresolved &= ~take
-    nx = cx1 - cx0 + 1
-    ny = cy1 - cy0 + 1
-    cnt = nx * ny
-    total = int(cnt.sum())
-    rep = np.repeat(np.arange(m), cnt)  # polygon row per output cell
-    starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-    off = np.arange(total) - np.repeat(starts, cnt)
-    ny_rep = ny[rep]
-    dx = off // ny_rep  # x-major within each polygon's bbox
-    dy = off - dx * ny_rep
-    n_rep = np.int64(1) << chosen[rep]
-    cells_a = (np.int64(1) << (2 * chosen[rep])) + (cx0[rep] + dx) * n_rep + (cy0[rep] + dy)
-    used_res = set(np.unique(chosen).tolist())
-    cover_pdf = pd.DataFrame(
-        {
-            "cell": cells_a,
-            "polygon_id": pids_a[rep],
-            "__pg_min_lat": b_lat0[rep],
-            "__pg_max_lat": b_lat1[rep],
-            "__pg_min_lon": b_lon0[rep],
-            "__pg_max_lon": b_lon1[rep],
-        }
+    # slim projection cached: the stats action below and the main job
+    # would otherwise both recompute the upstream assembly subtree.
+    # O(#polygons) rows — the same order as the broadcast itself.
+    polys_slim = polygons.select("polygon_id", "lats", "lons").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    cover = F.broadcast(spark.createDataFrame(cover_pdf))
+
+    b_min_lat, b_max_lat = F.array_min("lats"), F.array_max("lats")
+    b_min_lon, b_max_lon = F.array_min("lons"), F.array_max("lons")
+
+    def _span_cells(r: int):
+        x0, x1 = cell_x(b_min_lon, r), cell_x(b_max_lon, r)
+        y0, y1 = cell_y(b_max_lat, r), cell_y(b_min_lat, r)
+        return (x1 - x0 + 1) * (y1 - y0 + 1)
+
+    # per-polygon chosen cover res — the identical adaptive rule
+    # polygon_cover_cells applies, so the point explode below is
+    # guaranteed to hit every cover row's resolution
+    chosen = F.lit(res_min)
+    for r in range(res_min + 1, res + 1):
+        chosen = F.when(_span_cells(r) <= F.lit(max_cells), F.lit(r)).otherwise(chosen)
+
+    stats = polys_slim.agg(
+        F.collect_set(chosen).alias("levels"),
+        F.max(F.size("lats")).alias("max_nv"),
+    ).first()
+    used_res = sorted(stats["levels"] or [res_min])
+    max_ne = max(int(stats["max_nv"] or 2) - 1, 1)
+    cap = min(cap, max_ne)
+    n_chunks_max = -(-max_ne // cap)  # ceil: chunks of the largest ring
+
+    cover = F.broadcast(
+        polygon_cover_cells(
+            polys_slim, res, res_min=res_min, levels=used_res
+        ).select(
+            "polygon_id",
+            "cell",
+            F.array_min("lats").alias("__pg_min_lat"),
+            F.array_max("lats").alias("__pg_max_lat"),
+            F.array_min("lons").alias("__pg_min_lon"),
+            F.array_max("lons").alias("__pg_max_lon"),
+        )
+    )
+
+    # fixed-width padded vertex chunks, built relationally: explode one
+    # row per cap-edge chunk, slice the ring arrays, zero-pad to cap+1
+    ne = F.size("lats") - 1
+    n_ch = F.greatest(F.ceil(ne / F.lit(cap)).cast("int"), F.lit(1))
+    chunked = polys_slim.select(
+        "polygon_id",
+        "lats",
+        "lons",
+        ne.alias("__ne"),
+        F.explode(F.sequence(F.lit(0), n_ch - 1)).alias("__ci"),
+    )
+    start = F.col("__ci") * F.lit(cap)
+
+    def _seg(arr: str):
+        s = F.slice(F.col(arr), start + 1, cap + 1)
+        return F.concat(
+            s, F.array_repeat(F.lit(0.0), F.lit(cap + 1) - F.size(s))
+        )
+
+    verts_df = F.broadcast(
+        chunked.select(
+            "polygon_id",
+            F.col("__ci").alias("__vx_ci"),
+            F.least(F.col("__ne") - start, F.lit(cap)).cast("int").alias("__vx_ne"),
+            _seg("lats").alias("__vx_lats"),
+            _seg("lons").alias("__vx_lons"),
+        )
+    )
 
     # Round-robin the points BEFORE the explode+join: point tables arrive
     # spatially clustered (city-sorted snapshots), so scan partitions map to
     # geography and one dense-city partition produces most of the candidate
     # pairs — the broadcast join is shuffle-free, so that skew flows straight
-    # into the exact-test stage as a single straggler task (measured: one
-    # worker active while 7 slots idled). Spreading the 5M-row points side
-    # is ~30x cheaper than shuffling the 100M-row candidate side, and dense-
-    # city points then land uniformly across partitions, evening candidate
-    # volume by construction (B10 — skew handled before it exists).
-    ptsr = ptsr.repartition(n_shuffle)
-    # the driver-side cover knows exactly which resolutions occur — explode
-    # points only at those levels (typically 1-2 of the 9 candidates),
-    # shrinking the join's probe side by the same factor
-    pts = pts_at(sorted(used_res) or [res])
+    # into the exact-test stage as a single straggler task. Spreading the
+    # points side is far cheaper than shuffling the candidate side (B10 —
+    # skew handled before it exists).
+    # SKIPPED when the scan already arrives in >= half the session's
+    # shuffle partitions: the probe stage is map-side-only (both join
+    # sides are broadcast), so input splits that are already numerous
+    # and size-bounded parallelize identically and the round-robin
+    # exchange (a full extra pass + local sort over every point row —
+    # measured ~3-4s of the bench PIP leg) buys nothing. Single-file /
+    # coalesced inputs still get spread.
+    if ptsr.rdd.getNumPartitions() >= max(n_shuffle // 2, 2):
+        ptsr_rr = ptsr
+    else:
+        ptsr_rr = ptsr.repartition(n_shuffle)
+    cand = bbox_candidates(pts_at(ptsr_rr, used_res), cover)
 
-    cand = pts.join(cover, "cell", "inner").filter(
-        (plat >= F.col("__pg_min_lat"))
-        & (plat <= F.col("__pg_max_lat"))
-        & (plon >= F.col("__pg_min_lon"))
-        & (plon <= F.col("__pg_max_lon"))
+    # unrolled whole-stage-codegen PNPOLY fold — arithmetic matches
+    # ray_cast_inside bit-for-bit (see the r1 notes: ~1.5KB bytecode per
+    # edge term, 24 terms JIT-compilable with -XX:-DontCompileHugeMethods
+    # from session.py)
+    la_c, lo_c = F.col("__vx_lats"), F.col("__vx_lons")
+    terms = []
+    for e in range(cap):
+        y1 = F.element_at(la_c, e + 1)
+        y2 = F.element_at(la_c, e + 2)
+        x1 = F.element_at(lo_c, e + 1)
+        x2 = F.element_at(lo_c, e + 2)
+        terms.append(
+            F.when(
+                (F.lit(e) < F.col("__vx_ne"))
+                & ((y1 > plat) != (y2 > plat))
+                & (plon < (x2 - x1) * (plat - y1) / (y2 - y1) + x1),
+                F.lit(1),
+            ).otherwise(F.lit(0))
+        )
+    crossings = terms[0]
+    for t in terms[1:]:
+        crossings = crossings + t
+
+    from ..functions.caching import attach_cached
+
+    cand_slim = cand.select(*[f"__pt_{c}" for c in point_cols], "polygon_id")
+    if n_chunks_max == 1:
+        joined = cand_slim.join(verts_df, "polygon_id")
+        hit = joined.filter(F.pmod(crossings, F.lit(2)) == 1)
+        return attach_cached(
+            hit.select(
+                *[F.col(f"__pt_{c}").alias(c) for c in point_cols], "polygon_id"
+            ),
+            [polys_slim],
+        )
+    # chunked rings: aggregate the parity on a key derived purely from
+    # the DATA, not from physical placement. (The previous synthetic
+    # monotonically_increasing_id depended on partition index/row order
+    # downstream of a round-robin shuffle — an indeterminate-stage
+    # recomputation after executor loss could reassign ids, splitting/
+    # merging chunk groups and corrupting parity on retry.) The JSON
+    # rendering of the point row handles non-groupable map columns;
+    # byte-identical duplicate point rows DO merge under this key, so
+    # carry their multiplicity d explicitly: the group holds
+    # d x nch rows (crossings summed d times) — divide d back out for
+    # the parity test and re-emit d copies on a hit.
+    pjson = F.to_json(F.struct(*[F.col(f"__pt_{c}") for c in point_cols]))
+    cand_keyed = cand_slim.withColumn("__pjson", pjson)
+    joined = cand_keyed.join(verts_df, "polygon_id")
+    per_pair = joined.groupBy("__pjson", "polygon_id").agg(
+        *[F.first(f"__pt_{c}").alias(f"__pt_{c}") for c in point_cols],
+        F.sum(crossings).alias("__cs"),
+        F.count(F.lit(1)).alias("__cnt"),
+        F.countDistinct("__vx_ci").alias("__nch"),
     )
-
-    slim = cand.select(
-        *[F.col(f"__pt_{c}").alias(c) for c in point_cols], "polygon_id"
+    dup = (F.col("__cnt") / F.col("__nch")).cast("long")
+    total = (F.col("__cs") / dup).cast("long")
+    hits = per_pair.filter(F.pmod(total, F.lit(2)) == 1)
+    return attach_cached(
+        hits.select(
+            *[F.col(f"__pt_{c}").alias(c) for c in point_cols],
+            "polygon_id",
+            F.explode(F.sequence(F.lit(1), dup)).alias("__dup"),
+        ).drop("__dup"),
+        [polys_slim],
     )
-    out_schema = slim.schema
-
-    # Shuffle-free exact test: candidates stay where the equi-join produced
-    # them (no groupBy(polygon_id) shuffle, no hot-polygon skew). Per Arrow
-    # batch: map polygon_id -> (size class, row in class matrix) with one
-    # searchsorted, then run PNPOLY vectorized over ALL rows of each size
-    # class at once — edge e of every ring in the class is one column
-    # slice, so the whole batch costs (#size classes x nv) numpy ops. The
-    # per-edge arithmetic is identical (same IEEE op order) to
-    # ray_cast_inside and _numpy_pnpoly, keeping all engines bit-equal.
-    # mapInArrow, not mapInPandas: the kernel needs flat numpy columns and
-    # a boolean filter — Arrow gives both zero-copy/C++ (measured ~20%
-    # of the stage was pandas conversion + pandas boolean indexing).
-    i_lat = point_cols.index(lat)
-    i_lon = point_cols.index(lon)
-    n_cols = len(point_cols)  # polygon_id is appended after the point cols
-
-    def check_batches(batches):
-        import pyarrow as pa
-
-        pid_s, cls_arr, idx_arr, mats = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            plat_b = rb.column(i_lat).to_numpy(zero_copy_only=False)
-            plon_b = rb.column(i_lon).to_numpy(zero_copy_only=False)
-            pid = rb.column(n_cols).to_numpy(zero_copy_only=False)
-            pos = np.searchsorted(pid_s, pid)
-            cls = cls_arr[pos]
-            idx = idx_arr[pos]
-            mask = np.zeros(rb.num_rows, dtype=bool)
-            for c in np.unique(cls):
-                sel = cls == c
-                la_m, lo_m = mats[c]
-                a = la_m[idx[sel]]
-                b = lo_m[idx[sel]]
-                pla, plo = plat_b[sel], plon_b[sel]
-                inside = np.zeros(pla.shape, dtype=bool)
-                for e in range(a.shape[1] - 1):
-                    y1, y2 = a[:, e], a[:, e + 1]
-                    x1, x2 = b[:, e], b[:, e + 1]
-                    cond = (y1 > pla) != (y2 > pla)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        xcross = (x2 - x1) * (pla - y1) / (y2 - y1) + x1
-                    inside ^= cond & (plo < xcross)
-                mask[sel] = inside
-            yield rb.filter(pa.array(mask))
-
-    return slim.mapInArrow(check_batches, out_schema)

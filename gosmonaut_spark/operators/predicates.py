@@ -37,9 +37,5 @@ def tag_equals(key: str, value: str, tags: Column | str = "tags") -> Column:
     return F.coalesce(tags[key] == F.lit(value), F.lit(False))
 
 
-def always_true() -> Column:
-    return F.lit(True)
-
-
 def always_false() -> Column:
     return F.lit(False)

@@ -849,18 +849,10 @@ WHERE (g.n - 1) * (g.n * f.w_sum - f.m_neighbors * g.s)
     > {zz} * (g.n * g.q - g.s * g.s) * f.m_neighbors * (g.n - f.m_neighbors)"""
 
 
-def _res_ladder(cell):
+def _res_ladder_sql(cell_expr_txt: str) -> str:
     """Per-row resolution of a self-describing cell id as a pure CASE
     ladder of integer compares (no log2 — libm-free, ulp-free, portable
-    to any SQL engine). Mirrored textually in the SQL twin."""
-    expr = F.lit(0)
-    # ascending build => the LARGEST threshold sits outermost and wins
-    for r in range(1, 16):
-        expr = F.when(cell >= F.lit(1 << (2 * r)), F.lit(r)).otherwise(expr)
-    return expr
-
-
-def _res_ladder_sql(cell_expr_txt: str) -> str:
+    to any SQL engine)."""
     out = "0"
     for r in range(1, 16):
         out = f"CASE WHEN {cell_expr_txt} >= {1 << (2 * r)} THEN {r} ELSE {out} END"

@@ -27,19 +27,21 @@ from pyspark.sql import functions as F
 def _parquet_meta_rows(snap_dir: str) -> int | None:
     """Total row count of a committed snapshot from parquet footer
     metadata only (no spark job, no data pages read). Returns None when
-    any part file's footer cannot be read — callers fall back to a real
-    count."""
+    no part file was read (a missing or empty directory, or a non-local
+    URI, which ``os.walk`` does not see) or any part file's footer cannot
+    be read — callers fall back to a real count."""
     try:
         import pyarrow.parquet as pq
 
-        total = 0
+        total, n_files = 0, 0
         for root, _dirs, files in os.walk(snap_dir):
             for f in files:
                 if f.endswith(".parquet") and not f.startswith("_"):
                     total += pq.ParquetFile(
                         os.path.join(root, f)
                     ).metadata.num_rows
-        return total
+                    n_files += 1
+        return total if n_files else None
     except Exception:
         return None
 
@@ -464,35 +466,14 @@ def run_pipeline_checkpointed(
     mode: str = "skip_missing",
     debug: bool = False,
     post_pass=None,
-    order: str | None = None,
 ):
     """The 5-pass pipeline with a snapshot boundary after every pass
     (reference pass order, gosmonaut.go:144-216). Returns
     (CheckpointStore, dict of DataFrames). ``ck.invalidate(pass)`` forces
     recompute of that pass on the next run; ``ck.rollback(pass, id)``
-    resumes from a retained historical snapshot.
-
-    ``order=None`` (default) picks the re-agg order mode from the
-    SESSION: under :func:`..session.build_session`'s SortAggregate pin
-    the assemblies take the cheap verified-order path (the streamed
-    collect_list append preserves the secondary sort — see
-    ordered_collect_rows); in a plain session (driver smoke, notebooks),
-    whose ObjectHashAggregate sort-based fallback may legally reorder,
-    they take the order-agnostic permutation path. Explicit
-    ``order="verify"|"permute"`` overrides."""
+    resumes from a retained historical snapshot."""
     from ..operators.assembly import assemble_relations, assemble_ways
     from ..sources import pages as src
-
-    if order is None:
-        pinned = (
-            str(
-                spark.conf.get(
-                    "spark.sql.execution.useObjectHashAggregateExec", "true"
-                )
-            ).lower()
-            == "false"
-        )
-        order = "verify" if pinned else "permute"
 
     ck = CheckpointStore(spark, base_dir, debug=debug, post_pass=post_pass)
 
@@ -513,7 +494,7 @@ def run_pipeline_checkpointed(
     members = src.rel_members(rels_raw)
     assembled_ways = ck.run_pass(
         "assembled_ways",
-        lambda: assemble_ways(ways_raw, nodes, mode=mode, order=order),
+        lambda: assemble_ways(ways_raw, nodes, mode=mode),
     )
     relations = ck.run_pass(
         "relations",
@@ -522,7 +503,6 @@ def run_pipeline_checkpointed(
             members,
             assembled_ways,
             nodes,
-            order=order,
             # the member table derives from the entities parquet snapshot
             # here — cheap to materialize eagerly, and the count enables
             # the bounded-broadcast resolve (see assemble_relations)

@@ -12,50 +12,31 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
-def _jit_opts() -> str:
-    base = (
-        "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=1g "
-        "-XX:+UseCodeCacheFlushing"
-    )
-    mode = os.environ.get("SPARK_GRAFT_JIT", "hybrid").lower()
-    if mode == "c1":
-        base += " -XX:TieredStopAtLevel=1"
-    elif mode == "hybrid":
-        # raise the C2 promotion threshold ~10x: only genuinely hot
-        # methods (per-row kernels invoked millions of times) pay for an
-        # optimizing compile; the long tail of one-shot generated stage
-        # methods stays at C1. On this host C2's arena churn stalls the
-        # box (A/B at 8 cores, 200k-page legs: C2-default decode 209s /
-        # pip 68s, C1-only decode 97s / pip 215s — hybrid takes both wins).
-        base += (
-            " -XX:Tier4InvocationThreshold=150000"
-            " -XX:Tier4MinInvocationThreshold=100000"
-            " -XX:Tier4CompileThreshold=150000"
-        )
-    return base
+# Raise the C2 promotion threshold ~10x: only genuinely hot methods
+# (per-row kernels invoked millions of times) pay for an optimizing
+# compile; the long tail of one-shot generated stage methods stays at C1.
+# C2's arena churn can stall a virtualized host (A/B at 8 cores, 200k-page
+# legs: C2-default decode 209s / pip 68s, C1-only decode 97s / pip 215s —
+# this hybrid takes both wins).
+_JIT_OPTS = (
+    "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=1g "
+    "-XX:+UseCodeCacheFlushing"
+    " -XX:Tier4InvocationThreshold=150000"
+    " -XX:Tier4MinInvocationThreshold=100000"
+    " -XX:Tier4CompileThreshold=150000"
+)
 
 
 def _gc_opts(cpus: int) -> str:
     par = max(2, min(int(cpus), 8))
-    opts = (
+    return (
         f" -XX:ParallelGCThreads={par}"
         f" -XX:ConcGCThreads={max(1, par // 4)}"
     )
-    # pin the initial heap to the max (cluster managers launch executor
-    # JVMs with Xms=Xmx for exactly this reason): without it G1 uncommits
-    # regions after collections and the next heavy pass pays the
-    # commit/fault cost of re-growing a multi-GB heap mid-stage —
-    # a suspect in the measured bimodal (28s vs 72s) assembly pass walls.
-    # Opt-in (SPARK_GRAFT_XMS=1): the only A/B window so far was storm-
-    # contaminated, and eagerly committing a 24g heap on an oversubscribed
-    # hypervisor is its own risk — keep the knob, prove it in a clean
-    # window before defaulting.
-    if os.environ.get("SPARK_GRAFT_XMS", "0") == "1":
-        opts += f" -Xms{os.environ.get('SPARK_DRIVER_MEM', '8g')}"
-    return opts
 
 
 def build_session(
@@ -107,10 +88,7 @@ def build_session(
         # shuffle partitions; pinning the floor to shuffle_partitions
         # reproduces that geometry — AQE still merges sub-1MB fragments,
         # it just can't erase wave-level parallelism.
-        .config(
-            "spark.default.parallelism",
-            os.environ.get("SPARK_GRAFT_DP", str(shuffle_partitions)),
-        )
+        .config("spark.default.parallelism", str(shuffle_partitions))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
@@ -159,11 +137,10 @@ def build_session(
         # default ~240MB code cache then fills after a few heavy queries
         # (compiler disables itself -> every later query in the session
         # degrades; measured 42s -> 142s for back-to-back identical runs),
-        # so reserve 1G and keep flushing on. SPARK_GRAFT_JIT=c1 stops
-        # tiered compilation at C1: C2's optimizing compiles of the big
-        # generated methods churn mmap'd arenas hard enough on this
-        # virtualized host to stall the whole box (C2 compiler thread
-        # measured with more SYSTEM time than any worker; see BASELINE.md).
+        # so reserve 1G and keep flushing on. The raised C2 thresholds
+        # (_JIT_OPTS) keep C2's optimizing compiles of the big generated
+        # methods, whose mmap'd arena churn can stall a virtualized host,
+        # to the genuinely hot kernels (see BASELINE.md).
         # GC threads sized to the CORE BUDGET, not the advertised vCPUs:
         # JDK17 G1 on this 32-vCPU host defaults to 23 parallel + 6
         # concurrent GC workers — on a local[2..8] session that is 3-10x
@@ -172,8 +149,8 @@ def build_session(
         # assemble_ways 66s -> 41s at 8 cores with the cap). On a real
         # cluster the executor JVM gets a cgroup cpuset and the same
         # sizing applies per executor.
-        .config("spark.driver.extraJavaOptions", _jit_opts() + _gc_opts(cpus))
-        .config("spark.executor.extraJavaOptions", _jit_opts() + _gc_opts(cpus))
+        .config("spark.driver.extraJavaOptions", _JIT_OPTS + _gc_opts(cpus))
+        .config("spark.executor.extraJavaOptions", _JIT_OPTS + _gc_opts(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         # zstd for shuffle + parquet (lz4/snappy defaults): the assembly
         # passes are memory-bandwidth bound at high core counts (measured:
@@ -195,12 +172,9 @@ def build_session(
         # negligible next to file-creation latency on any storage, and at
         # cluster scale reduce partition counts exceed 200 anyway, so the
         # bypass path would not fire there — this just makes local/small
-        # geometry behave like cluster geometry. Override:
-        # SPARK_GRAFT_BYPASS_MERGE.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "1"),
-        )
+        # geometry behave like cluster geometry. Callers override it (like
+        # any key here) through ``extra``.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # pages blobs expand ~50-100x when decoded: split scans finely so
         # the mapInPandas decode parallelizes even over smallish files
@@ -219,6 +193,9 @@ def build_session(
         )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
+    # prewarm below only when this call starts the SparkContext: a
+    # getOrCreate that reuses a live context already has its worker pool
+    created = SparkContext._active_spark_context is None
     spark = b.getOrCreate()
     # Asynchronously pre-fork the python worker pool and pay the heavy
     # imports (numpy/pandas — ~1-2s per worker) during session
@@ -229,7 +206,7 @@ def build_session(
     # initialise-once, applied to the pool itself). Runs detached — a
     # caller that never touches Python stages loses nothing; the tiny
     # job's tasks only import and exit. SPARK_GRAFT_PREWARM=0 disables.
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
+    if created and os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
         import threading
 
         def _prewarm(n: int) -> None:
@@ -254,13 +231,6 @@ def build_session(
             target=_prewarm, args=(cpus,), daemon=True, name="pyworker-prewarm"
         ).start()
     return spark
-
-
-def get_or_create(master: str | None = None, **kw) -> SparkSession:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
-    return build_session(master, **kw)
 
 
 TABLES = (

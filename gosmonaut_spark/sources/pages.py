@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..format.gpb import COORD_SCALE, TYPE_NAMES
+from ..format.gpb import COORD_SCALE
 
 # Captured driver-side and shipped inside task closures: executor Python
 # workers inherit PYTHONPATH, not the driver's sys.path, so a session driven
@@ -450,11 +450,3 @@ def rel_members(relations_raw: DataFrame) -> DataFrame:
         F.col("m.member_type").alias("member_type"),
         F.col("m.role").alias("role"),
     )
-
-
-def member_type_name(col):
-    """int member type → name, matching /root/reference/osm_types.go:10-17."""
-    m = F.create_map(
-        *[x for k, v in TYPE_NAMES.items() for x in (F.lit(k), F.lit(v))]
-    )
-    return m[col]

@@ -257,53 +257,6 @@ def test_ordered_collect_correct_in_foreign_session_conf(spark):
         spark.conf.set(thr, prev_thr)
 
 
-def test_ordered_collect_verify_mode(spark):
-    """order='verify' (the hot-path opt-in): identical output to the
-    default permutation path under build_session's SortAggregate pin —
-    including an empty keep-masked group — and a LOUD failure (never a
-    misordered array) under a foreign conf whose ObjectHashAggregate
-    sort-based fallback scrambles within-key pos order."""
-    from gosmonaut_spark.operators.assembly import ordered_collect_rows
-
-    df = (
-        spark.range(2000)
-        .select(
-            (F.col("id") % 50).alias("k"),
-            (F.col("id") / F.lit(50)).cast("long").alias("pos"),
-            F.struct(
-                F.col("id").alias("v"),
-                F.create_map(F.lit("a"), F.col("id").cast("string")).alias(
-                    "tags"
-                ),
-            ).alias("val"),
-        )
-        .repartition(4)
-    )
-    keep = F.col("k") != 7
-    base = ordered_collect_rows(df, "k", "pos", F.col("val"), "vals", keep=keep)
-    fast = ordered_collect_rows(
-        df, "k", "pos", F.col("val"), "vals", keep=keep, order="verify"
-    )
-    b = {r.k: [x["v"] for x in r.vals] for r in base.collect()}
-    f = {r.k: [x["v"] for x in r.vals] for r in fast.collect()}
-    assert f == b and f[7] == []
-
-    key = "spark.sql.execution.useObjectHashAggregateExec"
-    thr = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    prev, prev_thr = spark.conf.get(key), spark.conf.get(thr)
-    spark.conf.set(key, "true")
-    spark.conf.set(thr, "1")  # force the order-breaking fallback
-    try:
-        broken = ordered_collect_rows(
-            df, "k", "pos", F.col("val"), "vals", order="verify"
-        )
-        with pytest.raises(Exception, match="positions not ascending"):
-            broken.collect()
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(thr, prev_thr)
-
-
 def test_ordered_collect_empty_group_via_keep_mask(spark):
     """A key whose every element fails the keep mask must survive as one
     row with an empty (not null) array — the SKIP_MISSING contract."""

@@ -37,19 +37,17 @@ def test_ordered_collect_rows_carry_first_nonnull(spark):
         ],
         "k long, pos int, val string, m string",
     )
-    for order in ("permute", "verify"):
-        out = ordered_collect_rows(
-            df,
-            "k",
-            "pos",
-            F.col("val"),
-            "vals",
-            keep=F.col("val").isNotNull(),
-            order=order,
-            carry={"m": F.col("m")},
-        )
-        got = {r["k"]: (r["m"], r["vals"]) for r in out.collect()}
-        assert got == {1: ("meta1", ["a", "b", "c"]), 2: ("meta2", [])}
+    out = ordered_collect_rows(
+        df,
+        "k",
+        "pos",
+        F.col("val"),
+        "vals",
+        keep=F.col("val").isNotNull(),
+        carry={"m": F.col("m")},
+    )
+    got = {r["k"]: (r["m"], r["vals"]) for r in out.collect()}
+    assert got == {1: ("meta1", ["a", "b", "c"]), 2: ("meta2", [])}
 
 
 # ---------------------------------------------------------------------------
@@ -169,3 +167,34 @@ def test_run_pass_footer_count(spark, tmp_path):
     assert snaps[-1]["rows"] == 1234 == out.count()
     snap_dir = ck._snap_dir("t", snaps[-1]["id"])
     assert _parquet_meta_rows(snap_dir) == 1234
+    # no part file read -> None (so run_pass falls back to a real count),
+    # never a silent 0
+    assert _parquet_meta_rows(str(tmp_path / "missing")) is None
+    (tmp_path / "empty").mkdir()
+    assert _parquet_meta_rows(str(tmp_path / "empty")) is None
+
+
+# ---------------------------------------------------------------------------
+# session: python-worker prewarm once per SparkContext
+# ---------------------------------------------------------------------------
+
+
+def test_build_session_reuse_does_not_prewarm(spark, monkeypatch):
+    """A build_session that reuses the live SparkContext (getOrCreate)
+    starts no pyworker-prewarm job: the context's worker pool was already
+    warmed when it was created."""
+    import threading
+
+    from gosmonaut_spark.session import build_session
+
+    started = []
+    real_start = threading.Thread.start
+
+    def spy(self):
+        started.append(self.name)
+        return real_start(self)
+
+    monkeypatch.setattr(threading.Thread, "start", spy)
+    again = build_session(master="local[8]", shuffle_partitions=8)
+    assert again.sparkContext is spark.sparkContext
+    assert "pyworker-prewarm" not in started

@@ -94,16 +94,15 @@ def test_pip_matches_bruteforce(spark, world):
             world["nodes"], polys, res=11
         ).select("id", "polygon_id").collect()
     }
-    # all exact engines must agree pair-for-pair (first call above used
+    # both exact engines must agree pair-for-pair (the call above used
     # the default engine, "edges")
-    for eng in ("native", "vectorized"):
-        got_eng = {
-            (r.id, r.polygon_id)
-            for r in point_in_polygon_join(
-                world["nodes"], polys, res=13, engine=eng
-            ).select("id", "polygon_id").collect()
-        }
-        assert got == got_eng, eng
+    got_native = {
+        (r.id, r.polygon_id)
+        for r in point_in_polygon_join(
+            world["nodes"], polys, res=13, engine="native"
+        ).select("id", "polygon_id").collect()
+    }
+    assert got == got_native
     expected = set()
     for p in polys.collect():
         lats = np.array(p.lats)
@@ -177,18 +176,16 @@ def test_pip_edges_chunked_map_cols_and_duplicates(spark):
     assert tags_of_7 == [{"amenity": "cafe"}, {"amenity": "cafe"}]
 
 
-def test_pip_vectorized_collect_is_bounded(spark):
-    """engine='vectorized' is the documented small-polygon-side path: its
-    driver collect must be guarded, never unbounded."""
+def test_pip_unknown_engine_raises(spark):
+    """Only "edges" and "native" exist: a stale engine name fails loudly
+    instead of silently running the default."""
     polys = spark.createDataFrame(
         [(1, [0.0, 0.0, 1.0, 0.0], [0.0, 1.0, 0.0, 0.0])],
         "polygon_id long, lats array<double>, lons array<double>",
     )
     points = spark.createDataFrame([(1, 0.2, 0.2)], "id long, lat double, lon double")
-    with pytest.raises(ValueError, match="vectorized_max_polygons"):
-        point_in_polygon_join(
-            points, polys, res=8, engine="vectorized", vectorized_max_polygons=0
-        )
+    with pytest.raises(ValueError, match="unknown engine"):
+        point_in_polygon_join(points, polys, res=8, engine="vectorized")
 
 
 def test_knn_ring_matches_brute(spark, world):
@@ -943,7 +940,6 @@ def test_polyfill_matches_numpy_bruteforce(spark):
     import pytest
 
     from gosmonaut_spark.functions.cells import cell_np
-    from gosmonaut_spark.operators.pip import _numpy_pnpoly
     from gosmonaut_spark.operators.tiling import polyfill
 
     res = 10  # 2^10 grid: cells ~0.176 x 0.352 deg
@@ -975,7 +971,7 @@ def test_polyfill_matches_numpy_bruteforce(spark):
         xs, ys = xs.ravel(), ys.ravel()
         clon = (xs + 0.5) / n * 360.0 - 180.0
         clat = 90.0 - (ys + 0.5) / n * 180.0
-        inside = _numpy_pnpoly(clat, clon, la, lo)
+        inside = _numpy_raycast(clat, clon, la, lo)
         cells = (1 << (2 * res)) + xs * n + ys
         want |= {(pid, int(c)) for c in cells[inside]}
     assert got == want and len(got) > 10

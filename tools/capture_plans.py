@@ -42,7 +42,7 @@ def main():
     ways_raw = src.entities_ways_raw(ents)
     rels_raw = src.entities_relations_raw(ents)
     members = src.rel_members(rels_raw)
-    aw = ck.run_pass("assembled_ways", lambda: assemble_ways(ways_raw, nodes, mode=SKIP_MISSING, order="verify"))
+    aw = ck.run_pass("assembled_ways", lambda: assemble_ways(ways_raw, nodes, mode=SKIP_MISSING))
 
     def cap(name, df):
         p = os.path.join(out_dir, f"{name}_{tag}.txt")
@@ -53,21 +53,21 @@ def main():
         print(f"wrote {p} ({len(txt)} bytes)", file=sys.stderr)
 
     cap("entities_decode", src.extract_entities(pages))
-    cap("assemble_ways", assemble_ways(ways_raw, nodes, mode=SKIP_MISSING, order="verify"))
+    cap("assemble_ways", assemble_ways(ways_raw, nodes, mode=SKIP_MISSING))
     # materialize_members=True mirrors run_pipeline_checkpointed — the
     # configuration the bench's relations pass actually runs
     try:
         cap(
             "assemble_relations",
             assemble_relations(
-                rels_raw, members, aw, nodes, order="verify",
+                rels_raw, members, aw, nodes,
                 materialize_members=True,
             ),
         )
     except TypeError:  # round-start tree: no materialize_members param
         cap(
             "assemble_relations",
-            assemble_relations(rels_raw, members, aw, nodes, order="verify"),
+            assemble_relations(rels_raw, members, aw, nodes),
         )
 
     nodes_slim = nodes.select("id", "lat", "lon")

@@ -74,10 +74,10 @@ def main():
         F.struct(F.col("id"), F.col("lat"), F.col("lon"), F.col("tags")).alias("node"))
     t("ways:ref-join->noop", lambda: noop(refs.join(node_side, "node_id", "left")))
     t("ways:full-assemble->noop", lambda: noop(
-        assemble_ways(ways_raw, nodes, mode=SKIP_MISSING, order="verify")))
+        assemble_ways(ways_raw, nodes, mode=SKIP_MISSING)))
     aw = t("pass:assembled_ways(write)", lambda: ck.run_pass(
         "assembled_ways",
-        lambda: assemble_ways(ways_raw, nodes, mode=SKIP_MISSING, order="verify")))
+        lambda: assemble_ways(ways_raw, nodes, mode=SKIP_MISSING)))
 
     # pass 3: relations — sub-stages
     members = src.rel_members(rels_raw)
@@ -115,7 +115,7 @@ def main():
         F.col("role"),
         F.when(F.col("member_type") == WAY_TYPE, F.lit("way")).otherwise(F.lit("node")).alias("type"),
         F.col("node"), F.col("way"))
-    agg = ordered_collect_rows(resolved, "rel_id", "pos", member_struct, "members", order="verify")
+    agg = ordered_collect_rows(resolved, "rel_id", "pos", member_struct, "members")
     t("rels:agg->noop", lambda: noop(agg))
 
     out = rels_raw.select("id", "tags", "url").join(
@@ -127,7 +127,7 @@ def main():
 
     t("pass:relations(write)", lambda: ck.run_pass(
         "relations",
-        lambda: assemble_relations(rels_raw, members, aw, nodes, order="verify")))
+        lambda: assemble_relations(rels_raw, members, aw, nodes)))
 
     print(timings)
     # snapshot sizes

@@ -62,8 +62,7 @@ def main() -> None:
     nodes = dfs["nodes"].select("id", "lat", "lon")
     polys = polygons_from_ways(dfs["assembled_ways"])
     # default engine (edges): fully distributed vertex/cover build — the
-    # scale path for dense workloads (r3; vectorized keeps a driver-side
-    # polygon ceiling and is now the documented small-side-only engine)
+    # scale path for dense workloads
     hits = point_in_polygon_join(nodes, polys, res=13)
     n_hits = hits.count()
     tiles = tile_pyramid(nodes, 5, 12)
