@@ -39,13 +39,6 @@ class PipelineResult:
     ways: DataFrame | None
     relations: DataFrame | None
     metrics: AssemblyMetrics
-    _persisted: list = None
-
-    def release(self) -> None:
-        """Unpersist shared intermediates (the reference frees its caches
-        between passes, gosmonaut.go:176,:194,:209-210)."""
-        for df in self._persisted or []:
-            df.unpersist()
 
     def workload_counts(self) -> dict[str, int]:
         """Entity totals *including nested children* — the reference's
@@ -125,23 +118,15 @@ def run_pipeline(
     predicate: Column | None = None,
     mode: str = STRICT,
     collect_metrics: bool = False,
-    persist_intermediates: bool = False,
 ) -> PipelineResult:
     """Run the full nested-entity resolution over a pages DataFrame.
 
     ``predicate`` is a boolean Column over the per-entity ``tags`` map
     (the reference's funcEntityNeeded, gosmonaut.go:118-121); it is applied
     uniformly to every entity type, as the reference does.
-
-    ``persist_intermediates=True`` caches the decoded nodes table — the
-    analog of the reference's node cache (binary_entity_map.go): way
-    assembly, relation assembly, and node emission all probe it, and
-    without the cache each pass re-decodes every blob. Call
-    ``result.release()`` when done.
     """
     pred = predicate if predicate is not None else F.lit(True)
     metrics = AssemblyMetrics()
-    persisted: list[DataFrame] = []
 
     want_nodes = P.NODE in types
     want_ways = P.WAY in types
@@ -161,10 +146,6 @@ def run_pipeline(
     nodes_all = None
     if want_nodes or want_ways or want_rels:
         nodes_all = src.extract_nodes(pages)
-        n_consumers = int(want_nodes) + int(want_ways or want_rels) + int(want_rels)
-        if persist_intermediates and n_consumers > 1:
-            nodes_all = nodes_all.persist()
-            persisted.append(nodes_all)
 
     # Pass N (gosmonaut.go:164-180)
     if want_nodes:
@@ -178,11 +159,6 @@ def run_pipeline(
         assembled = assemble_ways(
             ways_sel, nodes_all, mode=mode, metrics=metrics if collect_metrics else None
         )
-        if persist_intermediates and want_ways and want_rels:
-            # the way cache of the reference: emitted subset + relation
-            # members both read the assembled ways
-            assembled = assembled.persist()
-            persisted.append(assembled)
         if want_ways:
             out_ways = assembled.filter(pred)
 
@@ -196,7 +172,7 @@ def run_pipeline(
             metrics=metrics if collect_metrics else None,
         )
 
-    return PipelineResult(out_nodes, out_ways, out_rels, metrics, persisted)
+    return PipelineResult(out_nodes, out_ways, out_rels, metrics)
 
 
 def entities_union(result: PipelineResult) -> DataFrame:

@@ -1,16 +1,18 @@
-"""Pass 0 — pages-table scan and typed entity extraction.
+"""Pass 0 — pages-table scan and entity extraction.
 
-The Spark recast of the reference's parallel blob decode
-(/root/reference/decode.go:155-249): Spark's task scheduler replaces the
-hand-rolled goroutine pool; each ``mapInPandas`` batch is the analog of one
-PrimitiveBlock (Arrow batch size pinned to 8000, the reference's block
-constant). Extraction is *typed* (one pass materializes one entity kind,
-/root/reference/fast_blob_decoder.go:74-129): the GPB1 section directory lets
-the decoder seek over sections it does not need, and Catalyst's column
-pruning means a pass reads only ``(url, html)`` from parquet.
+The Spark recast of the reference's parallel blob decode (reference
+decode.go:155-249): Spark's task scheduler replaces the hand-rolled
+goroutine pool, and each ``mapInPandas`` batch plays the part of one
+PrimitiveBlock (the session pins ``maxRecordsPerBatch``). One loop,
+:func:`_extract`, decodes every page; its ``want`` selects the kinds to
+emit, and the GPB1 section directory lets the decoder seek over the
+sections no wanted kind needs (reference fast_blob_decoder.go:74-129).
+Catalyst's column pruning means a pass reads only ``url``, ``html`` and the
+carried columns from parquet.
 
 Output schemas (FIXTURES.md §2):
 
+* ``entities`` — every kind in one pass, ``etype`` discriminator
 * ``nodes(url, id, lat, lon, tags)``
 * ``ways_raw(url, id, tags, refs array<long>)`` — ``way_refs`` via posexplode
 * ``relations_raw(url, id, tags, member_ids, member_types, member_roles)``
@@ -21,8 +23,9 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
-from typing import Callable
+from itertools import chain
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,15 +41,18 @@ _PKG_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-NODES_SCHEMA = (
-    "url string, id long, lat double, lon double, tags map<string,string>"
-)
-WAYS_RAW_SCHEMA = "url string, id long, tags map<string,string>, refs array<long>"
-RELS_RAW_SCHEMA = (
-    "url string, id long, tags map<string,string>, "
-    "member_ids array<long>, member_types array<int>, member_roles array<string>"
-)
-TEXTS_SCHEMA = "url string, text_extracted string"
+# Every column the decode loop can emit and its Spark type, in output order.
+_COLUMNS = {
+    "id": "long",
+    "lat": "double",
+    "lon": "double",
+    "tags": "map<string,string>",
+    "refs": "array<long>",
+    "member_ids": "array<long>",
+    "member_types": "array<int>",
+    "member_roles": "array<string>",
+    "text_extracted": "string",
+}
 
 
 REQUIRED_COLUMNS = {
@@ -175,12 +181,92 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return assert_pages_schema(spark.read.parquet(path))
 
 
-def _decode_batches(
-    want: tuple[str, ...], emit: Callable[[str, "object"], dict]
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Build a mapInPandas function: decode each (url, html) batch with the
-    vectorized numpy decoder and emit rows via ``emit(url, page)``."""
+def _split(values: np.ndarray, counts: np.ndarray) -> list[list]:
+    """Cut a flat array into per-entity Python lists of ``counts`` items."""
+    if not len(counts):
+        return []
+    return [a.tolist() for a in np.split(values, np.cumsum(counts)[:-1])]
 
+
+def _node_columns(page) -> tuple[int, dict]:
+    """Coordinate projection per the reference (decode.go:517-519):
+    ``deg = 1e-9 * granularity * unit``, applied vectorized in numpy."""
+    return len(page.node_ids), {
+        "id": page.node_ids,
+        "lat": page.node_lat_units * COORD_SCALE,
+        "lon": page.node_lon_units * COORD_SCALE,
+        "tags": page.node_tags,
+    }
+
+
+def _way_columns(page) -> tuple[int, dict]:
+    """One row per way, refs as an ordered array."""
+    return len(page.way_ids), {
+        "id": page.way_ids,
+        "tags": page.way_tags,
+        "refs": _split(page.way_refs, page.way_nrefs),
+    }
+
+
+def _relation_columns(page) -> tuple[int, dict]:
+    """One row per relation, parallel member arrays in input order
+    (reference gosmonaut.go:427-440)."""
+    nm = page.rel_nmembers
+    return len(page.rel_ids), {
+        "id": page.rel_ids,
+        "tags": page.rel_tags,
+        "member_ids": _split(page.rel_member_ids, nm),
+        "member_types": _split(page.rel_member_types.astype("int32"), nm),
+        "member_roles": _split(np.array(page.rel_member_roles, dtype=object), nm),
+    }
+
+
+def _text_columns(page) -> tuple[int, dict]:
+    """One row per page: the decoded text section."""
+    return 1, {"text_extracted": [page.text.decode("utf-8")]}
+
+
+# decode section -> (etype value, columns its builder fills, builder)
+_KINDS = {
+    "nodes": ("node", ("id", "lat", "lon", "tags"), _node_columns),
+    "ways": ("way", ("id", "tags", "refs"), _way_columns),
+    "rels": (
+        "relation",
+        ("id", "tags", "member_ids", "member_types", "member_roles"),
+        _relation_columns,
+    ),
+    "text": ("text", ("text_extracted",), _text_columns),
+}
+
+
+def _merge(chunks: list):
+    """Concatenate per-page (or per-kind) column chunks into one column."""
+    if len(chunks) == 1:
+        return chunks[0]
+    if chunks and isinstance(chunks[0], np.ndarray):
+        return np.concatenate(chunks)
+    return list(chain.from_iterable(chunks))
+
+
+def _extract(
+    pages: DataFrame, want: tuple[str, ...], carry: tuple[str, ...] = ("url",)
+) -> DataFrame:
+    """The decode loop: decode each page's ``want`` sections once and emit
+    one row per entity of the wanted kinds plus an ``etype`` column, with
+    the page's ``carry`` columns repeated onto each of its entities.
+
+    Output columns: ``carry``, then the wanted kinds' columns in
+    ``_COLUMNS`` order, then ``etype``. A column a kind lacks is null for
+    that kind's rows."""
+    kinds = [k for k in _KINDS if k in want]
+    cols = [c for c in _COLUMNS if any(c in _KINDS[k][1] for k in kinds)]
+    in_types = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
+    schema = ", ".join(
+        [f"{c} {in_types[c]}" for c in carry]
+        + [f"{c} {_COLUMNS[c]}" for c in cols]
+        + ["etype string"]
+    )
+    doubles = {c for c in cols if _COLUMNS[c] == "double"}
     pkg_root = _PKG_ROOT
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -189,208 +275,67 @@ def _decode_batches(
 
         if pkg_root not in sys.path:
             sys.path.insert(0, pkg_root)
-        import numpy as np
-
         from gosmonaut_spark.format.gpb_numpy import decode_page_np
+        from gosmonaut_spark.sources.pages import _KINDS, _merge
 
         for pdf in batches:
-            # accumulate per-page columns, build ONE frame per Arrow batch
-            acc: dict[str, list] = {}
-            for url, blob in zip(pdf["url"], pdf["html"]):
+            # per kind: entity count of each page and per-page column chunks
+            counts = {k: [] for k in kinds}
+            chunks = {k: {c: [] for c in _KINDS[k][1]} for k in kinds}
+            for blob in pdf["html"]:
                 page = decode_page_np(bytes(blob), want=want)
-                for k, v in emit(url, page).items():
-                    acc.setdefault(k, []).append(v)
-            if not acc:
-                continue
-            cols = {}
-            for k, chunks in acc.items():
-                if chunks and isinstance(chunks[0], np.ndarray):
-                    cols[k] = np.concatenate(chunks)
-                else:
-                    merged: list = []
-                    for c in chunks:
-                        merged.extend(c)
-                    cols[k] = merged
-            yield pd.DataFrame(cols)
+                for k in kinds:
+                    n, built = _KINDS[k][2](page)
+                    counts[k].append(n)
+                    for c, v in built.items():
+                        chunks[k][c].append(v)
+            totals = [sum(counts[k]) for k in kinds]
+            out = {
+                c: _merge([np.repeat(pdf[c].to_numpy(), counts[k]) for k in kinds])
+                for c in carry
+            }
+            for c in cols:
+                parts = []
+                for k, n in zip(kinds, totals):
+                    if c in chunks[k]:
+                        parts.append(_merge(chunks[k][c]))
+                    else:  # padded once per kind, not once per entity
+                        parts.append(np.full(n, np.nan) if c in doubles else [None] * n)
+                out[c] = _merge(parts)
+            out["etype"] = np.repeat([_KINDS[k][0] for k in kinds], totals)
+            yield pd.DataFrame(out)
 
-    return fn
-
-
-def extract_nodes(pages: DataFrame) -> DataFrame:
-    """Decode the nodes section of every page → flat nodes DataFrame.
-
-    Coordinate projection per the reference (/root/reference/decode.go:517-519):
-    ``deg = 1e-9 * granularity * unit`` — applied vectorized in numpy.
-    """
-
-    def emit(url, page):
-        n = len(page.node_ids)
-        return {
-            "url": [url] * n,
-            "id": page.node_ids,
-            "lat": page.node_lat_units * COORD_SCALE,
-            "lon": page.node_lon_units * COORD_SCALE,
-            "tags": page.node_tags,
-        }
-
-    return pages.select("url", "html").mapInPandas(
-        _decode_batches(("nodes",), emit), NODES_SCHEMA
-    )
-
-
-def extract_ways_raw(pages: DataFrame) -> DataFrame:
-    """Decode the ways section → one row per way, refs as an ordered array."""
-
-    def emit(url, page):
-        import numpy as np
-
-        nw = len(page.way_ids)
-        bounds = np.cumsum(page.way_nrefs)[:-1] if nw else []
-        refs = [a.tolist() for a in np.split(page.way_refs, bounds)] if nw else []
-        return {
-            "url": [url] * nw,
-            "id": page.way_ids,
-            "tags": page.way_tags,
-            "refs": refs,
-        }
-
-    return pages.select("url", "html").mapInPandas(
-        _decode_batches(("ways",), emit), WAYS_RAW_SCHEMA
-    )
-
-
-def extract_relations_raw(pages: DataFrame) -> DataFrame:
-    """Decode the relations section → one row per relation, parallel member
-    arrays preserved in input order (/root/reference/gosmonaut.go:427-440)."""
-
-    def emit(url, page):
-        import numpy as np
-
-        nr = len(page.rel_ids)
-        bounds = np.cumsum(page.rel_nmembers)[:-1] if nr else []
-        mids = [a.tolist() for a in np.split(page.rel_member_ids, bounds)] if nr else []
-        mtypes = (
-            [a.astype("int32").tolist() for a in np.split(page.rel_member_types, bounds)]
-            if nr
-            else []
-        )
-        roles: list[list[str]] = []
-        if nr:
-            off = 0
-            for c in page.rel_nmembers.tolist():
-                roles.append(page.rel_member_roles[off : off + c])
-                off += c
-        return {
-            "url": [url] * nr,
-            "id": page.rel_ids,
-            "tags": page.rel_tags,
-            "member_ids": mids,
-            "member_types": mtypes,
-            "member_roles": roles,
-        }
-
-    return pages.select("url", "html").mapInPandas(
-        _decode_batches(("rels",), emit), RELS_RAW_SCHEMA
-    )
-
-
-ENTITIES_SCHEMA = (
-    "url string, id long, lat double, lon double, tags map<string,string>, "
-    "refs array<long>, member_ids array<long>, member_types array<int>, "
-    "member_roles array<string>, etype string"
-)
+    return pages.select(*carry, "html").mapInPandas(fn, schema)
 
 
 def extract_entities(pages: DataFrame) -> DataFrame:
     """ONE decode pass emitting every entity kind (union schema, ``etype``
     discriminator) — the checkpointed pipeline's extraction stage.
 
-    The three typed extractors each decompress every blob to seek their own
+    The typed extractors each decompress every blob to seek their own
     section, so running them as separate passes pays the zlib inflate (the
     dominant extraction cost) three times; this is the reference's run-1
     behavior instead — one sequential scan that populates everything
-    (/root/reference/decode.go:262-273). Downstream passes read the
-    snapshot partitioned by ``etype`` with partition pruning, the analog of
-    the reference's per-type blob index replay (decode.go:341-383).
+    (reference decode.go:262-273). Downstream passes read the snapshot
+    partitioned by ``etype`` with partition pruning, the analog of the
+    reference's per-type blob index replay (decode.go:341-383).
     """
-    pkg_root = _PKG_ROOT
+    return _extract(pages, ("nodes", "ways", "rels"))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
 
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        import numpy as np
+def extract_nodes(pages: DataFrame) -> DataFrame:
+    """Decode the nodes section of every page → flat nodes DataFrame."""
+    return entities_nodes(_extract(pages, ("nodes",)))
 
-        from gosmonaut_spark.format.gpb import COORD_SCALE as _SCALE
-        from gosmonaut_spark.format.gpb_numpy import decode_page_np
 
-        for pdf in batches:
-            urls: list = []
-            ids: list = []
-            lats: list = []
-            lons: list = []
-            tags: list = []
-            refs: list = []
-            mids: list = []
-            mtypes: list = []
-            mroles: list = []
-            etypes: list = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                page = decode_page_np(bytes(blob), want=("nodes", "ways", "rels"))
-                nn = len(page.node_ids)
-                nw = len(page.way_ids)
-                nr = len(page.rel_ids)
-                urls.extend([url] * (nn + nw + nr))
-                etypes.extend(["node"] * nn + ["way"] * nw + ["relation"] * nr)
-                ids.append(page.node_ids)
-                ids.append(page.way_ids)
-                ids.append(page.rel_ids)
-                lats.append(page.node_lat_units * _SCALE)
-                lats.append(np.full(nw + nr, np.nan))
-                lons.append(page.node_lon_units * _SCALE)
-                lons.append(np.full(nw + nr, np.nan))
-                tags.extend(page.node_tags)
-                tags.extend(page.way_tags)
-                tags.extend(page.rel_tags)
-                wb = np.cumsum(page.way_nrefs)[:-1] if nw else []
-                refs.extend([None] * nn)
-                refs.extend(
-                    [a.tolist() for a in np.split(page.way_refs, wb)] if nw else []
-                )
-                refs.extend([None] * nr)
-                rb = np.cumsum(page.rel_nmembers)[:-1] if nr else []
-                mids.extend([None] * (nn + nw))
-                mtypes.extend([None] * (nn + nw))
-                mroles.extend([None] * (nn + nw))
-                if nr:
-                    mids.extend(
-                        a.tolist() for a in np.split(page.rel_member_ids, rb)
-                    )
-                    mtypes.extend(
-                        a.astype("int32").tolist()
-                        for a in np.split(page.rel_member_types, rb)
-                    )
-                    off = 0
-                    for c in page.rel_nmembers.tolist():
-                        mroles.append(page.rel_member_roles[off : off + c])
-                        off += c
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "id": np.concatenate(ids) if ids else [],
-                    "lat": np.concatenate(lats) if lats else [],
-                    "lon": np.concatenate(lons) if lons else [],
-                    "tags": tags,
-                    "refs": refs,
-                    "member_ids": mids,
-                    "member_types": mtypes,
-                    "member_roles": mroles,
-                    "etype": etypes,
-                }
-            )
+def extract_ways_raw(pages: DataFrame) -> DataFrame:
+    """Decode the ways section → one row per way."""
+    return entities_ways_raw(_extract(pages, ("ways",)))
 
-    return pages.select("url", "html").mapInPandas(fn, ENTITIES_SCHEMA)
+
+def extract_relations_raw(pages: DataFrame) -> DataFrame:
+    """Decode the relations section → one row per relation."""
+    return entities_relations_raw(_extract(pages, ("rels",)))
 
 
 def entities_nodes(ents: DataFrame) -> DataFrame:
@@ -412,13 +357,7 @@ def entities_relations_raw(ents: DataFrame) -> DataFrame:
 def extract_texts(pages: DataFrame) -> DataFrame:
     """Decode only the text section — the byte-identity invariant surface
     (north rule: byte-identical extracted text per url)."""
-
-    def emit(url, page):
-        return {"url": [url], "text_extracted": [page.text.decode("utf-8")]}
-
-    return pages.select("url", "html").mapInPandas(
-        _decode_batches(("text",), emit), TEXTS_SCHEMA
-    )
+    return _extract(pages, ("text",)).select("url", "text_extracted")
 
 
 def way_refs(ways_raw: DataFrame) -> DataFrame:

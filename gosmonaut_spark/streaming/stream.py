@@ -1,32 +1,23 @@
 """Streaming ingestion: pages arrive as files, tiles update incrementally.
 
-The reference's ``Next()`` pull loop (/root/reference/gosmonaut.go:219-236)
-is a bounded in-process stream; the cluster-scale recast is Structured
-Streaming: a file source discovers new page batches, the same vectorized
-decode (mapInPandas works identically in streaming plans) extracts nodes
-with their page's event time, and a watermarked window + cell groupBy
-maintains the tile layer with late-data tolerance. Checkpointing gives
-exactly-once sink semantics — the streaming twin of the batch pass
-snapshots (B11).
+The reference's ``Next()`` pull loop (reference gosmonaut.go:219-236) is a
+bounded in-process stream; the cluster-scale recast is Structured
+Streaming: a file source discovers new page batches, the batch decode loop
+(``mapInPandas`` works identically in streaming plans) extracts nodes with
+their page's event time, and a watermarked window + cell groupBy maintains
+the tile layer with late-data tolerance. Checkpointing gives exactly-once
+sink semantics — the streaming twin of the batch pass snapshots (B11).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cells import cell_expr
+from ..sources.pages import REQUIRED_COLUMNS, _extract
 
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp_ntz, html binary, text string, lang string"
-)
-
-NODES_TS_SCHEMA = (
-    "url string, warc_ts timestamp_ntz, id long, lat double, lon double"
-)
+PAGES_SCHEMA = ", ".join(f"{k} {v}" for k, v in REQUIRED_COLUMNS.items())
 
 
 def read_pages_stream(
@@ -40,45 +31,11 @@ def read_pages_stream(
 
 
 def extract_nodes_with_ts(pages: DataFrame) -> DataFrame:
-    """Streaming decode: one pass carries the page's event time onto every
-    node row (no join needed — the 1:1 url->warc_ts mapping rides along
-    through the Arrow batch)."""
-
-    from ..sources.pages import _PKG_ROOT
-
-    pkg_root = _PKG_ROOT
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from gosmonaut_spark.format.gpb import COORD_SCALE
-        from gosmonaut_spark.format.gpb_numpy import decode_page_np
-
-        for pdf in batches:
-            urls, tss, ids, lats, lons = [], [], [], [], []
-            for url, ts, blob in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                page = decode_page_np(bytes(blob), want=("nodes",))
-                n = len(page.node_ids)
-                urls.extend([url] * n)
-                tss.extend([ts] * n)
-                ids.append(page.node_ids)
-                lats.append(page.node_lat_units * COORD_SCALE)
-                lons.append(page.node_lon_units * COORD_SCALE)
-            import numpy as np
-
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": tss,
-                    "id": np.concatenate(ids) if ids else [],
-                    "lat": np.concatenate(lats) if lats else [],
-                    "lon": np.concatenate(lons) if lons else [],
-                }
-            )
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(fn, NODES_TS_SCHEMA)
+    """Nodes carrying their page's event time: the 1:1 url->warc_ts mapping
+    rides along through the decode batch, so no join is needed."""
+    return _extract(pages, ("nodes",), carry=("url", "warc_ts")).select(
+        "url", "warc_ts", "id", "lat", "lon"
+    )
 
 
 def streaming_tile_counts(

@@ -11,6 +11,10 @@ from __future__ import annotations
 from gosmonaut_spark.fixtures.pages import generate_pages
 from gosmonaut_spark.format.gpb import COORD_SCALE
 from gosmonaut_spark.sources.pages import (
+    entities_nodes,
+    entities_relations_raw,
+    entities_ways_raw,
+    extract_entities,
     extract_nodes,
     extract_relations_raw,
     extract_texts,
@@ -20,6 +24,15 @@ from gosmonaut_spark.sources.pages import (
 )
 
 N_PAGES = 500  # t1 profile
+
+# Two routes to each typed table: its own typed pass, and the projection of
+# the all-kinds entities pass the checkpointed pipeline snapshots.
+NODE_ROUTES = (extract_nodes, lambda p: entities_nodes(extract_entities(p)))
+WAY_ROUTES = (extract_ways_raw, lambda p: entities_ways_raw(extract_entities(p)))
+REL_ROUTES = (
+    extract_relations_raw,
+    lambda p: entities_relations_raw(extract_entities(p)),
+)
 
 
 def _truths():
@@ -37,7 +50,6 @@ def test_text_byte_identity(spark, pages_t1):
 
 
 def test_nodes_match_oracle(spark, pages_t1):
-    nodes = extract_nodes(pages_t1).orderBy("id").collect()
     truth = []
     for spec in _truths():
         t = spec.truth
@@ -52,11 +64,24 @@ def test_nodes_match_oracle(spark, pages_t1):
                 )
             )
     truth.sort(key=lambda r: r[1])
-    assert len(nodes) == len(truth)
-    for row, exp in zip(nodes, truth):
-        assert (row.url, row.id) == (exp[0], exp[1])
-        assert row.lat == exp[2] and row.lon == exp[3]
-        assert (row.tags or {}) == exp[4]
+    for route in NODE_ROUTES:
+        nodes = route(pages_t1).orderBy("id").collect()
+        assert len(nodes) == len(truth)
+        for row, exp in zip(nodes, truth):
+            assert (row.url, row.id) == (exp[0], exp[1])
+            assert row.lat == exp[2] and row.lon == exp[3]
+            assert (row.tags or {}) == exp[4]
+
+
+def test_nodes_with_ts_match_join(spark, pages_t1):
+    """The carried event time equals a url join against the pages table."""
+    from gosmonaut_spark.streaming.stream import extract_nodes_with_ts
+
+    got = extract_nodes_with_ts(pages_t1)
+    want = extract_nodes(pages_t1).join(pages_t1.select("url", "warc_ts"), "url")
+    want = want.select(*got.columns)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_way_refs_order_preserved(spark, pages_t1):
@@ -64,25 +89,24 @@ def test_way_refs_order_preserved(spark, pages_t1):
     (reference: ordered stitch, gosmonaut.go:371-390)."""
     import pyspark.sql.functions as F
 
-    ways = extract_ways_raw(pages_t1)
-    refs = (
-        way_refs(ways)
-        .groupBy("way_id")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "node_id"))).alias("s"))
-        .select("way_id", F.col("s.node_id").alias("refs"))
-        .collect()
-    )
-    got = {r.way_id: list(r.refs) for r in refs}
-    for spec in _truths():
-        t = spec.truth
-        for wid, wrefs in zip(t.ways.ids, t.ways.refs):
-            if wrefs:
-                assert got[wid] == wrefs, f"way {wid} ref order mismatch"
+    truths = _truths()
+    for route in WAY_ROUTES:
+        refs = (
+            way_refs(route(pages_t1))
+            .groupBy("way_id")
+            .agg(F.sort_array(F.collect_list(F.struct("pos", "node_id"))).alias("s"))
+            .select("way_id", F.col("s.node_id").alias("refs"))
+            .collect()
+        )
+        got = {r.way_id: list(r.refs) for r in refs}
+        for spec in truths:
+            t = spec.truth
+            for wid, wrefs in zip(t.ways.ids, t.ways.refs):
+                if wrefs:
+                    assert got[wid] == wrefs, f"way {wid} ref order mismatch"
 
 
 def test_rel_members_zip(spark, pages_t1):
-    rels = extract_relations_raw(pages_t1)
-    mem = rel_members(rels).orderBy("rel_id", "pos").collect()
     truth = []
     for spec in _truths():
         t = spec.truth
@@ -92,7 +116,9 @@ def test_rel_members_zip(spark, pages_t1):
                     (rid, p, t.rels.member_ids[j][p], t.rels.member_types[j][p], t.rels.member_roles[j][p])
                 )
     truth.sort(key=lambda r: (r[0], r[1]))
-    assert [(m.rel_id, m.pos, m.member_id, m.member_type, m.role) for m in mem] == truth
+    for route in REL_ROUTES:
+        mem = rel_members(route(pages_t1)).orderBy("rel_id", "pos").collect()
+        assert [(m.rel_id, m.pos, m.member_id, m.member_type, m.role) for m in mem] == truth
 
 
 def test_cell_expr_matches_numpy_and_props(spark):

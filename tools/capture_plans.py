@@ -56,19 +56,10 @@ def main():
     cap("assemble_ways", assemble_ways(ways_raw, nodes, mode=SKIP_MISSING))
     # materialize_members=True mirrors run_pipeline_checkpointed — the
     # configuration the bench's relations pass actually runs
-    try:
-        cap(
-            "assemble_relations",
-            assemble_relations(
-                rels_raw, members, aw, nodes,
-                materialize_members=True,
-            ),
-        )
-    except TypeError:  # round-start tree: no materialize_members param
-        cap(
-            "assemble_relations",
-            assemble_relations(rels_raw, members, aw, nodes),
-        )
+    cap(
+        "assemble_relations",
+        assemble_relations(rels_raw, members, aw, nodes, materialize_members=True),
+    )
 
     nodes_slim = nodes.select("id", "lat", "lon")
     polys = polygons_from_ways(aw).filter(F.col("polygon_id") % 8 == 0)
