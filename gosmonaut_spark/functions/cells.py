@@ -89,40 +89,6 @@ def cell_parent(cell: Column | str, res: int, parent_res: int | None = None) -> 
     return cell_from_xy(F.shiftright(x, d), F.shiftright(y, d), parent_res)
 
 
-def cell_xy(cell: Column | str, res: int) -> tuple[Column, Column]:
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    x = F.shiftright(cell, res) - F.lit(1 << res)
-    y = cell - F.shiftleft(F.shiftright(cell, res), res)
-    return x, y
-
-
-def cell_ring(cell: Column | str, res: int, k: int = 1) -> Column:
-    """Array of cells in the (2k+1)^2 square ring neighborhood (k-ring),
-    clamped at grid edges, x wrapping across the antimeridian.
-
-    This is the kNN candidate-expansion primitive (B8): explode the ring →
-    equi-join on cell — the planner sees a plain join, no custom strategy.
-
-    Distinct by construction: at coarse resolutions (2k+1 > 2^res) the
-    longitude wrap maps different offsets to the same cell — without the
-    dedup a target would join once per duplicate ring entry and top-k
-    would return repeated neighbors.
-    """
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    n = _grid_n(res)
-    x, y = cell_xy(cell, res)
-    cells = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            nx = F.pmod(x + F.lit(dx), F.lit(n))  # wrap lon
-            ny = y + F.lit(dy)  # clamp lat (no wrap over poles)
-            c = F.when(
-                (ny >= 0) & (ny < n), cell_from_xy(nx, ny, res)
-            ).otherwise(F.lit(None).cast("long"))
-            cells.append(c)
-    return F.array_distinct(F.array_compact(F.array(*cells)))
-
-
 def cell_np(lat, lon, res: int):
     """Numpy twin of :func:`cell_expr` (same floor/clamp math) — used by the
     polygon cover kernel and as the pure-Python test oracle."""

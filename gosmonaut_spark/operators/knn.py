@@ -2,24 +2,63 @@
 
 Two variants:
 
-* :func:`knn_join` — the scale path. Queries explode to their cell's
-  (2k+1)^2 ring at a chosen resolution; candidates = equi-join on cell;
-  exact haversine + ``row_number() <= k`` per query. The planner sees one
-  equi-join and one window — both shuffle on bounded keys. Contract: a
-  neighbor further than the ring's reach is missed, so pick
-  ``res``/``ring`` so the ring radius covers the expected k-th distance
-  (or iterate with :func:`knn_join_adaptive`).
+* :func:`knn_join` — the scale path. Each query explodes to the cells of
+  its (2k+1)^2 ring at a chosen resolution: two literal offset arrays
+  (``dx``, ``dy``) are exploded against the query's grid coordinates, off-
+  grid rows in y are dropped and x wraps across the antimeridian
+  (:func:`_ring_cells`, shared with :func:`radius_join`). Candidates =
+  equi-join on cell; exact haversine + ``row_number() <= k`` per query.
+  The planner sees one equi-join and one window — both shuffle on bounded
+  keys. Contract: a neighbor further than the ring's reach is missed, so
+  pick ``res``/``ring`` so the ring radius covers the expected k-th
+  distance (or iterate with :func:`knn_join_adaptive`).
 * :func:`knn_brute` — exact O(Q*T) crossJoin baseline; the oracle twin
   (SQL-expressible) and the right plan when one side is tiny.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_expr, cell_from_xy, cell_ring, cell_x, cell_y
+from ..functions.cells import cell_expr, cell_from_xy, cell_x, cell_y
 from ..functions.geo import EARTH_RADIUS_M, haversine_m
+
+
+def _ring_cells(q: DataFrame, res: int, rx: int | Column, ry: int) -> DataFrame:
+    """Explode each row of ``q`` to the cells around its grid coordinates
+    ``(qx, qy)`` at ``res``; ``qx``/``qy`` are replaced by ``cell``.
+
+    ``dy`` runs over ``[-ry, ry]`` and rows off the grid in y are dropped
+    (no wrap over the poles). ``dx`` runs over ``[-rx, rx]`` clamped to
+    ``[-min(rx, (n-1)//2), min(rx, n//2)]`` with ``n = 2^res``, and x wraps
+    across the antimeridian as ``pmod(qx + dx, n)``: the clamp spans at
+    most n columns, and all n once ``rx`` saturates, so a grid row is never
+    traversed twice. The cells are distinct by construction, so no array
+    dedup is needed — that dedup is a lambda ``filter`` that would drop the
+    whole stage out of codegen. ``rx`` is an int (the square k-ring, a
+    literal offset array that ``explain()`` prints) or a per-row column
+    (:func:`radius_join`'s latitude-dependent reach).
+    """
+    n = 1 << res
+    lo, hi = (n - 1) // 2, n // 2
+    # an int rx could also go through F.sequence(F.lit(...)): Catalyst folds
+    # it to the same array, but explain() then prints an opaque
+    # UnsafeArrayData instead of the offsets, so plans stay unreadable
+    if isinstance(rx, int):
+        dx = F.array(*[F.lit(d) for d in range(-min(rx, lo), min(rx, hi) + 1)])
+    else:
+        dx = F.sequence(-F.least(rx, F.lit(lo)), F.least(rx, F.lit(hi)))
+    keep = [c for c in q.columns if c not in ("qx", "qy")]
+    x, y = F.col("qx") + F.col("dx"), F.col("qy") + F.col("dy")
+    return (
+        q.withColumn("dx", F.explode(dx))
+        .withColumn("dy", F.explode(F.array(*[F.lit(d) for d in range(-ry, ry + 1)])))
+        # targets at the poles clamp INTO the grid edge rows, so dropping
+        # y<0 / y>=n misses nothing
+        .filter((y >= 0) & (y < n))
+        .select(*keep, cell_from_xy(F.pmod(x, F.lit(n)), y, res).alias("cell"))
+    )
 
 
 def _topk(cand: DataFrame, k: int) -> DataFrame:
@@ -47,6 +86,13 @@ def knn_join(
     Output: ``(query_id, target_id, dist_m)``, ties broken by target_id —
     deterministic across runs and engines.
 
+    The ring is an explode of literal offsets, not a column expression:
+    ``dy`` in ``[-ring, ring]`` (rows off the grid dropped) and ``dx``
+    clamped to ``[-min(ring, (n-1)//2), min(ring, n//2)]`` with
+    ``n = 2^res``, so at coarse resolutions, where the ring is wider than
+    the grid, each cell still appears once and no target joins a query
+    twice. The whole query side is one codegen stage.
+
     ``broadcast_queries``: when the query side is known small (a probe
     batch against a large target corpus), broadcasting the ring-exploded
     queries turns the cell equi-join into a broadcast hash join — the
@@ -56,11 +102,17 @@ def knn_join(
     full point set) both sides are large and the symmetric shuffle is
     correct.
     """
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col("lat").alias("q_lat"),
-        F.col("lon").alias("q_lon"),
-        F.explode(cell_ring(cell_expr("lat", "lon", res), res, ring)).alias("cell"),
+    q = _ring_cells(
+        queries.select(
+            F.col(query_id).alias("query_id"),
+            F.col("lat").alias("q_lat"),
+            F.col("lon").alias("q_lon"),
+            cell_x("lon", res).alias("qx"),
+            cell_y("lat", res).alias("qy"),
+        ),
+        res,
+        ring,
+        ring,
     )
     t = targets.select(
         F.col(target_id).alias("target_id"),
@@ -91,8 +143,6 @@ def _ring_coverage_m(lat: Column, res: int, ring: int) -> Column:
     that clamp at the poles exclude nothing poleward (those cells do not
     exist), so the latitude bound needs no pole term.
     """
-    from ..functions.geo import EARTH_RADIUS_M
-
     n = 1 << res
     cell_h_deg = 180.0 / n
     cell_w_deg = 360.0 / n
@@ -126,10 +176,9 @@ def knn_join_adaptive(
 
     Round ``i`` runs :func:`knn_join` at resolution ``res - i`` (same
     ``ring``) over the still-uncertified queries — coarsening one level
-    doubles the ring's guaranteed reach while the candidate-ring
-    expression stays a constant 9 cells (escalating ``ring`` instead
-    grows the plan O(ring²): a ring-8 expansion is 289 branch expressions
-    and canonicalization alone can OOM the driver). A query is certified
+    doubles the ring's guaranteed reach while each query still explodes
+    to a constant 9 cells (escalating ``ring`` instead grows every
+    query's candidate cells O(ring²): 289 for a ring-8). A query is certified
     exact when it has ``k`` neighbors and its k-th distance is strictly
     inside the ring's coverage radius (:func:`_ring_coverage_m`) — no
     point outside the ring can beat a certified neighbor. Queries still
@@ -281,59 +330,25 @@ def radius_join(
     ry = int(dlat_deg // cell_h) + 1
     sin_half = math.sin(radius_m / (2.0 * EARTH_RADIUS_M))
 
-    lat, lon = F.col("lat"), F.col("lon")
     # most poleward latitude any within-radius target can sit at
-    phi_far = F.least(F.abs(lat) + F.lit(dlat_deg + cell_h), F.lit(90.0))
+    phi_far = F.least(F.abs(F.col("q_lat")) + F.lit(dlat_deg + cell_h), F.lit(90.0))
     ratio = F.lit(sin_half) / F.greatest(
         F.cos(F.radians(phi_far)), F.lit(1e-12)
     )
     dlon_deg = F.degrees(F.lit(2.0) * F.asin(F.least(ratio, F.lit(1.0))))
     rx = (F.floor(dlon_deg / F.lit(cell_w)) + F.lit(1)).cast("int")
-    # one traversal of the row, never more: [-min(rx,(n-1)//2), min(rx,n//2)]
-    # spans at most n cells, and spans ALL n when rx saturates (full wrap)
-    dx_hi = F.least(rx, F.lit(n // 2))
-    dx_lo = -F.least(rx, F.lit((n - 1) // 2))
 
-    q = (
+    q = _ring_cells(
         queries.select(
             F.col(query_id).alias("query_id"),
             F.col("lat").alias("q_lat"),
             F.col("lon").alias("q_lon"),
-            cell_x(lon, res).alias("qx"),
-            cell_y(lat, res).alias("qy"),
-            dx_lo.alias("dx_lo"),
-            dx_hi.alias("dx_hi"),
-        )
-        .select(
-            "query_id",
-            "q_lat",
-            "q_lon",
-            "qx",
-            "qy",
-            F.explode(F.sequence(F.col("dx_lo"), F.col("dx_hi"))).alias("dx"),
-        )
-        .select(
-            "query_id",
-            "q_lat",
-            "q_lon",
-            "qx",
-            "qy",
-            "dx",
-            F.explode(F.array(*[F.lit(d) for d in range(-ry, ry + 1)])).alias("dy"),
-        )
-        # out-of-range rows have no cells (targets at the poles clamp INTO
-        # the grid edge rows, so dropping y<0 / y>=n misses nothing)
-        .filter((F.col("qy") + F.col("dy") >= 0) & (F.col("qy") + F.col("dy") < n))
-        .select(
-            "query_id",
-            "q_lat",
-            "q_lon",
-            cell_from_xy(
-                ((F.col("qx") + F.col("dx")) % n + n) % n,
-                F.col("qy") + F.col("dy"),
-                res,
-            ).alias("cell"),
-        )
+            cell_x("lon", res).alias("qx"),
+            cell_y("lat", res).alias("qy"),
+        ),
+        res,
+        rx,
+        ry,
     )
     t = targets.select(
         F.col(target_id).alias("target_id"),

@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -193,44 +192,7 @@ def build_session(
         )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    # prewarm below only when this call starts the SparkContext: a
-    # getOrCreate that reuses a live context already has its worker pool
-    created = SparkContext._active_spark_context is None
-    spark = b.getOrCreate()
-    # Asynchronously pre-fork the python worker pool and pay the heavy
-    # imports (numpy/pandas — ~1-2s per worker) during session
-    # initialization instead of inside the first Arrow-stage job: the
-    # first mapInPandas/mapInArrow stage of a fresh session was measured
-    # spawning `cores` workers serially-per-slot, adding several seconds
-    # of pure wait to whichever query runs first (guide §4.5's
-    # initialise-once, applied to the pool itself). Runs detached — a
-    # caller that never touches Python stages loses nothing; the tiny
-    # job's tasks only import and exit. SPARK_GRAFT_PREWARM=0 disables.
-    if created and os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
-        import threading
-
-        def _prewarm(n: int) -> None:
-            try:
-                # mapInPandas (not an RDD map): python workers are pooled
-                # per (exec, env) — the SQL/Arrow stages use a different
-                # pool than RDD tasks, and only this pool's startup is on
-                # the hot paths
-                def _imp(batches):
-                    import numpy  # noqa: F401
-                    import pandas  # noqa: F401
-
-                    yield from batches
-
-                spark.range(n, numPartitions=n).mapInPandas(
-                    _imp, "id long"
-                ).count()
-            except Exception:
-                pass  # session may already be stopping; prewarm is best-effort
-
-        threading.Thread(
-            target=_prewarm, args=(cpus,), daemon=True, name="pyworker-prewarm"
-        ).start()
-    return spark
+    return b.getOrCreate()
 
 
 TABLES = (

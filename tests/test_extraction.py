@@ -156,19 +156,48 @@ def test_cell_expr_matches_numpy_and_props(spark):
 
 
 def test_cell_ring(spark):
-    import pyspark.sql.functions as F
+    """The kNN ring explode: 9 distinct cells around the centre at a fine
+    resolution, and at coarse ones (where the ring is as wide as the grid)
+    exactly the distinct, y-clamped, x-wrapped neighbourhood — no cell
+    twice."""
+    import numpy as np
 
-    from gosmonaut_spark.functions.cells import cell_expr, cell_np, cell_ring
+    from gosmonaut_spark.functions.cells import cell_np, cell_x, cell_y
+    from gosmonaut_spark.operators.knn import _ring_cells
 
-    df = spark.createDataFrame([(10.0, 20.0)], "lat double, lon double")
+    pts = [(10.0, 20.0), (89.9, 179.9), (-89.9, -179.9), (0.0, 0.0), (-45.0, 100.0)]
+    df = spark.createDataFrame(
+        [(i, la, lo) for i, (la, lo) in enumerate(pts)], "id long, lat double, lon double"
+    )
+
+    def ring_cells(res, k):
+        q = df.select("id", cell_x("lon", res).alias("qx"), cell_y("lat", res).alias("qy"))
+        out = {}
+        for r in _ring_cells(q, res, k, k).collect():
+            out.setdefault(r.id, []).append(r.cell)
+        return out
+
     res = 8
-    ring = df.select(
-        F.explode(cell_ring(cell_expr("lat", "lon", res), res, 1)).alias("c")
-    ).collect()
-    cells = sorted(r.c for r in ring)
+    cells = sorted(ring_cells(res, 1)[0])
     assert len(cells) == 9 and len(set(cells)) == 9
     # the center cell is in its own ring
     assert int(cell_np([10.0], [20.0], res)[0]) in cells
+
+    for res in (0, 1, 2):
+        n = 1 << res
+        for k in (1, 2):
+            got = ring_cells(res, k)
+            for i, (la, lo) in enumerate(pts):
+                qx = int(np.clip(np.floor((lo + 180.0) / 360.0 * n), 0, n - 1))
+                qy = int(np.clip(np.floor((90.0 - la) / 180.0 * n), 0, n - 1))
+                want = {
+                    (1 << (2 * res)) + ((qx + dx) % n) * n + (qy + dy)
+                    for dx in range(-k, k + 1)
+                    for dy in range(-k, k + 1)
+                    if 0 <= qy + dy < n
+                }
+                assert len(got[i]) == len(set(got[i])), (res, k, i)
+                assert set(got[i]) == want, (res, k, i)
 
 
 def test_pages_schema_assert(spark):

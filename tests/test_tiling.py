@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -205,6 +207,61 @@ def test_knn_ring_matches_brute(spark, world):
         return {q: sorted(v) for q, v in out.items()}
 
     assert key(approx) == key(exact)
+
+
+def test_knn_ring_covers_grid_equals_brute(spark, world):
+    """When 2k+1 >= 2^res the ring is the whole grid, so the ring join is
+    exact: row for row equal to brute force, no target repeated for a
+    query (the x-wrap must not visit a grid column twice)."""
+    nodes = world["nodes"]
+    queries = nodes.filter(F.col("id") % 37 == 0).select(
+        F.col("id").alias("query_id"), "lat", "lon"
+    )
+    targets = nodes.select(F.col("id").alias("target_id"), "lat", "lon")
+    k = 5
+
+    def rows(df):
+        return sorted((r.query_id, r.target_id, round(r.dist_m, 6)) for r in df.collect())
+
+    exact = rows(knn_brute(queries, targets, k))
+    for res, ring in ((1, 1), (2, 2)):
+        got = rows(knn_join(queries, targets, k, res=res, ring=ring))
+        assert len({(q, t) for q, t, _ in got}) == len(got), (res, ring)
+        assert got == exact, (res, ring)
+
+
+def test_knn_ring_plan_is_codegen(spark, world):
+    """Both knn_join shapes run their ring explode inside whole-stage
+    codegen: every Generate in the executed (final adaptive) plan carries
+    a codegen stage id, and no lambda function (an interpreted
+    higher-order array function) appears anywhere in the plan. The
+    symmetric shape runs with broadcast joins off, so it really is a
+    shuffle join at test scale."""
+    nodes = world["nodes"]
+    queries = nodes.filter(F.col("id") % 37 == 0).select(
+        F.col("id").alias("query_id"), "lat", "lon"
+    )
+    targets = nodes.select(F.col("id").alias("target_id"), "lat", "lon")
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for broadcast in (True, False):
+            if not broadcast:
+                for k in keys:
+                    spark.conf.set(k, "-1")
+            df = knn_join(queries, targets, 5, res=7, ring=1, broadcast_queries=broadcast)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "lambdafunction" not in plan.lower(), plan
+            final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+            assert ("BroadcastHashJoin" in final) == broadcast, final
+            generates = [ln for ln in final.splitlines() if "Generate " in ln]
+            assert generates, final
+            for ln in generates:
+                assert re.search(r"\*\(\d+\) Generate ", ln), ln
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
 def test_knn_adaptive_is_exact(spark, world):
