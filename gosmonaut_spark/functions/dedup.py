@@ -245,6 +245,20 @@ def minhash_signature(
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
+def _min_hash_aggs(n_hashes: int, hash_fn: str) -> list[Column]:
+    """The ``n_hashes`` native ``min`` aggregates of a MinHash signature
+    over the ``sh`` column of a :func:`_shingle_table`: mh_i = min(hash_i(sh))."""
+    s = F.col("sh")
+    if hash_fn == "md5":
+        return [
+            F.min(F.md5(F.concat(s, F.lit(f":{i}")))).alias(f"mh_{i}")
+            for i in range(n_hashes)
+        ]
+    if hash_fn == "xxhash64":
+        return [F.min(F.xxhash64(s, F.lit(i))).alias(f"mh_{i}") for i in range(n_hashes)]
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
 def minhash_signatures(
     docs: DataFrame,
     n_hashes: int = 16,
@@ -258,32 +272,16 @@ def minhash_signatures(
     shingle with codegen'd md5/xxhash64, then a single hash-aggregate
     with ``n_hashes`` native ``min`` columns (map-side partial agg; the
     shuffle carries one signature row per document). The Column version
-    evaluates the interpreted shingle-construction expression once per
-    hash (no CSE across higher-order functions — measured ~13x slower at
-    1k docs); it is kept as the independent oracle and the two are
+    folds the shingle array once per hash in an interpreted ``transform``
+    lambda; it is kept as the independent oracle and the two are
     asserted equivalent in tests, mirroring the reference's two-decoder
     discipline (/root/reference/gosmonaut_test.go:27-41).
 
     Returns (doc_id, mh_0..mh_{n_hashes-1}); docs with zero shingles are
     absent (they cannot collide with anything).
     """
-    ex = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(text_col, n)).alias("s"),
-    )
-    if hash_fn == "md5":
-        aggs = [
-            F.min(F.md5(F.concat(F.col("s"), F.lit(f":{i}")))).alias(f"mh_{i}")
-            for i in range(n_hashes)
-        ]
-    elif hash_fn == "xxhash64":
-        aggs = [
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"mh_{i}")
-            for i in range(n_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    return ex.groupBy("doc_id").agg(*aggs)
+    sh = _shingle_table(docs, id_col, text_col, n)
+    return sh.groupBy("doc_id").agg(*_min_hash_aggs(n_hashes, hash_fn))
 
 
 def minhash_lsh_pairs(
@@ -304,38 +302,33 @@ def minhash_lsh_pairs(
     candidates are verified, so the expensive jaccard join runs on a tiny
     fraction of pairs — this is the 10^12-doc path.
 
-    Caches the signature and shingle tables for plan reuse; in a
-    long-lived session call ``caching.release_cached(result)`` after
-    consuming the result to free the blocks.
+    Caches the shingle table for plan reuse; in a long-lived session call
+    ``caching.release_cached(result)`` after consuming the result to free
+    the blocks.
     """
     if n_hashes % n_bands:
         raise ValueError("n_bands must divide n_hashes")
     r = n_hashes // n_bands
-    # explode-once + min-agg signature plan (shingle-less docs drop out of
-    # the inner explode, matching the Column path's size()>0 filter).
-    # PERSISTED: the signature table feeds all n_bands union branches and
-    # the shingle table feeds both sides of the verify join — without the
-    # cache Catalyst recomputes the interpreted shingle expression once per
-    # consumer (measured ~5x the CPU of the whole operator). Both tables
-    # are orders of magnitude smaller than the corpus (one row per doc /
-    # per distinct shingle); at cluster scale this is the standard
-    # materialize-signatures step of any LSH pipeline.
-    sig = minhash_signatures(
-        docs, n_hashes, n, id_col=id_col, text_col=text_col, hash_fn=hash_fn
-    ).persist()
-    # materialize the cache eagerly: the banded self-join's AQE stage jobs
-    # consume sig from BOTH join sides concurrently, and with a cold cache
+    aggs = _min_hash_aggs(n_hashes, hash_fn)
+    # ONE (doc_id, sh) table feeds the signature aggregate and both sides
+    # of the verify join; shingle-less docs drop out of its inner explode,
+    # matching the Column path's size()>0 filter. The shingles come from
+    # one codegen'd regex per document, and the cache keeps each consumer
+    # from re-running it. The table is orders of magnitude smaller than
+    # the corpus text; at cluster scale this is the standard
+    # materialize-shingles step of any LSH pipeline.
+    sh = _shingle_table(docs, id_col, text_col, n).persist()
+    # materialize the cache eagerly: the banded self-join's and the verify
+    # join's AQE stage jobs consume sh concurrently, and with a cold cache
     # they race on (block on / duplicate) the same uncomputed blocks —
     # the same measured pathology as the relation-assembly member table.
-    # One count over the signature table (one row per doc) pays the
-    # signature computation exactly once.
-    sig.count()
+    sh.count()
+    # n_sh rides the same per-doc aggregate as the signature and is
+    # carried as na/nb through the band join, so nothing recounts it
+    sig = sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
 
-    # all band keys in ONE projection + posexplode: the previous per-band
-    # union scanned the signature cache once per band per join side (8
-    # scans at n_bands=4) and planned 2x n_bands codegen stages; this is
-    # one scan per join side and one generator — identical (doc_id, band,
-    # bkey) rows.
+    # all band keys in ONE projection + posexplode: one scan per join
+    # side and one generator for every band.
     band_keys = []
     for b in range(n_bands):
         cols = [F.col(f"mh_{b * r + j}") for j in range(r)]
@@ -345,15 +338,15 @@ def minhash_lsh_pairs(
             else F.xxhash64(*cols).cast("string")
         )
     banded = sig.select(
-        "doc_id", F.posexplode(F.array(*band_keys)).alias("band", "bkey")
+        "doc_id", "n_sh", F.posexplode(F.array(*band_keys)).alias("band", "bkey")
     )
 
-    a = banded.select(F.col("doc_id").alias("a"), "band", "bkey")
-    b2 = banded.select(F.col("doc_id").alias("b"), "band", "bkey")
+    a = banded.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"), "band", "bkey")
+    b2 = banded.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"), "band", "bkey")
     cand = (
         a.join(b2, ["band", "bkey"])
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+        .select("a", "b", "na", "nb")
         .distinct()
     )
 
@@ -363,24 +356,14 @@ def minhash_lsh_pairs(
     # shuffle carries 8-byte longs and the intersection counts are
     # unchanged up to 64-bit collisions (~n²/2⁶⁴, vanishing). The md5
     # path keeps raw strings so the DuckDB oracle twin stays bit-exact.
-    sh = _shingle_table(docs, id_col, text_col, n)
-    if hash_fn != "md5":
-        sh = sh.select("doc_id", F.xxhash64("sh").alias("sh"))
-    sh = sh.persist()
-    sh.count()  # eager: consumed by three plan branches (sizes + both
-    # verify-join sides) — cold-cache races cost more than one pass
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.select(F.col("doc_id").alias("a"), "sh")
-    sb = sh.select(F.col("doc_id").alias("b"), "sh")
-    inter = (
+    vs = sh if hash_fn == "md5" else sh.select("doc_id", F.xxhash64("sh").alias("sh"))
+    sa = vs.select(F.col("doc_id").alias("a"), "sh")
+    sb = vs.select(F.col("doc_id").alias("b"), "sh")
+    out = (
         cand.join(sa, "a")
         .join(sb, ["b", "sh"])
-        .groupBy("a", "b")
+        .groupBy("a", "b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n_sh", "na"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n_sh", "nb"), "b")
         .withColumn(
             "jaccard",
             F.col("n_inter").cast("double")
@@ -391,7 +374,7 @@ def minhash_lsh_pairs(
     )
     from .caching import attach_cached
 
-    return attach_cached(out, [sig, sh])
+    return attach_cached(out, [sh])
 
 
 # ---------------------------------------------------------------------------

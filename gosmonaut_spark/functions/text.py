@@ -256,19 +256,28 @@ def content_fingerprint_sql(expr: str) -> str:
     return f"md5({norm_text_sql(expr)})"
 
 
+def _grams(col: Column | str, n: int, short: bool) -> Column:
+    """Word n-grams of the normalized text, in order, from one codegen'd
+    ``regexp_extract_all`` (no lambda, so the text is normalized once, not
+    once per gram): group 1 of a zero-width match at every token start is
+    the n-gram starting there, so the grams overlap. ``short`` adds a
+    branch, anchored at the text's start, that captures the whole text
+    when it has 0 < k < n tokens. NULL text gives NULL from the regex,
+    hence the coalesce to []."""
+    gram = "[^ ]+(?: [^ ]+){%d}" % (n - 1)
+    if short and n > 1:
+        gram += "|^[^ ]+(?: [^ ]+){0,%d}$" % (n - 2)
+    return F.coalesce(
+        F.regexp_extract_all(norm_text(col), F.lit("(?<![^ ])(?=(%s))" % gram), 1),
+        F.array().cast("array<string>"),
+    )
+
+
 def shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the normalized text (order-free set).
     Documents shorter than n tokens yield their full token join as the one
     shingle (so short docs still participate in dedup)."""
-    toks = tokens(col)
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k - F.lit(n - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(k > 0, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    return F.array_distinct(_grams(col, n, short=True))
 
 
 def shingles_sql(expr: str, n: int = 3) -> str:
@@ -288,15 +297,7 @@ def ngrams(col: Column | str, n: int = 2) -> Column:
     """Word n-grams of the normalized text WITH multiplicity (LM-prep
     counting wants every occurrence; `shingles` above dedups for set
     similarity). Documents shorter than n tokens yield no n-grams."""
-    toks = tokens(col)
-    k = F.size(toks)
-    return F.when(
-        k >= n,
-        F.transform(
-            F.sequence(F.lit(1), k - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return _grams(col, n, short=False)
 
 
 def ngrams_sql(expr: str, n: int = 2) -> str:

@@ -6,6 +6,8 @@ Spark expression and the SQL twin on the same parquet, compare values.
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import numpy as np
 import pytest
@@ -101,6 +103,52 @@ def test_fingerprint_and_shingles_twin(spark, docs):
         )
     }
     assert got == exp
+
+
+def _ref_tokens(text):
+    if text is None:
+        return []
+    return re.sub(r"[^a-z0-9]+", " ", text.lower()).split()
+
+
+def _ref_shingles(text, n):
+    """Pure-Python definition of ``shingles``: the distinct n-grams in
+    first-occurrence order; 0 < k < n tokens -> the whole token join."""
+    toks = _ref_tokens(text)
+    grams = [" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1))]
+    return list(dict.fromkeys(grams)) if toks else []
+
+
+def _ref_ngrams(text, n):
+    """Pure-Python definition of ``ngrams``: every n-gram, in order."""
+    toks = _ref_tokens(text)
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def test_shingles_ngrams_edge_cases(spark, docs):
+    """shingles/ngrams == the pure-Python definitions, element for element
+    and in order, on degenerate inputs and on the document corpus."""
+    corpus = [r.text for r in docs.select("text").collect()]
+    for n in (1, 2, 3, 5):
+        texts = [
+            None,
+            "",
+            "!!! ... ??? --",
+            "Hello",
+            " ".join(f"W{i}," for i in range(n - 1)),
+            " ".join(f"t{i}" for i in range(n)),
+            "a a a a a a a b a a",
+            "  Foo\tbar--baz\n\nQUX,  foo\r\nbar   baz!!qux ",
+        ] + corpus
+        df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+        rows = df.select(
+            "i", T.shingles("text", n).alias("sh"), T.ngrams("text", n).alias("ng")
+        ).collect()
+        assert len(rows) == len(texts)
+        for r in rows:
+            t = texts[r.i]
+            assert r.sh == _ref_shingles(t, n), (n, t)
+            assert r.ng == _ref_ngrams(t, n), (n, t)
 
 
 def test_exact_dedup(spark, docs):
@@ -220,6 +268,27 @@ def test_minhash_lsh_recall(spark, docs):
         for r in D.minhash_lsh_pairs(sample, threshold=0.8, n_hashes=16, n_bands=8).collect()
     }
     assert set(lsh_pairs) == set(true_pairs)
+
+
+def test_minhash_plan_is_codegen(spark, docs):
+    """The LSH dedup builds its shingles without a lambda (an interpreted
+    higher-order array function) and caches exactly one table, the
+    (doc_id, sh) shingle table every consumer reads. The input is a local
+    relation, so the cached ``docs`` fixture does not show in the plan."""
+    sample = spark.createDataFrame(
+        docs.filter(F.col("doc_id") < 150).select("doc_id", "text").collect()
+    )
+    dup = sample.withColumn("doc_id", F.col("doc_id") + 5000)
+    df = D.minhash_lsh_pairs(sample.unionByName(dup), 0.8, 16, 4, hash_fn="xxhash64")
+    assert len(df.collect()) >= 150
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan.lower(), plan
+    cached = {
+        re.sub(r"#\d+L?", "", ln.split("InMemoryRelation", 1)[1])
+        for ln in plan.splitlines()
+        if "InMemoryRelation" in ln
+    }
+    assert len(cached) == 1, cached
 
 
 def test_minhash_signatures_match_column_path(spark, docs):

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Capture .explain('formatted') for the headline bench query paths into
-plans/r07/<name>_{before|after}.txt (judge-checkable plan evidence)."""
+plans/<ROUND>/<name>_{before|after}.txt (checked-in plan evidence)."""
 from __future__ import annotations
 
 import os
@@ -9,10 +9,12 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+ROUND = "r09"
+
 
 def main():
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r07")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", ROUND)
     os.makedirs(out_dir, exist_ok=True)
 
     import pyspark.sql.functions as F
