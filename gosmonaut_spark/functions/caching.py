@@ -21,16 +21,25 @@ without it, turning :func:`release_cached` into a silent no-op:
 Without either, blocks stay cached until LRU eviction pressure —
 acceptable for one-shot jobs, wasteful for a session running many
 operators back to back.
+
+Spark caches equal plans once, so two results can share a cached
+table; either release keeps it until the last holder is released.
+An operator's observed counters ride its result the same way
+(:func:`attach_counters`).
 """
 
 from __future__ import annotations
 
 import threading
+import weakref
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 _ATTR = "_gosmonaut_cached"
+_COUNTERS = "_gosmonaut_counters"
+
+_held: weakref.WeakSet = weakref.WeakSet()  # attached, not yet released
 
 _scopes = threading.local()
 
@@ -58,7 +67,7 @@ def cached_scope(blocking: bool = False):
         stack.pop()
         for h in handles:
             try:
-                h.unpersist(blocking)
+                _release([h], blocking)
             except Exception:
                 pass
 
@@ -67,6 +76,7 @@ def attach_cached(df: DataFrame, handles: list[DataFrame]) -> DataFrame:
     """Record persisted intermediates on the returned DataFrame AND in the
     innermost active :func:`cached_scope` (if any)."""
     setattr(df, _ATTR, list(handles))
+    _held.update(handles)
     stack = _scope_stack()
     if stack:
         stack[-1].extend(handles)
@@ -79,6 +89,27 @@ def release_cached(df: DataFrame, blocking: bool = False) -> None:
     returned — a derived DataFrame (after select/filter/join) no longer
     carries the handles; use :func:`cached_scope` when that is
     inconvenient. No-op for DataFrames without attached handles."""
-    for h in getattr(df, _ATTR, None) or []:
-        h.unpersist(blocking)
+    handles = getattr(df, _ATTR, None) or []
     setattr(df, _ATTR, [])
+    _release(handles, blocking)
+
+
+def _release(handles: list[DataFrame], blocking: bool) -> None:
+    """Unpersist ``handles`` unless a still-held handle caches the same plan."""
+    _held.difference_update(handles)
+    for h in handles:
+        if not any(h.sameSemantics(o) for o in list(_held)):
+            h.unpersist(blocking)
+
+
+def attach_counters(df: DataFrame, obs: Observation) -> DataFrame:
+    """Attach the Observation of the operator's counters to its result."""
+    setattr(df, _COUNTERS, obs)
+    return df
+
+
+def read_counters(df: DataFrame) -> dict:
+    """The counters observed for this exact DataFrame. Call only after an
+    action over it has succeeded: ``Observation.get`` blocks until then."""
+    obs = getattr(df, _COUNTERS, None)
+    return {} if obs is None else obs.get

@@ -22,12 +22,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..format.gpb import NODE_TYPE, RELATION_TYPE, WAY_TYPE
-
-NODE_STRUCT = "struct<id:bigint,lat:double,lon:double,tags:map<string,string>>"
+from ..functions.caching import attach_cached, attach_counters
 
 STRICT = "strict"
 SKIP_MISSING = "skip_missing"
@@ -125,12 +124,16 @@ def ordered_collect_rows(
 @dataclass
 class AssemblyMetrics:
     """Warn counters, the analog of the reference's printWarning
-    (/root/reference/gosmonaut.go:504-530). Filled only when the caller
-    runs the returned check actions (they cost one job each)."""
+    (reference gosmonaut.go:504-530). ``assemble_ways`` and
+    ``assemble_relations`` observe them during the pass's own action
+    (``DataFrame.observe``, read back with ``caching.read_counters``), and
+    the checkpointed pipeline records them in each pass's lineage entry.
+    The lazy pipeline runs no action before it returns, so there every
+    counter reads None (not measured), never 0."""
 
-    missing_way_nodes: int = 0
-    dropped_rel_members: int = 0
-    dropped_sub_relations: int = 0
+    missing_way_nodes: int | None = None
+    dropped_rel_members: int | None = None
+    dropped_sub_relations: int | None = None
     extra: dict = field(default_factory=dict)
 
 
@@ -177,17 +180,18 @@ def assemble_ways(
     ways_sel: DataFrame,
     nodes: DataFrame,
     mode: str = STRICT,
-    metrics: AssemblyMetrics | None = None,
 ) -> DataFrame:
     """Stitch each selected way's refs into a full node array, order
     preserved (reference scanWays, /root/reference/gosmonaut.go:350-403).
 
     ``mode=STRICT``: a dangling ref raises (reference hard error,
-    gosmonaut.go:383-386) — detected deterministically with an anti-join,
-    not by task order. ``mode=SKIP_MISSING``: dangling refs are dropped and
-    counted (Config.SkipMissingNodes, gosmonaut.go:35-37).
+    gosmonaut.go:383-386) — detected deterministically inside the join
+    stage, not by task order. ``mode=SKIP_MISSING``: dangling refs are
+    dropped and counted (Config.SkipMissingNodes, gosmonaut.go:35-37).
 
-    Returns ``(id, tags, url, nodes array<struct<id,lat,lon,tags>>)``.
+    Returns ``(id, tags, url, nodes array<struct<id,lat,lon,tags>>)``, with
+    the counter ``missing_way_nodes`` (non-null refs that matched no node)
+    attached for ``caching.read_counters``.
     """
     # carry the way's (tags, url) on its FIRST exploded row only (pos 0,
     # or the null-pos row posexplode_outer emits for zero-ref ways): the
@@ -219,7 +223,14 @@ def assemble_ways(
         ).alias("node"),
     )
 
-    joined = refs.join(node_side, "node_id", "left")
+    # the dangling-ref counter rides the join's own rows: no extra job
+    seen = Observation()
+    joined = refs.join(node_side, "node_id", "left").observe(
+        seen,
+        F.count(
+            F.when(F.col("node_id").isNotNull() & F.col("node").isNull(), 1)
+        ).alias("missing_way_nodes"),
+    )
 
     if mode == STRICT:
         # validate IN the assembly pass itself: the left join is followed
@@ -246,10 +257,6 @@ def assemble_ways(
         joined = joined.filter(check | (F.rand() < F.lit(-1.0)))
     elif mode != SKIP_MISSING:
         raise ValueError(f"unknown mode {mode!r}")
-    if metrics is not None and mode == SKIP_MISSING:
-        total_refs = refs.filter(F.col("node_id").isNotNull()).count()
-        matched = joined.filter(F.col("node").isNotNull()).count()
-        metrics.missing_way_nodes = total_refs - matched
 
     # every way keeps its group (posexplode_outer emits a null-ref row for
     # zero-ref ways; unmatched refs in skip mode just contribute no
@@ -264,12 +271,13 @@ def assemble_ways(
         keep=F.col("node_id").isNotNull() & F.col("node").isNotNull(),
         carry={"__meta": F.col("__meta")},
     )
-    return stitched.select(
+    out = stitched.select(
         F.col("way_id").alias("id"),
         F.col("__meta")["tags"].alias("tags"),
         F.col("__meta")["url"].alias("url"),
         "nodes",
     )
+    return attach_counters(out, seen)
 
 
 # ---------------------------------------------------------------------------
@@ -282,8 +290,6 @@ def assemble_relations(
     members: DataFrame,
     assembled_ways: DataFrame,
     nodes: DataFrame,
-    metrics: AssemblyMetrics | None = None,
-    broadcast_members_max_rows: int = 20_000_000,
     materialize_members: bool = False,
 ) -> DataFrame:
     """Resolve each needed relation's members against assembled ways and
@@ -292,36 +298,32 @@ def assemble_relations(
     Missing members and sub-relation members are *dropped* with a warn
     count, never an error (gosmonaut.go:445-465). Member order is restored
     from the carried ``pos``. Returns
-    ``(id, tags, url, members array<struct<role,type,node,way>>)``.
-
-    ``broadcast_members_max_rows``: when the (skinny) member table fits
-    this row bound, each typed resolve runs as a broadcast hash join with
-    the MEMBER side as the build — the heavy entity sides (assembled ways
-    carrying full node arrays; node structs) are never shuffled or sorted
-    for the resolve, and the only shuffle that moves them is the single
-    per-relation re-agg. Above the bound (planet-scale member tables) the
-    resolve falls back to the symmetric sort-merge join. 20M rows ≈ ~1 GB
-    hashed relation — comfortably inside the 8 GiB broadcast cap.
+    ``(id, tags, url, members array<struct<role,type,node,way>>)``, with
+    the counters ``dropped_sub_relations`` and ``dropped_rel_members``
+    (non-relation members that resolved to no way or node) attached for
+    ``caching.read_counters``.
 
     ``materialize_members``: eagerly count the persisted member table
     before the plan fans out. ON for pipelines whose member table derives
     from a cheap re-scannable source (the checkpointed pipeline's parquet
     snapshot): AQE's concurrent consumer stage-jobs otherwise race on the
     cold cache blocks (measured 3.5x task run-vs-CPU lock-wait at the
-    bench fixture), and the count doubles as the broadcast-bound
-    decision. OFF by default: in the lazy single-query pipeline the
-    member lineage includes the full page decode, so an up-front count
-    pays one extra decode pass (measured +2-3s on tag-histogram-shaped
-    consumers) — there the resolve keeps the merge-hinted SMJ.
+    bench fixture). The materialized table's real size then decides the
+    resolve: when it fits ``spark.sql.autoBroadcastJoinThreshold``, each
+    typed resolve runs as a broadcast hash join with the MEMBER side as
+    the build — the heavy entity sides (assembled ways carrying full node
+    arrays; node structs) are never shuffled or sorted for the resolve,
+    and the only shuffle that moves them is the single per-relation
+    re-agg. Above it (planet-scale member tables) the resolve falls back
+    to the symmetric sort-merge join. OFF by default: in the lazy
+    single-query pipeline the member lineage includes the full page
+    decode, so an up-front count pays one extra decode pass (measured
+    +2-3s on tag-histogram-shaped consumers) — there the resolve keeps
+    the merge-hinted SMJ.
     """
     mem = members.join(
         rels_sel.select(F.col("id").alias("rel_id")), "rel_id", "left_semi"
     )
-
-    if metrics is not None:
-        metrics.dropped_sub_relations = mem.filter(
-            F.col("member_type") == RELATION_TYPE
-        ).count()
 
     # persist: the member table (skinny — ids, pos, role) feeds FOUR
     # consumers below (both prune-id sets + both typed resolve branches);
@@ -352,10 +354,17 @@ def assemble_relations(
     # run-time was 3.5x their CPU time (pure cache-lock wait) collapsed to
     # one sub-second count + fast consumers; the relations pass fell from
     # ~51-56s to ~22s. The count is one pass over the skinny cached table —
-    # the standard materialize-before-fanout step — and its result doubles
-    # as the broadcast-bound decision below. (Skipped in the lazy
+    # the standard materialize-before-fanout step — and the materialized
+    # table's size decides the broadcast below. (Skipped in the lazy
     # single-query pipeline — see the docstring.)
-    n_mem = mem.count() if materialize_members else None
+    broadcast = False
+    if materialize_members:
+        mem.count()
+        # a fresh plan over the now-cached table sees its real in-memory
+        # size; mem's own QueryExecution keeps the pre-cache estimate
+        size = mem.select("*")._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        limit = mem.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        broadcast = size <= limit
 
     # Prune BOTH build sides to ids actually referenced by a member BEFORE
     # their heavy shuffle — the relational form of the reference's bitset
@@ -388,45 +397,23 @@ def assemble_relations(
 
     mem_w = mem.filter(F.col("member_type") == WAY_TYPE)
     mem_n = mem.filter(F.col("member_type") == NODE_TYPE)
-    if n_mem is not None and n_mem <= broadcast_members_max_rows:
-        # broadcast the SKINNY member side (bounded by the measured count
+    if broadcast:
+        # broadcast the SKINNY member side (bounded by its measured size
         # above): the heavy way/node structs stream through the join in
         # their scan partitioning — no shuffle, no sort of nested arrays.
         # The entity side is NEVER the build side (arrays are
         # memory-hostile in a hashed relation; the old merge hint existed
         # to prevent exactly that), and the heavy bytes now move only once:
         # in the per-relation re-agg below.
-        w = (
-            way_side.join(F.broadcast(mem_w), "member_id", "inner")
-            .withColumn("node", F.lit(None).cast(NODE_STRUCT))
-        )
-        n = (
-            node_side.join(F.broadcast(mem_n), "member_id", "inner")
-            .withColumn(
-                "way", F.lit(None).cast(w.schema["way"].dataType.simpleString())
-            )
-        )
+        w = way_side.join(F.broadcast(mem_w), "member_id", "inner")
+        n = node_side.join(F.broadcast(mem_n), "member_id", "inner")
     else:
-        w = (
-            mem_w
-            .join(way_side.hint("merge"), "member_id", "inner")  # arrays: no broadcast
-            .withColumn("node", F.lit(None).cast(NODE_STRUCT))
-        )
-        n = (
-            mem_n
-            .join(node_side, "member_id", "inner")
-            .withColumn(
-                "way", F.lit(None).cast(w.schema["way"].dataType.simpleString())
-            )
-        )
-    resolved = w.select("rel_id", "pos", "role", "member_type", "node", "way").unionByName(
-        n.select("rel_id", "pos", "role", "member_type", "node", "way")
+        w = mem_w.join(way_side.hint("merge"), "member_id", "inner")  # arrays: no broadcast
+        n = mem_n.join(node_side, "member_id", "inner")
+    keys = ["rel_id", "pos", "role", "member_type"]
+    resolved = w.select(*keys, "way").unionByName(
+        n.select(*keys, "node"), allowMissingColumns=True
     )
-
-    if metrics is not None:
-        wanted = mem.count()
-        got = resolved.count()
-        metrics.dropped_rel_members = wanted - got
 
     # one sentinel row per relation, unioned into the resolve output: it
     # carries the relation's (tags, url) through the re-agg (recovered via
@@ -437,19 +424,28 @@ def assemble_relations(
     # excludes sentinels from the collected array, so an unresolvable
     # relation still emits members = []. Relation ids are globally unique
     # per the OSM data model (the reference keys relations by id).
-    meta_t = "struct<tags:map<string,string>,url:string>"
-    way_t = w.schema["way"].dataType.simpleString()
+    # Sentinels also carry their relation's listed member counts, so both
+    # drop counters are observed on rows every action computes (AQE can
+    # drop member-table scans when nothing resolves, and an Observation
+    # there would never complete).
+    listed = F.size(F.array_remove("member_types", RELATION_TYPE))
     sentinel = rels_sel.select(
         F.col("id").alias("rel_id"),
-        F.lit(None).cast("int").alias("pos"),
-        F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("int").alias("member_type"),
-        F.lit(None).cast(NODE_STRUCT).alias("node"),
-        F.lit(None).cast(way_t).alias("way"),
         F.struct("tags", "url").alias("__meta"),
+        (F.size("member_types") - listed).alias("_sub"),
+        listed.alias("_listed"),
     )
-    resolved = resolved.withColumn("__meta", F.lit(None).cast(meta_t)).unionByName(
-        sentinel
+    seen = Observation()
+    resolved = (
+        resolved.unionByName(sentinel, allowMissingColumns=True)
+        .observe(
+            seen,
+            F.coalesce(F.sum("_sub"), F.lit(0)).alias("dropped_sub_relations"),
+            (
+                F.coalesce(F.sum("_listed"), F.lit(0)) - F.count("member_type")
+            ).alias("dropped_rel_members"),
+        )
+        .drop("_sub", "_listed")
     )
 
     member_struct = F.struct(
@@ -475,6 +471,5 @@ def assemble_relations(
         F.col("__meta")["url"].alias("url"),
         "members",
     )
-    from ..functions.caching import attach_cached
 
-    return attach_cached(out, [mem])
+    return attach_counters(attach_cached(out, [mem]), seen)

@@ -23,25 +23,26 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.caching import read_counters, release_cached
 
-def _parquet_meta_rows(snap_dir: str) -> int | None:
-    """Total row count of a committed snapshot from parquet footer
-    metadata only (no spark job, no data pages read). Returns None when
-    no part file was read (a missing or empty directory, or a non-local
-    URI, which ``os.walk`` does not see) or any part file's footer cannot
-    be read — callers fall back to a real count."""
+
+def _parquet_meta_rows(snap_dir: str) -> list[int] | None:
+    """Row count of every part file of a committed snapshot, in path
+    order, from parquet footer metadata only (no spark job, no data pages
+    read). Returns None when no part file was read (a missing or empty
+    directory, or a non-local URI, which ``os.walk`` does not see) or any
+    part file's footer cannot be read — callers fall back to a real
+    count."""
     try:
         import pyarrow.parquet as pq
 
-        total, n_files = 0, 0
-        for root, _dirs, files in os.walk(snap_dir):
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith("_"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-                    n_files += 1
-        return total if n_files else None
+        paths = sorted(
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(snap_dir)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith("_")
+        )
+        return [pq.ParquetFile(p).metadata.num_rows for p in paths] or None
     except Exception:
         return None
 
@@ -51,21 +52,19 @@ class CheckpointStore:
         self,
         spark: SparkSession,
         base_dir: str,
-        debug: bool = False,
         retain: int = 3,
         post_pass=None,
     ):
-        """``debug=True`` adds per-partition row counts + skew factor to
-        every lineage entry — one extra scan per pass, the analog of the
-        reference's opt-in DebugMode stats
-        (/root/reference/gosmonaut.go:19-38, :497-530). Off by default:
-        production runs record wall time + row totals from parquet
-        metadata only (no extra jobs). ``retain``: number of historical
-        snapshot data dirs kept per pass (Iceberg's expire_snapshots
-        analog); must be >= 1."""
+        """Every computed pass appends a lineage entry: wall time,
+        ``rows_out``, and ``n_partitions``/``rows_per_partition``/
+        ``max_partition_skew`` per part file, all from the parquet footers
+        (the analog of the reference's DebugMode stats,
+        reference gosmonaut.go:19-38, :497-530, at no extra job),
+        plus the counters the pass's operator observed during its write.
+        ``retain``: number of historical snapshot data dirs kept per pass
+        (Iceberg's expire_snapshots analog); must be >= 1."""
         self.spark = spark
         self.base = base_dir
-        self.debug = debug
         self.retain = max(1, int(retain))
         # optional hook run after every computed pass commits (not on
         # snapshot-cache hits). Used for pass-boundary hygiene: a pass's
@@ -364,8 +363,10 @@ class CheckpointStore:
         parent — the history stays rollback-able up to ``retain``).
 
         On compute, records lineage: snapshot id, wall ms, output rows,
-        and rows per partition (the skew fingerprint — a hot partition
-        shows up here before it shows up as a straggler at 100TB).
+        rows per part file and their skew (the skew fingerprint — a hot
+        partition shows up here before it shows up as a straggler at
+        100TB), and the counters ``build``'s operator observed during the
+        write (``caching.read_counters``).
         ``partition_by``: hive-partition the snapshot (e.g. by entity type
         — the analog of the reference's per-type blob index,
         decode.go:341-383: later passes read only their partition).
@@ -394,44 +395,23 @@ class CheckpointStore:
         w.parquet(snap_dir)
         wall_ms = round((time.perf_counter() - t0) * 1000, 1)
         out = self.spark.read.parquet(snap_dir)
-        entry = {"pass": name, "wall_ms": wall_ms}
-        if self.debug:
-            per_part = (
-                out.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .orderBy("pid")
-                .collect()
-            )
-            entry.update(
-                {
-                    "rows_out": sum(r["count"] for r in per_part),
-                    "n_partitions": len(per_part),
-                    "rows_per_partition": [int(r["count"]) for r in per_part],
-                    "max_partition_skew": (
-                        round(
-                            max(r["count"] for r in per_part)
-                            / max(
-                                sum(r["count"] for r in per_part)
-                                / max(len(per_part), 1),
-                                1,
-                            ),
-                            2,
-                        )
-                        if per_part
-                        else 0
-                    ),
-                }
-            )
-        else:
-            # metadata-only count: sum the parquet footers' row counts
-            # driver-side (the Iceberg manifest-count analog) — the
-            # previous spark job (out.count()) still scheduled one task
-            # per file over the freshly written snapshot, ~2s per pass at
-            # the bench fixture for a number the footers already hold.
-            # Falls back to the spark count if any footer is unreadable.
-            entry["rows_out"] = _parquet_meta_rows(snap_dir)
-            if entry["rows_out"] is None:
-                entry["rows_out"] = out.count()
+        # footer-only counts (the Iceberg manifest-count analog): no spark
+        # job over the snapshot just written. Unreadable footers fall back
+        # to a real count, and the skew fields stay null, never 0.
+        rows = _parquet_meta_rows(snap_dir)
+        known = rows is not None
+        entry = {
+            "pass": name,
+            "wall_ms": wall_ms,
+            "rows_out": sum(rows) if known else out.count(),
+            "n_partitions": len(rows) if known else None,
+            "rows_per_partition": rows,
+            "max_partition_skew": (
+                round(max(rows) / max(sum(rows) / len(rows), 1), 2) if known else None
+            ),
+            # final now that the write has succeeded
+            **read_counters(df),
+        }
         sid = self._commit_snapshot(
             name,
             {
@@ -451,8 +431,6 @@ class CheckpointStore:
         # the pass is durable: release any intermediates the operator
         # persisted while building it (e.g. the relation member table) —
         # downstream passes read the snapshot, never the build lineage
-        from ..functions.caching import release_cached
-
         release_cached(df)
         if self.post_pass is not None:
             self.post_pass(name)
@@ -464,7 +442,6 @@ def run_pipeline_checkpointed(
     pages: DataFrame,
     base_dir: str,
     mode: str = "skip_missing",
-    debug: bool = False,
     post_pass=None,
 ):
     """The 5-pass pipeline with a snapshot boundary after every pass
@@ -475,7 +452,7 @@ def run_pipeline_checkpointed(
     from ..operators.assembly import assemble_relations, assemble_ways
     from ..sources import pages as src
 
-    ck = CheckpointStore(spark, base_dir, debug=debug, post_pass=post_pass)
+    ck = CheckpointStore(spark, base_dir, post_pass=post_pass)
 
     # ONE decode pass for every entity kind (the reference's run-1 scan
     # populating all indexes, decode.go:262-273): the earlier three

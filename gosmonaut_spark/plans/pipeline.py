@@ -117,16 +117,17 @@ def run_pipeline(
     types: frozenset[str] | set[str] = P.ALL_TYPES,
     predicate: Column | None = None,
     mode: str = STRICT,
-    collect_metrics: bool = False,
 ) -> PipelineResult:
     """Run the full nested-entity resolution over a pages DataFrame.
 
     ``predicate`` is a boolean Column over the per-entity ``tags`` map
     (the reference's funcEntityNeeded, gosmonaut.go:118-121); it is applied
     uniformly to every entity type, as the reference does.
+
+    Lazy: no action runs here, so the result's ``metrics`` counters read
+    None. The checkpointed pipeline records them in its lineage.
     """
     pred = predicate if predicate is not None else F.lit(True)
-    metrics = AssemblyMetrics()
 
     want_nodes = P.NODE in types
     want_ways = P.WAY in types
@@ -156,23 +157,15 @@ def run_pipeline(
     if want_ways or want_rels:
         ways_raw = src.extract_ways_raw(pages)
         ways_sel = ways_to_assemble(ways_raw, pred, want_ways, rel_way_ids)
-        assembled = assemble_ways(
-            ways_sel, nodes_all, mode=mode, metrics=metrics if collect_metrics else None
-        )
+        assembled = assemble_ways(ways_sel, nodes_all, mode=mode)
         if want_ways:
             out_ways = assembled.filter(pred)
 
     # Pass R (gosmonaut.go:200-211)
     if want_rels:
-        out_rels = assemble_relations(
-            rels_needed,
-            members,
-            assembled,
-            nodes_all,
-            metrics=metrics if collect_metrics else None,
-        )
+        out_rels = assemble_relations(rels_needed, members, assembled, nodes_all)
 
-    return PipelineResult(out_nodes, out_ways, out_rels, metrics)
+    return PipelineResult(out_nodes, out_ways, out_rels, AssemblyMetrics())
 
 
 def entities_union(result: PipelineResult) -> DataFrame:

@@ -11,7 +11,7 @@ def _counts(dfs):
 
 def test_checkpoint_resume_and_lineage(spark, pages_t1, tmp_path):
     base = str(tmp_path / "ck")
-    ck, dfs = run_pipeline_checkpointed(spark, pages_t1, base, debug=True)
+    ck, dfs = run_pipeline_checkpointed(spark, pages_t1, base)
     first = _counts(dfs)
     lineage1 = ck.lineage()
     passes = [e["pass"] for e in lineage1]
@@ -33,6 +33,61 @@ def test_checkpoint_resume_and_lineage(spark, pages_t1, tmp_path):
     lineage3 = ck3.lineage()
     assert len(lineage3) == len(lineage1) + 1
     assert lineage3[-1]["pass"] == "relations"
+
+
+def _truth_counters():
+    """Each pass's rows and drop counters, counted in pure Python from the
+    generator's truth tables for the ``pages_t1`` fixture (500 pages,
+    seed 42, dangling refs and members on)."""
+    from gosmonaut_spark.fixtures.pages import generate_pages
+    from gosmonaut_spark.format.gpb import NODE_TYPE, RELATION_TYPE, WAY_TYPE
+
+    truths = [p.truth for p in generate_pages(500, seed=42, dangling=True)]
+    nodes = {i for t in truths for i in t.nodes.ids}
+    ways = {i for t in truths for i in t.ways.ids}
+    refs = [r for t in truths for refs in t.ways.refs for r in refs]
+    members = [
+        (mid, mt)
+        for t in truths
+        for mids, mts in zip(t.rels.member_ids, t.rels.member_types)
+        for mid, mt in zip(mids, mts)
+    ]
+    n_rels = sum(len(t.rels.ids) for t in truths)
+    known = {NODE_TYPE: nodes, WAY_TYPE: ways}
+    return {
+        "entities": {"rows_out": len(nodes) + len(ways) + n_rels},
+        "assembled_ways": {
+            "rows_out": len(ways),
+            "missing_way_nodes": sum(r not in nodes for r in refs),
+        },
+        "relations": {
+            "rows_out": n_rels,
+            "dropped_sub_relations": sum(mt == RELATION_TYPE for _, mt in members),
+            "dropped_rel_members": sum(
+                mid not in known[mt] for mid, mt in members if mt != RELATION_TYPE
+            ),
+        },
+    }
+
+
+def test_lineage_counters_match_truth(spark, pages_t1, tmp_path):
+    """Every computed pass records its rows and per-part-file skew from the
+    snapshot footers, and the assembly passes record the drop counters
+    they observed during their own write; each equals the value counted
+    from the generator's truth."""
+    ck, _ = run_pipeline_checkpointed(spark, pages_t1, str(tmp_path / "ck"))
+    lineage = {e["pass"]: e for e in ck.lineage()}
+    truth = _truth_counters()
+    assert set(lineage) == set(truth)
+    for name, want in truth.items():
+        e = lineage[name]
+        assert {k: e[k] for k in want} == want, name
+        per_file = e["rows_per_partition"]
+        assert e["n_partitions"] == len(per_file) and sum(per_file) == e["rows_out"]
+        mean = e["rows_out"] / len(per_file)
+        assert e["max_partition_skew"] == round(max(per_file) / max(mean, 1), 2)
+    drops = [v for w in truth.values() for k, v in w.items() if k != "rows_out"]
+    assert any(drops), "the fixture must exercise at least one drop counter"
 
 
 def test_checkpoint_outputs_match_direct(spark, pages_t1, tmp_path):

@@ -112,6 +112,9 @@ def test_workload_restrictions(spark, pages_t1, oracle):
     )
     assert res.nodes is None and res.ways is None
     assert res.workload_counts() == expected
+    # the lazy pipeline measures no counter: None, never a silent 0
+    m = res.metrics
+    assert m.missing_way_nodes is m.dropped_rel_members is m.dropped_sub_relations is None
 
 
 def test_relation_member_semantics(spark, pages_t1, oracle):

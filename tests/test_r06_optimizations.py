@@ -69,22 +69,32 @@ def test_assemble_relations_broadcast_equals_smj(spark, pages_t1):
     members = src.rel_members(rels_raw)
     aw = assemble_ways(ways_raw, nodes, mode=SKIP_MISSING)
 
-    # broadcast path (count fits any bound) vs forced SMJ fallback
+    # broadcast path (the member table fits the session's broadcast
+    # threshold) vs the SMJ fallback, forced by disabling that threshold
     bcast = assemble_relations(
         rels_raw, members, aw, nodes, materialize_members=True
     )
-    smj = assemble_relations(
-        rels_raw,
-        members,
-        aw,
-        nodes,
-        materialize_members=True,
-        broadcast_members_max_rows=0,
-    )
-    assert _rows(bcast) == _rows(smj)
+    bcast_rows = _rows(bcast)
+    plan = bcast._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin [member_id" in plan, plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        smj = assemble_relations(
+            rels_raw, members, aw, nodes, materialize_members=True
+        )
+        smj_rows = _rows(smj)
+        plan = smj._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    # the member resolve itself is the sort-merge join
+    assert "SortMergeJoin [member_id" in plan, plan
+    assert "BroadcastHashJoin [member_id" not in plan, plan
+    assert bcast_rows == smj_rows
     # lazy (non-materialized) path — the r5-shaped plan — same rows too
     lazy = assemble_relations(rels_raw, members, aw, nodes)
-    assert _rows(lazy) == _rows(bcast)
+    assert _rows(lazy) == bcast_rows
 
 
 # ---------------------------------------------------------------------------
@@ -166,7 +176,16 @@ def test_run_pass_footer_count(spark, tmp_path):
     snaps = ck.snapshots("t")
     assert snaps[-1]["rows"] == 1234 == out.count()
     snap_dir = ck._snap_dir("t", snaps[-1]["id"])
-    assert _parquet_meta_rows(snap_dir) == 1234
+    per_file = _parquet_meta_rows(snap_dir)
+    assert sum(per_file) == 1234
+    # one count per part file, equal to a spark count grouped by file
+    by_file = out.groupBy(F.input_file_name().alias("f")).count().collect()
+    assert sorted(per_file) == sorted(r["count"] for r in by_file)
+    # the lineage entry carries the same counts and their skew
+    (e,) = ck.lineage()
+    assert e["rows_out"] == 1234 and e["rows_per_partition"] == per_file
+    assert e["n_partitions"] == len(per_file) == len(by_file)
+    assert e["max_partition_skew"] == round(max(per_file) / (1234 / len(per_file)), 2)
     # no part file read -> None (so run_pass falls back to a real count),
     # never a silent 0
     assert _parquet_meta_rows(str(tmp_path / "missing")) is None
@@ -174,27 +193,47 @@ def test_run_pass_footer_count(spark, tmp_path):
     assert _parquet_meta_rows(str(tmp_path / "empty")) is None
 
 
+def test_run_pass_unreadable_footer_records_unknown_skew(spark, tmp_path, monkeypatch):
+    """Without footers the row count comes from a real count and the skew
+    fields are null, never 0."""
+    from gosmonaut_spark.plans import checkpoint
+
+    monkeypatch.setattr(checkpoint, "_parquet_meta_rows", lambda _d: None)
+    ck = checkpoint.CheckpointStore(spark, str(tmp_path))
+    ck.run_pass("t", lambda: spark.range(77))
+    (e,) = ck.lineage()
+    assert e["rows_out"] == 77
+    assert e["n_partitions"] is e["rows_per_partition"] is e["max_partition_skew"] is None
+
+
 # ---------------------------------------------------------------------------
-# session: python-worker prewarm once per SparkContext
+# session: reusing the live SparkContext runs no job
 # ---------------------------------------------------------------------------
 
 
-def test_build_session_reuse_does_not_prewarm(spark, monkeypatch):
+def test_build_session_reuse_submits_no_job(spark):
     """A build_session that reuses the live SparkContext (getOrCreate)
-    starts no pyworker-prewarm job: the context's worker pool was already
-    warmed when it was created."""
-    import threading
+    submits no Spark job, neither inline nor from a thread it starts."""
+    import time
 
     from gosmonaut_spark.session import build_session
 
-    started = []
-    real_start = threading.Thread.start
-
-    def spy(self):
-        started.append(self.name)
-        return real_start(self)
-
-    monkeypatch.setattr(threading.Thread, "start", spy)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = max(tracker.getJobIdsForGroup(), default=-1)
     again = build_session(master="local[8]", shuffle_partitions=8)
-    assert again.sparkContext is spark.sparkContext
-    assert "pyworker-prewarm" not in started
+    assert again.sparkContext is sc
+    time.sleep(0.5)  # give a job started on another thread time to submit
+    # a marker job: the listener bus delivers job starts in submission
+    # order, so once the marker shows, every earlier job shows too
+    sc.setJobGroup("reuse-marker", "marker")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("reuse-marker"):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    assert [j for j in tracker.getJobIdsForGroup() if j > before] == []

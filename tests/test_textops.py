@@ -291,6 +291,23 @@ def test_minhash_plan_is_codegen(spark, docs):
     assert len(cached) == 1, cached
 
 
+def test_release_cached_keeps_a_shared_table(spark, docs):
+    """Two live dedup results over the same input share one cached
+    shingle table; releasing the first must leave the second's cached,
+    and releasing the second then drops it."""
+    from gosmonaut_spark.functions.caching import release_cached
+
+    sample = docs.filter(F.col("doc_id") < 60).select("doc_id", "text")
+    r1 = D.minhash_lsh_pairs(sample, 0.8, 16, 4)
+    r2 = D.minhash_lsh_pairs(sample, 0.8, 16, 4)
+    (h2,) = r2._gosmonaut_cached
+    assert h2.storageLevel.useMemory
+    release_cached(r1)
+    assert h2.storageLevel.useMemory, "r1's release dropped r2's table"
+    release_cached(r2)
+    assert not h2.storageLevel.useMemory
+
+
 def test_minhash_signatures_match_column_path(spark, docs):
     """Explode+min-agg signature plan == interpreted Column fold, both
     hash families (the reference's two-decoder equivalence discipline,
