@@ -102,14 +102,18 @@ def _release(handles: list[DataFrame], blocking: bool) -> None:
             h.unpersist(blocking)
 
 
-def attach_counters(df: DataFrame, obs: Observation) -> DataFrame:
-    """Attach the Observation of the operator's counters to its result."""
-    setattr(df, _COUNTERS, obs)
+def attach_counters(df: DataFrame, obs: Observation, *names: str) -> DataFrame:
+    """Attach the Observation of the operator's counters ``names`` to its result."""
+    setattr(df, _COUNTERS, (obs, names))
     return df
 
 
 def read_counters(df: DataFrame) -> dict:
     """The counters observed for this exact DataFrame. Call only after an
-    action over it has succeeded: ``Observation.get`` blocks until then."""
-    obs = getattr(df, _COUNTERS, None)
-    return {} if obs is None else obs.get
+    action over it has succeeded: ``Observation.get`` blocks until then.
+    A subtree the optimizer removed as provably empty reports an empty
+    row; its counters read None, not measured."""
+    obs, names = getattr(df, _COUNTERS, (None, ()))
+    if obs is None or obs._jo.getRow().length() == 0:
+        return dict.fromkeys(names)
+    return obs.get

@@ -280,16 +280,21 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return F.array_distinct(_grams(col, n, short=True))
 
 
+def _with_tokens_sql(expr: str, body: str) -> str:
+    # DuckDB re-evaluates an outer expression inside a lambda once per
+    # element: bind the tokens once, as ``t``, over a one-element list
+    return f"list_transform([{tokens_sql(expr)}], t -> {body})[1]"
+
+
 def shingles_sql(expr: str, n: int = 3) -> str:
-    toks = tokens_sql(expr)
-    k = f"len({toks})"
     grams = (
-        f"list_transform(range(1, greatest({k} - {n - 1}, 1) + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
+        f"list_transform(range(1, greatest(len(t) - {n - 1}, 1) + 1), "
+        f"i -> array_to_string(list_slice(t, i, i + {n - 1}), ' '))"
     )
-    return (
-        f"CASE WHEN {k} > 0 THEN list_distinct({grams}) "
-        f"ELSE CAST([] AS VARCHAR[]) END"
+    return _with_tokens_sql(
+        expr,
+        f"CASE WHEN len(t) > 0 THEN list_distinct({grams}) "
+        f"ELSE CAST([] AS VARCHAR[]) END",
     )
 
 
@@ -301,13 +306,12 @@ def ngrams(col: Column | str, n: int = 2) -> Column:
 
 
 def ngrams_sql(expr: str, n: int = 2) -> str:
-    toks = tokens_sql(expr)
-    k = f"len({toks})"
-    return (
-        f"CASE WHEN {k} >= {n} THEN "
-        f"list_transform(range(1, {k} - {n - 1} + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' ')) "
-        f"ELSE CAST([] AS VARCHAR[]) END"
+    return _with_tokens_sql(
+        expr,
+        f"CASE WHEN len(t) >= {n} THEN "
+        f"list_transform(range(1, len(t) - {n - 1} + 1), "
+        f"i -> array_to_string(list_slice(t, i, i + {n - 1}), ' ')) "
+        f"ELSE CAST([] AS VARCHAR[]) END",
     )
 
 

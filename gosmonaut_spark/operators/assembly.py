@@ -277,7 +277,7 @@ def assemble_ways(
         F.col("__meta")["url"].alias("url"),
         "nodes",
     )
-    return attach_counters(out, seen)
+    return attach_counters(out, seen, "missing_way_nodes")
 
 
 # ---------------------------------------------------------------------------
@@ -472,4 +472,6 @@ def assemble_relations(
         "members",
     )
 
-    return attach_counters(attach_cached(out, [mem]), seen)
+    return attach_counters(
+        attach_cached(out, [mem]), seen, "dropped_sub_relations", "dropped_rel_members"
+    )

@@ -1207,10 +1207,10 @@ def label_propagation_sql(
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
   FROM ({edges_sql}) WHERE src != dst
 ),
-lp_adj AS (
+lp_adj AS MATERIALIZED (
   SELECT a AS u, b AS w FROM lp_e UNION ALL SELECT b, a FROM lp_e
 ),
-lp_lab0 AS (
+lp_lab0 AS MATERIALIZED (
   SELECT CAST(id AS BIGINT) AS id, CAST(label AS BIGINT) AS label,
          0 AS round
   FROM ({seeds_sql})
@@ -1232,7 +1232,7 @@ lp_lab0 AS (
     ) v
   ) WHERE rk = 1
 ),
-lp_lab{r} AS (
+lp_lab{r} AS MATERIALIZED (
   SELECT * FROM {prev} UNION ALL SELECT * FROM lp_new{r}
 )"""
         )

@@ -493,7 +493,7 @@ ORDER BY a, b""",
   UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 200
 ),
 shing AS (SELECT doc_id, {sh_sql} AS sh FROM all_docs),
-sigs AS (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
+sigs AS MATERIALIZED (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
 bands AS ({band_rows}),
 cand AS (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -558,7 +558,7 @@ ORDER BY a, b""",
             WHERE doc_id < 200
 ),
 shing AS (SELECT doc_id, {sh_sql} AS sh FROM all_docs),
-sigs AS (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
+sigs AS MATERIALIZED (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
 bands AS ({band_rows}),
 cand AS (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -636,7 +636,7 @@ SELECT (SELECT count(*) FROM cj) AS n_candidates,
             WHERE doc_id < 200
 ),
 shing AS (SELECT doc_id, {sh_sql} AS sh FROM all_docs),
-sigs AS (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
+sigs AS MATERIALIZED (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
 bands AS ({band_rows}),
 cand AS (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -658,7 +658,7 @@ pairs AS (
   WHERE CAST(i.n_inter AS DOUBLE)
           / CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5
 ),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
+edges AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
 reach AS (
   SELECT u AS id, u AS lbl FROM edges
   UNION
@@ -2030,7 +2030,7 @@ SELECT s_suppkey, s_name, revenue_cents, rank FROM ranked WHERE rank <= 10 ORDER
   UNION ALL SELECT doc_id + 2000000, text || ' zq' FROM documents WHERE doc_id < 200
 ),
 shing AS (SELECT doc_id, {sh_sql} AS sh FROM all_docs),
-sigs AS (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
+sigs AS MATERIALIZED (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
 bands AS ({band_rows}),
 cand AS (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -2048,7 +2048,7 @@ pairs AS (
   FROM inter i JOIN sizes sa ON sa.doc_id = i.a JOIN sizes sb ON sb.doc_id = i.b
   WHERE CAST(i.n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5
 ),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
+edges AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
 reach AS (
   SELECT u AS id, u AS lbl FROM edges
   UNION
@@ -2141,7 +2141,7 @@ exact AS (
   ) WHERE doc_id = min_id
 ),
 shing AS (SELECT doc_id, {sh_sql} AS sh FROM exact),
-sigs AS (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
+sigs AS MATERIALIZED (SELECT doc_id, sh, {mh_cols} FROM shing WHERE len(sh) > 0),
 bands AS ({band_rows}),
 cand AS (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -2159,7 +2159,7 @@ pairs AS (
   FROM inter i JOIN sizes sa ON sa.doc_id = i.a JOIN sizes sb ON sb.doc_id = i.b
   WHERE CAST(i.n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5
 ),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
+edges AS MATERIALIZED (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
 reach AS (
   SELECT u AS id, u AS lbl FROM edges
   UNION

@@ -90,6 +90,26 @@ def test_lineage_counters_match_truth(spark, pages_t1, tmp_path):
     assert any(drops), "the fixture must exercise at least one drop counter"
 
 
+def test_lineage_counters_without_relations(spark, pages_t1, tmp_path):
+    """On pages that carry no relation, the optimizer may drop the
+    relations pass's observed subtree as provably empty; the pass still
+    commits, and its drop counters read None (not measured) or 0, never a
+    failure or a non-zero count."""
+    from pyspark.sql import functions as F
+
+    from gosmonaut_spark.fixtures.pages import generate_pages
+
+    pages_spec = generate_pages(500, seed=42, dangling=True)
+    urls = [p.url for p in pages_spec if not len(p.truth.rels.ids)]
+    assert urls, "the fixture must have pages without relations"
+    pages = pages_t1.filter(F.col("url").isin(urls))
+    ck, dfs = run_pipeline_checkpointed(spark, pages, str(tmp_path / "ck"))
+    e = {x["pass"]: x for x in ck.lineage()}["relations"]
+    assert e["rows_out"] == 0 and dfs["relations"].count() == 0
+    for k in ("dropped_sub_relations", "dropped_rel_members"):
+        assert k in e and e[k] in (None, 0), (k, e[k])
+
+
 def test_checkpoint_outputs_match_direct(spark, pages_t1, tmp_path):
     """Checkpointed pipeline == direct pipeline, row for row."""
     from pyspark.sql import functions as F

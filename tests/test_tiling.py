@@ -190,15 +190,28 @@ def test_pip_unknown_engine_raises(spark):
         point_in_polygon_join(points, polys, res=8, engine="vectorized")
 
 
-def test_knn_ring_matches_brute(spark, world):
+def _knn_sides(world):
+    """Every 37th node queries all nodes."""
     nodes = world["nodes"]
     queries = nodes.filter(F.col("id") % 37 == 0).select(
         F.col("id").alias("query_id"), "lat", "lon"
     )
     targets = nodes.select(F.col("id").alias("target_id"), "lat", "lon")
+    return queries, targets
+
+
+@pytest.fixture(scope="module")
+def brute5(world):
+    """Brute-force k=5 neighbours of :func:`_knn_sides`, collected once:
+    the cross join behind it is the costliest step of every kNN test."""
+    return knn_brute(*_knn_sides(world), 5).collect()
+
+
+def test_knn_ring_matches_brute(spark, world, brute5):
+    queries, targets = _knn_sides(world)
     k = 5
     approx = knn_join(queries, targets, k, res=7, ring=1).collect()
-    exact = knn_brute(queries, targets, k).collect()
+    exact = brute5
 
     def key(rows):
         out = {}
@@ -209,23 +222,19 @@ def test_knn_ring_matches_brute(spark, world):
     assert key(approx) == key(exact)
 
 
-def test_knn_ring_covers_grid_equals_brute(spark, world):
+def test_knn_ring_covers_grid_equals_brute(spark, world, brute5):
     """When 2k+1 >= 2^res the ring is the whole grid, so the ring join is
     exact: row for row equal to brute force, no target repeated for a
     query (the x-wrap must not visit a grid column twice)."""
-    nodes = world["nodes"]
-    queries = nodes.filter(F.col("id") % 37 == 0).select(
-        F.col("id").alias("query_id"), "lat", "lon"
-    )
-    targets = nodes.select(F.col("id").alias("target_id"), "lat", "lon")
+    queries, targets = _knn_sides(world)
     k = 5
 
-    def rows(df):
-        return sorted((r.query_id, r.target_id, round(r.dist_m, 6)) for r in df.collect())
+    def rows(collected):
+        return sorted((r.query_id, r.target_id, round(r.dist_m, 6)) for r in collected)
 
-    exact = rows(knn_brute(queries, targets, k))
+    exact = rows(brute5)
     for res, ring in ((1, 1), (2, 2)):
-        got = rows(knn_join(queries, targets, k, res=res, ring=ring))
+        got = rows(knn_join(queries, targets, k, res=res, ring=ring).collect())
         assert len({(q, t) for q, t, _ in got}) == len(got), (res, ring)
         assert got == exact, (res, ring)
 
@@ -237,11 +246,7 @@ def test_knn_ring_plan_is_codegen(spark, world):
     higher-order array function) appears anywhere in the plan. The
     symmetric shape runs with broadcast joins off, so it really is a
     shuffle join at test scale."""
-    nodes = world["nodes"]
-    queries = nodes.filter(F.col("id") % 37 == 0).select(
-        F.col("id").alias("query_id"), "lat", "lon"
-    )
-    targets = nodes.select(F.col("id").alias("target_id"), "lat", "lon")
+    queries, targets = _knn_sides(world)
     keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
     saved = {k: spark.conf.get(k, None) for k in keys}
     try:
@@ -264,14 +269,10 @@ def test_knn_ring_plan_is_codegen(spark, world):
             spark.conf.unset(k) if v is None else spark.conf.set(k, v)
 
 
-def test_knn_adaptive_is_exact(spark, world):
+def test_knn_adaptive_is_exact(spark, world, brute5):
     """Ring escalation + coverage certificate + brute tail == brute force,
     even when the starting ring is far too small for the data density."""
-    nodes = world["nodes"]
-    queries = nodes.filter(F.col("id") % 37 == 0).select(
-        F.col("id").alias("query_id"), "lat", "lon"
-    )
-    targets = nodes.select(F.col("id").alias("target_id"), "lat", "lon")
+    queries, targets = _knn_sides(world)
     k = 5
 
     def key(rows):
@@ -280,7 +281,7 @@ def test_knn_adaptive_is_exact(spark, world):
             out.setdefault(r.query_id, []).append((r.target_id, round(r.dist_m, 6)))
         return {q: sorted(v) for q, v in out.items()}
 
-    exact = key(knn_brute(queries, targets, k).collect())
+    exact = key(brute5)
     # res 15 (finest, ~600 m cells): almost every query starts
     # under-covered -> exercises coarsening rounds and the brute tail
     adaptive_fine = key(
