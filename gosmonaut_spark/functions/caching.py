@@ -1,5 +1,5 @@
 """Cached-intermediate bookkeeping for operators that persist shared
-subtrees (minhash signatures, tile base layers, ...).
+subtrees (minhash shingles, relation member tables, ...).
 
 Two release mechanisms, because a DataFrame attribute alone is fragile —
 any further transformation (select/filter/join) returns a NEW object

@@ -287,7 +287,6 @@ def assemble_ways(
 
 def assemble_relations(
     rels_sel: DataFrame,
-    members: DataFrame,
     assembled_ways: DataFrame,
     nodes: DataFrame,
     materialize_members: bool = False,
@@ -321,42 +320,31 @@ def assemble_relations(
     +2-3s on tag-histogram-shaped consumers) — there the resolve keeps
     the merge-hinted SMJ.
     """
-    mem = members.join(
-        rels_sel.select(F.col("id").alias("rel_id")), "rel_id", "left_semi"
-    )
+    from ..sources.pages import rel_members
 
-    # persist: the member table (skinny — ids, pos, role) feeds FOUR
-    # consumers below (both prune-id sets + both typed resolve branches);
-    # without it each consumer re-runs the relation scan + member explode
-    # (measured ~8s per recompute at the bench scale fixture). The handle
-    # rides the returned DataFrame (release_cached / cached_scope).
+    # persist: the member table (skinny — ids, pos, role) feeds both typed
+    # resolves (and, in the sort-merge branch, both prune-id sets); without
+    # it each consumer re-runs the relation scan + member explode (measured
+    # ~8s per recompute at the bench scale fixture). The handle rides the
+    # returned DataFrame (release_cached / cached_scope).
     # coalesce first: the member table inherits the upstream snapshot's
-    # file-grained partitioning (one tiny file per decode task — 128 blocks
-    # of ~5k rows each at the bench fixture), and every one of the five
-    # consumer jobs then schedules 128 tasks over near-empty cached blocks
-    # — measured ~8s of pure per-task overhead across the concurrent
-    # consumers. A narrow coalesce keeps the scan parallel enough for the
-    # skinny explode while giving consumers sensibly-sized blocks; sized
-    # from defaultParallelism so a real cluster keeps one block per ~4
-    # cores rather than a constant tuned to this box.
-    n_coalesce = max(
-        members.sparkSession.sparkContext.defaultParallelism // 4, 8
-    )
-    mem = mem.filter(F.col("member_type") != RELATION_TYPE)
+    # file-grained partitioning (128 blocks of ~5k rows each at the bench
+    # fixture), and every consumer job then schedules 128 tasks over
+    # near-empty cached blocks — measured ~8s of pure per-task overhead.
+    # Sized from defaultParallelism so a real cluster keeps one block per
+    # ~4 cores rather than a constant tuned to this box.
+    n_coalesce = max(rels_sel.sparkSession.sparkContext.defaultParallelism // 4, 8)
+    mem = rel_members(rels_sel).filter(F.col("member_type") != RELATION_TYPE)
     if materialize_members:
         mem = mem.coalesce(n_coalesce)
     mem = mem.persist()
     # materialize the cache EAGERLY, before the plan fans out: AQE executes
-    # the four consumers as CONCURRENT stage jobs, and with a cold cache
-    # they race on the same uncomputed blocks — every task of every
-    # consumer blocks on (or duplicates) the block computation. Measured on
-    # the bench fixture (32 cores): four concurrent ~25s jobs whose task
-    # run-time was 3.5x their CPU time (pure cache-lock wait) collapsed to
-    # one sub-second count + fast consumers; the relations pass fell from
-    # ~51-56s to ~22s. The count is one pass over the skinny cached table —
-    # the standard materialize-before-fanout step — and the materialized
-    # table's size decides the broadcast below. (Skipped in the lazy
-    # single-query pipeline — see the docstring.)
+    # the consumers as CONCURRENT stage jobs, and with a cold cache they
+    # race on the same uncomputed blocks. Measured on the bench fixture (32
+    # cores): four concurrent ~25s jobs whose task run-time was 3.5x their
+    # CPU time (pure cache-lock wait) collapsed to one sub-second count +
+    # fast consumers. The materialized table's size decides the broadcast
+    # below. (Skipped in the lazy single-query pipeline — see the docstring.)
     broadcast = False
     if materialize_members:
         mem.count()
@@ -366,48 +354,40 @@ def assemble_relations(
         limit = mem.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         broadcast = size <= limit
 
-    # Prune BOTH build sides to ids actually referenced by a member BEFORE
-    # their heavy shuffle — the relational form of the reference's bitset
-    # trackers (/root/reference/gosmonaut.go:245-288: only tracked ids are
-    # cached for the final scan). Without it the member resolve shuffles
-    # every assembled way's full node array and every node struct in the
-    # corpus to satisfy a member table orders of magnitude smaller
-    # (measured at the bench scale fixture: 22M node structs + 1.2M nested
-    # arrays shuffled for 640k members — the pass ran core-count-invariant
-    # because shuffle IO, not CPU, was the floor). The distinct id sets are
-    # small relative to the entity tables, so the planner resolves these
-    # semi joins as broadcast probes riding the entity scans — zero extra
-    # shuffle of the big sides; at cluster scale AQE picks shuffled semi
-    # joins if the id sets outgrow the broadcast threshold, which is still
-    # strictly less data than the unpruned resolve.
-    way_member_ids = mem.filter(F.col("member_type") == WAY_TYPE).select(
-        F.col("member_id").alias("id")
-    ).distinct()
-    node_member_ids = mem.filter(F.col("member_type") == NODE_TYPE).select(
-        F.col("member_id").alias("id")
-    ).distinct()
-    way_side = assembled_ways.join(way_member_ids, "id", "left_semi").select(
+    mem_w = mem.filter(F.col("member_type") == WAY_TYPE)
+    mem_n = mem.filter(F.col("member_type") == NODE_TYPE)
+    way_side = assembled_ways.select(
         F.col("id").alias("member_id"),
         F.struct("id", "tags", "nodes").alias("way"),
     )
-    node_side = nodes.join(node_member_ids, "id", "left_semi").select(
+    node_side = nodes.select(
         F.col("id").alias("member_id"),
         F.struct("id", "lat", "lon", "tags").alias("node"),
     )
-
-    mem_w = mem.filter(F.col("member_type") == WAY_TYPE)
-    mem_n = mem.filter(F.col("member_type") == NODE_TYPE)
     if broadcast:
         # broadcast the SKINNY member side (bounded by its measured size
-        # above): the heavy way/node structs stream through the join in
-        # their scan partitioning — no shuffle, no sort of nested arrays.
+        # above): the heavy way/node structs stream through the inner join
+        # in their scan partitioning — no shuffle, no sort of nested arrays,
+        # and the join itself keeps only members, so nothing to prune.
         # The entity side is NEVER the build side (arrays are
-        # memory-hostile in a hashed relation; the old merge hint existed
-        # to prevent exactly that), and the heavy bytes now move only once:
-        # in the per-relation re-agg below.
+        # memory-hostile in a hashed relation), and the heavy bytes move
+        # only once: in the per-relation re-agg below.
         w = way_side.join(F.broadcast(mem_w), "member_id", "inner")
         n = node_side.join(F.broadcast(mem_n), "member_id", "inner")
     else:
+        # Prune BOTH entity sides to ids actually referenced by a member
+        # BEFORE their heavy shuffle — the relational form of the
+        # reference's bitset trackers (/root/reference/gosmonaut.go:245-288).
+        # Without it the sort-merge resolve shuffles every assembled way's
+        # node array and every node struct for a member table orders of
+        # magnitude smaller (measured at the bench scale fixture: 22M node
+        # structs + 1.2M nested arrays shuffled for 640k members). The
+        # distinct id sets are small, so these semi joins run as broadcast
+        # probes riding the entity scans.
+        way_ids = mem_w.select("member_id").distinct()
+        node_ids = mem_n.select("member_id").distinct()
+        way_side = way_side.join(way_ids, "member_id", "left_semi")
+        node_side = node_side.join(node_ids, "member_id", "left_semi")
         w = mem_w.join(way_side.hint("merge"), "member_id", "inner")  # arrays: no broadcast
         n = mem_n.join(node_side, "member_id", "inner")
     keys = ["rel_id", "pos", "role", "member_type"]

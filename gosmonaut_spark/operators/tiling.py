@@ -80,35 +80,25 @@ def tile_pyramid(
     lat: str = "lat",
     lon: str = "lon",
 ) -> DataFrame:
-    """Tiles for every resolution in [min_res, max_res]: one scan builds the
-    finest layer, coarser layers roll up from it (log-fan-in, the idiomatic
-    raster pyramid — never re-scan the base table per level).
-
-    The finest layer is persisted: Catalyst does NOT dedupe the common
-    subtree across union branches, so without the cache every coarser
-    level re-scans and re-aggregates the full points table (L extra scans
-    for an L-level pyramid — measured as the whole cost of the operator).
-    The cached layer is tiles, not points: tiny at any input scale. In a
-    long-lived session, release it with ``caching.release_cached(result)``
-    after the pyramid is consumed.
-
-    Coarser layers roll up from the cached finest DIRECTLY (multi-level
-    ``cell_parent`` is one integer expression), not through a chained
-    level-by-level re-agg: the chain made union branch k re-run k
-    exchanges+aggregates from the cache (an L-level pyramid executed
-    O(L^2) tiny shuffles — measured as most of the operator's wall at the
-    bench fixture), where the direct form runs exactly one per layer.
-    Integer sums are associative, so the layer contents are identical."""
-    from ..functions.caching import attach_cached
-
-    finest = points_to_tiles(points, max_res, lat, lon).persist()
-    layers = [finest]
-    for r in range(max_res - 1, min_res - 1, -1):
-        layers.append(rollup_tiles(finest, max_res, r))
-    out = layers[0]
-    for l in layers[1:]:
-        out = out.unionByName(l)
-    return attach_cached(out, [finest])
+    """Tiles for every resolution in [min_res, max_res] in two
+    aggregations: the points aggregate once into the finest layer, each
+    finest tile expands into one ``(res, parent cell, n_points)`` row per
+    level (multi-level ``cell_parent`` is one integer expression), and one
+    ``groupBy(res, cell)`` sums them — combined map-side, so its exchange
+    moves about one row per (partition, layer cell). The points are never
+    re-scanned per level, and nothing is cached, so there is nothing to
+    release. Integer sums are associative, so every layer equals a direct
+    aggregation at its resolution."""
+    finest = points_to_tiles(points, max_res, lat, lon)
+    levels = [
+        F.struct(F.lit(r).alias("res"), cell_parent("cell", max_res, r).alias("cell"), "n_points")
+        for r in range(max_res, min_res - 1, -1)
+    ]
+    return (
+        finest.select(F.inline(F.array(*levels)))
+        .groupBy("res", "cell")
+        .agg(F.sum("n_points").alias("n_points"))
+    )
 
 
 def write_tiles(tiles: DataFrame, path: str, n_buckets: int | None = None) -> None:

@@ -22,14 +22,17 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.caching import read_counters, release_cached
 
 
-def _parquet_meta_rows(snap_dir: str) -> list[int] | None:
-    """Row count of every part file of a committed snapshot, in path
-    order, from parquet footer metadata only (no spark job, no data pages
-    read). Returns None when no part file was read (a missing or empty
+def _parquet_meta_rows(snap_dir: str) -> list[tuple[str, int]] | None:
+    """``(partition directory, row count)`` of every part file of a
+    committed snapshot, in path order, from parquet footer metadata only
+    (no spark job, no data pages read); the directory is relative to
+    ``snap_dir`` (``""`` when the snapshot is not hive-partitioned).
+    Returns None when no part file was read (a missing or empty
     directory, or a non-local URI, which ``os.walk`` does not see) or any
     part file's footer cannot be read — callers fall back to a real
     count."""
@@ -42,9 +45,22 @@ def _parquet_meta_rows(snap_dir: str) -> list[int] | None:
             for f in files
             if f.endswith(".parquet") and not f.startswith("_")
         )
-        return [pq.ParquetFile(p).metadata.num_rows for p in paths] or None
+        return [
+            (os.path.dirname(os.path.relpath(p, snap_dir)), pq.ParquetFile(p).metadata.num_rows)
+            for p in paths
+        ] or None
     except Exception:
         return None
+
+
+def _max_partition_skew(files: list[tuple[str, int]]) -> float:
+    """Largest max/mean of rows per part file within one partition
+    directory: task skew, not the row mix across a hive partitioning's
+    values (``entities``' node/way/relation directories)."""
+    by_dir: dict[str, list[int]] = {}
+    for d, n in files:
+        by_dir.setdefault(d, []).append(n)
+    return round(max(max(v) / max(sum(v) / len(v), 1) for v in by_dir.values()), 2)
 
 
 class CheckpointStore:
@@ -150,7 +166,15 @@ class CheckpointStore:
                 f"{self.retain}); retained ids: "
                 f"{[s['id'] for s in m['snapshots'] if not s.get('expired')]}"
             )
-        return self.spark.read.parquet(self._snap_dir(name, sid))
+        return self._read_snap(self._snap_dir(name, sid), entry.get("schema"))
+
+    def _read_snap(self, path: str, schema: dict | None) -> DataFrame:
+        """Read a snapshot dir with its recorded schema; entries written
+        before schemas were recorded infer it from the part files."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(path)
 
     def invalidate(self, name: str) -> None:
         """Drop the current pointer so the next run_pass recomputes (as a
@@ -363,10 +387,11 @@ class CheckpointStore:
         parent — the history stays rollback-able up to ``retain``).
 
         On compute, records lineage: snapshot id, wall ms, output rows,
-        rows per part file and their skew (the skew fingerprint — a hot
-        partition shows up here before it shows up as a straggler at
-        100TB), and the counters ``build``'s operator observed during the
-        write (``caching.read_counters``).
+        rows per part file and their skew within each partition directory
+        (the skew fingerprint — a hot partition shows up here before it
+        shows up as a straggler at 100TB), the written schema (so reads
+        need no inference), and the counters ``build``'s operator observed
+        during the write (``caching.read_counters``).
         ``partition_by``: hive-partition the snapshot (e.g. by entity type
         — the analog of the reference's per-type blob index,
         decode.go:341-383: later passes read only their partition).
@@ -394,21 +419,23 @@ class CheckpointStore:
         snap_dir = self._snap_dir(name, provisional)
         w.parquet(snap_dir)
         wall_ms = round((time.perf_counter() - t0) * 1000, 1)
-        out = self.spark.read.parquet(snap_dir)
+        # read back with the schema the pass was written with: no schema
+        # inference job, and an empty pass (no part file) still reads
+        schema = df.schema.jsonValue()
+        out = self._read_snap(snap_dir, schema)
         # footer-only counts (the Iceberg manifest-count analog): no spark
         # job over the snapshot just written. Unreadable footers fall back
         # to a real count, and the skew fields stay null, never 0.
-        rows = _parquet_meta_rows(snap_dir)
-        known = rows is not None
+        files = _parquet_meta_rows(snap_dir)
+        known = files is not None
+        rows = [n for _d, n in files] if known else None
         entry = {
             "pass": name,
             "wall_ms": wall_ms,
             "rows_out": sum(rows) if known else out.count(),
             "n_partitions": len(rows) if known else None,
             "rows_per_partition": rows,
-            "max_partition_skew": (
-                round(max(rows) / max(sum(rows) / len(rows), 1), 2) if known else None
-            ),
+            "max_partition_skew": _max_partition_skew(files) if known else None,
             # final now that the write has succeeded
             **read_counters(df),
         }
@@ -419,13 +446,14 @@ class CheckpointStore:
                 "rows": entry["rows_out"],
                 "wall_ms": wall_ms,
                 "partition_by": partition_by or [],
+                "schema": schema,
                 **(extra_meta or {}),
             },
         )
         if sid != provisional:
             # a concurrent writer took our id; move the data dir
             os.rename(snap_dir, self._snap_dir(name, sid))
-            out = self.spark.read.parquet(self._snap_dir(name, sid))
+            out = self._read_snap(self._snap_dir(name, sid), schema)
         entry["snapshot_id"] = sid
         self._append_lineage(entry)
         # the pass is durable: release any intermediates the operator
@@ -468,7 +496,6 @@ def run_pipeline_checkpointed(
     ways_raw = src.entities_ways_raw(ents)
     rels_raw = src.entities_relations_raw(ents)
 
-    members = src.rel_members(rels_raw)
     assembled_ways = ck.run_pass(
         "assembled_ways",
         lambda: assemble_ways(ways_raw, nodes, mode=mode),
@@ -477,7 +504,6 @@ def run_pipeline_checkpointed(
         "relations",
         lambda: assemble_relations(
             rels_raw,
-            members,
             assembled_ways,
             nodes,
             # the member table derives from the entities parquet snapshot

@@ -136,12 +136,11 @@ def run_pipeline(
     out_nodes = out_ways = out_rels = None
 
     # Pass R-dep (gosmonaut.go:147-153)
-    rels_needed = members = rel_way_ids = None
+    rels_needed = rel_way_ids = None
     if want_rels:
         rels_raw = src.extract_relations_raw(pages)
         rels_needed = rels_raw.filter(pred)
-        members = src.rel_members(rels_needed)
-        rel_way_ids = needed_way_ids(members)
+        rel_way_ids = needed_way_ids(src.rel_members(rels_needed))
 
     # Nodes are extracted when anything needs them
     nodes_all = None
@@ -163,7 +162,7 @@ def run_pipeline(
 
     # Pass R (gosmonaut.go:200-211)
     if want_rels:
-        out_rels = assemble_relations(rels_needed, members, assembled, nodes_all)
+        out_rels = assemble_relations(rels_needed, assembled, nodes_all)
 
     return PipelineResult(out_nodes, out_ways, out_rels, AssemblyMetrics())
 

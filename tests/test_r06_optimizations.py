@@ -66,23 +66,24 @@ def test_assemble_relations_broadcast_equals_smj(spark, pages_t1):
     nodes = src.extract_nodes(pages_t1)
     ways_raw = src.extract_ways_raw(pages_t1)
     rels_raw = src.extract_relations_raw(pages_t1)
-    members = src.rel_members(rels_raw)
     aw = assemble_ways(ways_raw, nodes, mode=SKIP_MISSING)
 
     # broadcast path (the member table fits the session's broadcast
     # threshold) vs the SMJ fallback, forced by disabling that threshold
     bcast = assemble_relations(
-        rels_raw, members, aw, nodes, materialize_members=True
+        rels_raw, aw, nodes, materialize_members=True
     )
     bcast_rows = _rows(bcast)
     plan = bcast._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin [member_id" in plan, plan
+    # the inner join already keeps only members: no prune semi joins
+    assert "LeftSemi" not in plan, plan
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
         smj = assemble_relations(
-            rels_raw, members, aw, nodes, materialize_members=True
+            rels_raw, aw, nodes, materialize_members=True
         )
         smj_rows = _rows(smj)
         plan = smj._jdf.queryExecution().executedPlan().toString()
@@ -93,7 +94,7 @@ def test_assemble_relations_broadcast_equals_smj(spark, pages_t1):
     assert "BroadcastHashJoin [member_id" not in plan, plan
     assert bcast_rows == smj_rows
     # lazy (non-materialized) path — the r5-shaped plan — same rows too
-    lazy = assemble_relations(rels_raw, members, aw, nodes)
+    lazy = assemble_relations(rels_raw, aw, nodes)
     assert _rows(lazy) == bcast_rows
 
 
@@ -166,6 +167,8 @@ def test_tile_pyramid_direct_equals_chained(spark):
 
 
 def test_run_pass_footer_count(spark, tmp_path):
+    import os
+
     from gosmonaut_spark.plans.checkpoint import CheckpointStore, _parquet_meta_rows
 
     ck = CheckpointStore(spark, str(tmp_path))
@@ -176,16 +179,25 @@ def test_run_pass_footer_count(spark, tmp_path):
     snaps = ck.snapshots("t")
     assert snaps[-1]["rows"] == 1234 == out.count()
     snap_dir = ck._snap_dir("t", snaps[-1]["id"])
-    per_file = _parquet_meta_rows(snap_dir)
+    files = _parquet_meta_rows(snap_dir)
+    per_file = [n for _d, n in files]
     assert sum(per_file) == 1234
-    # one count per part file, equal to a spark count grouped by file
+    # one (partition directory, count) per part file, equal to a spark
+    # count grouped by file
     by_file = out.groupBy(F.input_file_name().alias("f")).count().collect()
-    assert sorted(per_file) == sorted(r["count"] for r in by_file)
-    # the lineage entry carries the same counts and their skew
+    by_dir = {}
+    for r in by_file:
+        by_dir.setdefault(os.path.basename(os.path.dirname(r["f"])), []).append(r["count"])
+    assert sorted(files) == sorted((d, n) for d, ns in by_dir.items() for n in ns)
+    assert sorted(by_dir) == ["p=0", "p=1", "p=2"]
+    # the lineage entry carries the same counts, and the skew is the
+    # largest max/mean within one partition directory
     (e,) = ck.lineage()
     assert e["rows_out"] == 1234 and e["rows_per_partition"] == per_file
     assert e["n_partitions"] == len(per_file) == len(by_file)
-    assert e["max_partition_skew"] == round(max(per_file) / (1234 / len(per_file)), 2)
+    assert e["max_partition_skew"] == max(
+        round(max(ns) / (sum(ns) / len(ns)), 2) for ns in by_dir.values()
+    )
     # no part file read -> None (so run_pass falls back to a real count),
     # never a silent 0
     assert _parquet_meta_rows(str(tmp_path / "missing")) is None

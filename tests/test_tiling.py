@@ -75,6 +75,42 @@ def test_pyramid_rollup_sums(spark, world):
         assert by_res[res] == dict(zip(uniq.tolist(), counts.tolist()))
 
 
+def test_tile_pyramid_plan_is_two_aggregations(spark):
+    """The pyramid is one aggregation of the points and one over the
+    expanded tiles: no cache, no union, two shuffles, at most three Spark
+    jobs for a collect, and the same output schema."""
+    import time
+
+    pts = spark.range(3000).select(
+        ((F.col("id") % 171) - 85.0 + 0.25).alias("lat"),
+        ((F.col("id") % 359) - 179.0 + 0.25).alias("lon"),
+    )
+    out = tile_pyramid(pts, 5, 12)
+    assert out.schema.simpleString() == "struct<res:int,cell:bigint,n_points:bigint>"
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    assert "Union" not in plan, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("tile-pyramid", "collect")
+        out.collect()
+        # a marker job: the listener bus delivers job starts in submission
+        # order, so once the marker shows, every pyramid job shows too
+        sc.setJobGroup("tile-pyramid-marker", "marker")
+        sc.parallelize([0], 1).count()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("tile-pyramid-marker"):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    assert len(tracker.getJobIdsForGroup("tile-pyramid")) <= 3
+
+
 def _numpy_raycast(plat, plon, lats, lons):
     """Independent PNPOLY oracle (vectorized over points, loop over edges)."""
     inside = np.zeros(plat.shape, dtype=bool)

@@ -9,7 +9,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROUND = "r11"
+ROUND = "r12"
 
 
 def main():
@@ -43,7 +43,6 @@ def main():
     nodes = src.entities_nodes(ents)
     ways_raw = src.entities_ways_raw(ents)
     rels_raw = src.entities_relations_raw(ents)
-    members = src.rel_members(rels_raw)
     aw = ck.run_pass("assembled_ways", lambda: assemble_ways(ways_raw, nodes, mode=SKIP_MISSING))
 
     def cap(name, df):
@@ -60,7 +59,7 @@ def main():
     # configuration the bench's relations pass actually runs
     cap(
         "assemble_relations",
-        assemble_relations(rels_raw, members, aw, nodes, materialize_members=True),
+        assemble_relations(rels_raw, aw, nodes, materialize_members=True),
     )
 
     nodes_slim = nodes.select("id", "lat", "lon")

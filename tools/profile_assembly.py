@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Stage-isolated profiling of the decode_assemble passes (guide §1.4):
-noop-sink timings for each sub-stage of the relations/ways assembly so the
+noop-sink timings for the sub-stages of each assembly pass so the
 optimization targets the stage that actually burns the wall, not the pass
 total. NOT part of the frozen bench contract — numbers are cited in
 OPTIMIZATION_r06.md only."""
@@ -79,55 +79,15 @@ def main():
         "assembled_ways",
         lambda: assemble_ways(ways_raw, nodes, mode=SKIP_MISSING)))
 
-    # pass 3: relations — sub-stages
-    members = src.rel_members(rels_raw)
-    from gosmonaut_spark.format.gpb import NODE_TYPE, RELATION_TYPE, WAY_TYPE
-
-    mem = members.join(
-        rels_raw.select(F.col("id").alias("rel_id")), "rel_id", "left_semi"
-    ).filter(F.col("member_type") != RELATION_TYPE)
-    t("rels:members->noop", lambda: noop(mem))
-
-    mem_p = mem.persist()
-    mem_p.count()
-    way_member_ids = mem_p.filter(F.col("member_type") == WAY_TYPE).select(
-        F.col("member_id").alias("id")).distinct()
-    node_member_ids = mem_p.filter(F.col("member_type") == NODE_TYPE).select(
-        F.col("member_id").alias("id")).distinct()
-    way_side = aw.join(way_member_ids, "id", "left_semi").select(
-        F.col("id").alias("member_id"), F.struct("id", "tags", "nodes").alias("way"))
-    node_side2 = nodes.join(node_member_ids, "id", "left_semi").select(
-        F.col("id").alias("member_id"), F.struct("id", "lat", "lon", "tags").alias("node"))
-    NODE_STRUCT = "struct<id:bigint,lat:double,lon:double,tags:map<string,string>>"
-    w = (mem_p.filter(F.col("member_type") == WAY_TYPE)
-         .join(way_side.hint("merge"), "member_id", "inner")
-         .withColumn("node", F.lit(None).cast(NODE_STRUCT)))
-    t("rels:way-resolve->noop", lambda: noop(w))
-    n2 = (mem_p.filter(F.col("member_type") == NODE_TYPE)
-          .join(node_side2, "member_id", "inner")
-          .withColumn("way", F.lit(None).cast(w.schema["way"].dataType.simpleString())))
-    t("rels:node-resolve->noop", lambda: noop(n2))
-
-    resolved = w.select("rel_id", "pos", "role", "member_type", "node", "way").unionByName(
-        n2.select("rel_id", "pos", "role", "member_type", "node", "way"))
-    from gosmonaut_spark.operators.assembly import ordered_collect_rows
-    member_struct = F.struct(
-        F.col("role"),
-        F.when(F.col("member_type") == WAY_TYPE, F.lit("way")).otherwise(F.lit("node")).alias("type"),
-        F.col("node"), F.col("way"))
-    agg = ordered_collect_rows(resolved, "rel_id", "pos", member_struct, "members")
-    t("rels:agg->noop", lambda: noop(agg))
-
-    out = rels_raw.select("id", "tags", "url").join(
-        agg.withColumnRenamed("rel_id", "id").hint("merge"), "id", "left")
-    empty = F.array().cast(agg.schema["members"].dataType.simpleString())
-    out = out.withColumn("members", F.coalesce(F.col("members"), empty))
-    t("rels:full->noop", lambda: noop(out))
-    mem_p.unpersist()
-
+    # pass 3: relations — the operator itself, in both member-table modes
+    # (materialized, as run_pipeline_checkpointed runs it, and lazy, as
+    # run_pipeline does), then the pass with its snapshot write
+    t("rels:materialized->noop", lambda: noop(
+        assemble_relations(rels_raw, aw, nodes, materialize_members=True)))
+    t("rels:lazy->noop", lambda: noop(assemble_relations(rels_raw, aw, nodes)))
     t("pass:relations(write)", lambda: ck.run_pass(
         "relations",
-        lambda: assemble_relations(rels_raw, members, aw, nodes)))
+        lambda: assemble_relations(rels_raw, aw, nodes, materialize_members=True)))
 
     print(timings)
     # snapshot sizes
