@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 from ..functions.cells import cell_expr, cell_from_xy, cell_x, cell_y
 from ..functions.geo import EARTH_RADIUS_M, haversine_m
 
+# knn_join_adaptive answers an uncertified tail of at most this many
+# queries with one brute round (see its docstring)
+BRUTE_TAIL_MAX = 256
+
 
 def _ring_cells(q: DataFrame, res: int, rx: int | Column, ry: int) -> DataFrame:
     """Explode each row of ``q`` to the cells around its grid coordinates
@@ -170,7 +174,6 @@ def knn_join_adaptive(
     min_res: int = 3,
     query_id: str = "query_id",
     target_id: str = "target_id",
-    brute_tail_max: int = 256,
 ) -> DataFrame:
     """EXACT kNN at ring-join cost: coarsening escalation + brute tail.
 
@@ -192,8 +195,8 @@ def knn_join_adaptive(
     (/root/reference/gosmonaut.go:147-216: passes launch only when the
     dependency tracker is non-empty).
 
-    ``brute_tail_max``: once the uncertified tail shrinks to at most this
-    many queries, jump straight to :func:`knn_brute` instead of walking
+    Once the uncertified tail shrinks to at most ``BRUTE_TAIL_MAX``
+    queries, jump straight to :func:`knn_brute` instead of walking
     every remaining coarser level. Both paths are EXACT, so the result is
     identical for any cut-over point; the trade is |pending| x |targets|
     distance terms (broadcast-NL, one extra scan of targets) against one
@@ -209,6 +212,7 @@ def knn_join_adaptive(
         F.col("lon").alias("lon"),
     )
     parts: list[DataFrame] = []
+    n_pending = None  # no ring level run yet: every query is pending
     for cur_res in range(res, min_res - 1, -1):
         cand = knn_join(
             pending.select(F.col("query_id").alias(query_id), "lat", "lon"),
@@ -243,26 +247,12 @@ def knn_join_adaptive(
         # checkpoint dir instead (same pass-snapshot discipline as B11).
         pending = pending.join(certified, "query_id", "left_anti").localCheckpoint()
         n_pending = pending.count()
-        if n_pending == 0:
+        if n_pending <= BRUTE_TAIL_MAX:
             break
-        if n_pending <= brute_tail_max and cur_res > min_res:
-            # small tail: one exact brute round replaces every remaining
-            # ring level (identical rows — see docstring)
-            parts.append(
-                knn_brute(
-                    pending.select(F.col("query_id").alias(query_id), "lat", "lon"),
-                    targets,
-                    k,
-                    query_id=query_id,
-                    target_id=target_id,
-                ).select(
-                    F.col(query_id).alias("query_id"),
-                    F.col(target_id).alias("target_id"),
-                    "dist_m",
-                )
-            )
-            break
-    else:
+    if n_pending != 0:
+        # the uncertified tail, at min_res or once it is small: one exact
+        # brute round replaces every remaining ring level (identical rows
+        # — see docstring)
         parts.append(
             knn_brute(
                 pending.select(F.col("query_id").alias(query_id), "lat", "lon"),

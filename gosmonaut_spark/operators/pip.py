@@ -2,10 +2,9 @@
 
 The join is *encoded in the data*: polygons are expanded to the grid cells
 their bbox covers (native ``sequence``/``transform`` — no UDF), points carry
-their cell, and the planner sees a plain equi-join on ``cell`` — broadcast
-when the polygon side is small, shuffled hash/SMJ otherwise, AQE free to
-re-plan. The exact test is a ray-cast folded with ``aggregate`` over the
-vertex arrays — still a native Catalyst expression, whole-stage codegen'd.
+their cell, and the planner sees a plain equi-join on ``cell`` against the
+broadcast cover. The exact test is an unrolled ray cast over broadcast
+vertex chunks — native Catalyst expressions, whole-stage codegen'd.
 
 This generalizes the reference's broadcast build-side pattern
 (/root/reference/binary_entity_map.go:17-90: hash-bucketed sorted array
@@ -21,8 +20,17 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..functions.caching import attach_cached
 from ..functions.cells import cell_expr, cell_from_xy, cell_x, cell_y
+
+# Adaptive cover: a polygon's bbox cover may coarsen up to COVER_LEVELS
+# levels below the pruning res and holds at most COVER_MAX_CELLS cells
+# (a continent-sized polygon would otherwise explode to millions of
+# cells at res 11), so the cover count is bounded per polygon.
+COVER_LEVELS = 8
+COVER_MAX_CELLS = 64
 
 
 def polygons_from_ways(assembled_ways: DataFrame) -> DataFrame:
@@ -42,48 +50,41 @@ def polygons_from_ways(assembled_ways: DataFrame) -> DataFrame:
     )
 
 
-def polygon_cover_cells(
-    polygons: DataFrame,
-    res: int,
-    res_min: int | None = None,
-    max_cells: int = 64,
-    levels: list[int] | None = None,
-) -> DataFrame:
-    """Explode each polygon to the cells its bbox covers — pure native
-    expressions (sequence over the x/y cell ranges).
+def _cell_ranges(r: int, min_lat, max_lat, min_lon, max_lon):
+    """``(x0, x1, y0, y1)``: the res-``r`` cell ranges a bbox covers
+    (y grows downward, north -> south, so ``max_lat`` gives ``y0``)."""
+    return cell_x(min_lon, r), cell_x(max_lon, r), cell_y(max_lat, r), cell_y(min_lat, r)
 
-    *Adaptive resolution*: each polygon picks the finest res in
-    ``[res_min, res]`` whose bbox cover stays <= ``max_cells`` (a
-    continent-sized polygon would otherwise explode to millions of cells
-    at res 11 — the cover count is bounded per polygon by construction).
-    Cell ids are self-describing (res embedded in the flag bit), so a
-    mixed-resolution cover table still joins on one ``cell`` column.
 
-    ``levels``: optional pre-measured set of resolutions the adaptive rule
-    actually picks for THIS polygon table (e.g. from a collect_set over
-    the identical ``chosen`` expression, as the edges PIP engine already
-    computes). The when-chain is then built only over those levels — the
-    selection rule is unchanged for every row (a level outside the
-    observed set can never be chosen for these rows), but the expression
-    tree, its py4j construction cost and its codegen size shrink from
-    O(res - res_min) branches to O(|levels|).
-    """
-    if res_min is None:
-        res_min = max(0, res - 6)
-    p = polygons.withColumn("min_lat", F.array_min("lats")).withColumn(
-        "max_lat", F.array_max("lats")
-    ).withColumn("min_lon", F.array_min("lons")).withColumn(
-        "max_lon", F.array_max("lons")
-    )
+def cover_res(res: int) -> Column:
+    """The cover resolution of each ``lats``/``lons`` ring: the finest res
+    in ``[res - COVER_LEVELS, res]`` whose bbox cover is at most
+    ``COVER_MAX_CELLS`` cells; the coarsest is the fallback."""
+    bbox = (F.array_min("lats"), F.array_max("lats"), F.array_min("lons"), F.array_max("lons"))
+    res_min = max(0, res - COVER_LEVELS)
+    chosen = F.lit(res_min)
+    for r in range(res_min + 1, res + 1):
+        x0, x1, y0, y1 = _cell_ranges(r, *bbox)
+        n_cells = (x1 - x0 + 1) * (y1 - y0 + 1)
+        chosen = F.when(n_cells <= F.lit(COVER_MAX_CELLS), F.lit(r)).otherwise(chosen)
+    return chosen
 
-    def span(r: int):
-        x0, x1 = cell_x("min_lon", r), cell_x("max_lon", r)
-        # y grows downward (north -> south), so max_lat gives y0
-        y0, y1 = cell_y("max_lat", r), cell_y("min_lat", r)
-        return x0, x1, y0, y1, (x1 - x0 + 1) * (y1 - y0 + 1)
+
+def polygon_cover_cells(polygons: DataFrame, levels: list[int]) -> DataFrame:
+    """Explode each polygon to the cells its bbox covers at its
+    ``cover_res`` column (see :func:`cover_res`) — pure native expressions
+    (sequence over the x/y cell ranges). ``levels`` is the set of
+    resolutions that column holds, so the when-chain has one branch per
+    level in use. Cell ids are self-describing (res embedded in the flag
+    bit), so a mixed-resolution cover table still joins on one ``cell``
+    column."""
+    p = polygons.withColumns({
+        "min_lat": F.array_min("lats"), "max_lat": F.array_max("lats"),
+        "min_lon": F.array_min("lons"), "max_lon": F.array_max("lons"),
+    })
 
     def cells_at(r: int):
-        x0, x1, y0, y1, _n = span(r)
+        x0, x1, y0, y1 = _cell_ranges(r, "min_lat", "max_lat", "min_lon", "max_lon")
         return F.flatten(
             F.transform(
                 F.sequence(x0, x1),
@@ -93,11 +94,9 @@ def polygon_cover_cells(
             )
         )
 
-    # finest res whose cover is small enough; res_min is the fallback
-    lvl = sorted(set(levels)) if levels else list(range(res_min, res + 1))
-    cells = cells_at(lvl[0])
-    for r in lvl[1:]:
-        cells = F.when(span(r)[4] <= F.lit(max_cells), cells_at(r)).otherwise(cells)
+    cells = cells_at(levels[0])
+    for r in levels[1:]:
+        cells = F.when(F.col("cover_res") == r, cells_at(r)).otherwise(cells)
 
     return p.select("polygon_id", "lats", "lons", F.explode(cells).alias("cell"))
 
@@ -146,29 +145,22 @@ def point_in_polygon_join(
     whole-stage-codegen) runs before the ray cast and kills most
     non-hits cheaply.
 
-    ``engine``:
+    The polygon side is two broadcast DataFrame plans: the adaptive cover
+    and fixed-width vertex chunks. The exact test is a codegen crossing
+    indicator summed where the broadcast equi-join produced each
+    candidate, plus a parity hash-aggregate (map-side combined) for rings
+    longer than one chunk. Zero Python, zero Arrow, no driver
+    ``collect()``: the polygon side is bounded by Spark's broadcast limits
+    (the 8 GiB broadcast cap). Rows are asserted equal to a brute-force
+    numpy oracle in tests.
 
-    * ``"edges"`` (default) — the dense-workload scale path: broadcast
-      edges table + codegen crossing indicator + parity hash-aggregate.
-      Zero Python, zero Arrow, whole-stage codegen end to end; the only
-      shuffle is the final agg (map-side combined). The build side is a
-      DataFrame plan broadcast by the planner — no driver ``collect()``
-      anywhere, so it holds for any polygon side the 8 GiB broadcast cap
-      admits.
-    * ``"native"`` — aggregate-folded ray cast, pure Catalyst expression,
-      *shuffled* cover join: the path for polygon sides too large to
-      broadcast at all. Zero Python, but lambda evaluation is interpreted
-      (~10us/row): right for selective workloads.
-
-    Both engines produce identical rows (same IEEE arithmetic); asserted
-    against a brute-force numpy oracle in tests. Any other ``engine``
-    raises ``ValueError``.
+    ``engine`` names this one engine, ``"edges"``; any other value raises
+    ``ValueError``.
 
     Returns point columns + ``polygon_id``.
     """
-    if engine not in ("edges", "native"):
+    if engine != "edges":
         raise ValueError(f"unknown engine {engine!r}")
-    res_min = max(0, res - 8)
     # Re-alias every point column to a fresh attribute (`__pt_*`) before the
     # join. Points and polygons often share lineage (both derive from the
     # same extraction pass), so without this the two join inputs carry
@@ -177,71 +169,9 @@ def point_in_polygon_join(
     # where binding fails (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) — or worse,
     # silently filters the wrong side. Fresh aliases give the predicate
     # exprIds that exist only on the points side.
-    point_cols = [c for c in points.columns]
-    ptsr = points.select(
-        *[F.col(c).alias(f"__pt_{c}") for c in point_cols]
-    )
+    point_cols = points.columns
+    ptsr = points.select(*[F.col(c).alias(f"__pt_{c}") for c in point_cols])
     plat, plon = F.col(f"__pt_{lat}"), F.col(f"__pt_{lon}")
-    # the cover is multi-resolution (adaptive), so each point carries its
-    # cell at every level the cover actually uses; ids are disjoint per
-    # res, so one exploded column joins them all — explode factor = #levels
-    def pts_at(src: DataFrame, levels) -> DataFrame:
-        return src.withColumn(
-            "cell",
-            F.explode(
-                F.array(
-                    *[cell_expr(f"__pt_{lat}", f"__pt_{lon}", r) for r in levels]
-                )
-            ),
-        )
-
-    def bbox_candidates(pts: DataFrame, cover: DataFrame) -> DataFrame:
-        return pts.join(cover, "cell", "inner").filter(
-            (plat >= F.col("__pg_min_lat"))
-            & (plat <= F.col("__pg_max_lat"))
-            & (plon >= F.col("__pg_min_lon"))
-            & (plon <= F.col("__pg_max_lon"))
-        )
-
-    if engine == "native":
-        # distributed cover: repartition first — assembled-polygon tables
-        # often arrive AQE-coalesced into very few partitions, and the
-        # adaptive-cover expression (interpreted lambdas) would run
-        # single-threaded otherwise. The polygon-side payload columns are
-        # renamed to unique names *before* the join so the ray-cast
-        # expression can never bind to the wrong side (higher-order
-        # functions are fragile under self-join attribute dedup).
-        spread = polygons.repartition(
-            int(polygons.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        )
-        cover = polygon_cover_cells(spread, res, res_min=res_min).select(
-            F.col("polygon_id"),
-            F.col("cell"),
-            F.col("lats").alias("__pg_lats"),
-            F.col("lons").alias("__pg_lons"),
-            F.array_min("lats").alias("__pg_min_lat"),
-            F.array_max("lats").alias("__pg_max_lat"),
-            F.array_min("lons").alias("__pg_min_lon"),
-            F.array_max("lons").alias("__pg_max_lon"),
-        )
-        # cover is computed distributed — levels unknown at plan time, so
-        # carry every res in [res_min, res]
-        cand = bbox_candidates(pts_at(ptsr, range(res_min, res + 1)), cover)
-        hit = cand.select(
-            *[F.col(f"__pt_{c}").alias(c) for c in point_cols],
-            "polygon_id",
-            ray_cast_inside(
-                plat, plon, F.col("__pg_lats"), F.col("__pg_lons")
-            ).alias("__inside"),
-        )
-        return hit.filter(F.col("__inside")).drop("__inside")
-
-    # engine == "edges". Fully distributed build: the vertex/chunk table and
-    # the adaptive cover are DataFrame plans over the polygon side, broadcast
-    # by the planner (Tungsten-packed, 8 GiB-capped BroadcastExchange) — no
-    # driver .collect() into Python lists, so a fat polygon layer cannot OOM
-    # the driver.
-    from pyspark.storagelevel import StorageLevel
 
     spark = points.sparkSession
     n_shuffle = int(
@@ -249,43 +179,24 @@ def point_in_polygon_join(
             "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
         )
     )
-    cap = 24
-    max_cells = 64
     # slim projection cached: the stats action below and the main job
     # would otherwise both recompute the upstream assembly subtree.
     # O(#polygons) rows — the same order as the broadcast itself.
-    polys_slim = polygons.select("polygon_id", "lats", "lons").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    b_min_lat, b_max_lat = F.array_min("lats"), F.array_max("lats")
-    b_min_lon, b_max_lon = F.array_min("lons"), F.array_max("lons")
-
-    def _span_cells(r: int):
-        x0, x1 = cell_x(b_min_lon, r), cell_x(b_max_lon, r)
-        y0, y1 = cell_y(b_max_lat, r), cell_y(b_min_lat, r)
-        return (x1 - x0 + 1) * (y1 - y0 + 1)
-
-    # per-polygon chosen cover res — the identical adaptive rule
-    # polygon_cover_cells applies, so the point explode below is
-    # guaranteed to hit every cover row's resolution
-    chosen = F.lit(res_min)
-    for r in range(res_min + 1, res + 1):
-        chosen = F.when(_span_cells(r) <= F.lit(max_cells), F.lit(r)).otherwise(chosen)
+    polys_slim = polygons.select(
+        "polygon_id", "lats", "lons", cover_res(res).alias("cover_res")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     stats = polys_slim.agg(
-        F.collect_set(chosen).alias("levels"),
+        F.collect_set("cover_res").alias("levels"),
         F.max(F.size("lats")).alias("max_nv"),
     ).first()
-    used_res = sorted(stats["levels"] or [res_min])
+    used_res = sorted(stats["levels"] or [max(0, res - COVER_LEVELS)])
     max_ne = max(int(stats["max_nv"] or 2) - 1, 1)
-    cap = min(cap, max_ne)
+    cap = min(24, max_ne)
     n_chunks_max = -(-max_ne // cap)  # ceil: chunks of the largest ring
 
     cover = F.broadcast(
-        polygon_cover_cells(
-            polys_slim, res, res_min=res_min, levels=used_res
-        ).select(
+        polygon_cover_cells(polys_slim, used_res).select(
             "polygon_id",
             "cell",
             F.array_min("lats").alias("__pg_min_lat"),
@@ -325,24 +236,33 @@ def point_in_polygon_join(
     )
 
     # Round-robin the points BEFORE the explode+join: point tables arrive
-    # spatially clustered (city-sorted snapshots), so scan partitions map to
-    # geography and one dense-city partition produces most of the candidate
-    # pairs — the broadcast join is shuffle-free, so that skew flows straight
-    # into the exact-test stage as a single straggler task. Spreading the
-    # points side is far cheaper than shuffling the candidate side (B10 —
-    # skew handled before it exists).
-    # SKIPPED when the scan already arrives in >= half the session's
-    # shuffle partitions: the probe stage is map-side-only (both join
-    # sides are broadcast), so input splits that are already numerous
-    # and size-bounded parallelize identically and the round-robin
-    # exchange (a full extra pass + local sort over every point row —
-    # measured ~3-4s of the bench PIP leg) buys nothing. Single-file /
-    # coalesced inputs still get spread.
+    # spatially clustered (city-sorted snapshots), and the broadcast join
+    # is shuffle-free, so one dense-city partition would flow straight
+    # into the exact-test stage as a single straggler task (B10 — skew
+    # handled before it exists). SKIPPED when the scan already arrives in
+    # >= half the session's shuffle partitions: the probe stage is
+    # map-side-only, so numerous size-bounded input splits parallelize
+    # alike and the exchange (a full extra pass + local sort over every
+    # point row — measured ~3-4s of the bench PIP leg) buys nothing.
     if ptsr.rdd.getNumPartitions() >= max(n_shuffle // 2, 2):
         ptsr_rr = ptsr
     else:
         ptsr_rr = ptsr.repartition(n_shuffle)
-    cand = bbox_candidates(pts_at(ptsr_rr, used_res), cover)
+    # the cover is multi-resolution, so each point carries its cell at
+    # every level the cover uses; ids are disjoint per res, so one
+    # exploded column joins them all — explode factor = #levels
+    pts = ptsr_rr.withColumn(
+        "cell",
+        F.explode(
+            F.array(*[cell_expr(f"__pt_{lat}", f"__pt_{lon}", r) for r in used_res])
+        ),
+    )
+    cand = pts.join(cover, "cell", "inner").filter(
+        (plat >= F.col("__pg_min_lat"))
+        & (plat <= F.col("__pg_max_lat"))
+        & (plon >= F.col("__pg_min_lon"))
+        & (plon <= F.col("__pg_max_lon"))
+    )
 
     # unrolled whole-stage-codegen PNPOLY fold — arithmetic matches
     # ray_cast_inside bit-for-bit (see the r1 notes: ~1.5KB bytecode per
@@ -367,8 +287,6 @@ def point_in_polygon_join(
     for t in terms[1:]:
         crossings = crossings + t
 
-    from ..functions.caching import attach_cached
-
     cand_slim = cand.select(*[f"__pt_{c}" for c in point_cols], "polygon_id")
     if n_chunks_max == 1:
         joined = cand_slim.join(verts_df, "polygon_id")
@@ -380,11 +298,9 @@ def point_in_polygon_join(
             [polys_slim],
         )
     # chunked rings: aggregate the parity on a key derived purely from
-    # the DATA, not from physical placement. (The previous synthetic
-    # monotonically_increasing_id depended on partition index/row order
-    # downstream of a round-robin shuffle — an indeterminate-stage
-    # recomputation after executor loss could reassign ids, splitting/
-    # merging chunk groups and corrupting parity on retry.) The JSON
+    # the DATA, not from physical placement (a row id assigned after the
+    # round-robin shuffle could change when an indeterminate stage is
+    # recomputed, corrupting parity on retry). The JSON
     # rendering of the point row handles non-groupable map columns;
     # byte-identical duplicate point rows DO merge under this key, so
     # carry their multiplicity d explicitly: the group holds

@@ -958,11 +958,12 @@ def polyfill(
 
     Scale shape: candidate enumeration is the bbox span at ``res``, bounded
     per polygon by ``max_cells`` (a loud ``raise_error`` rides the
-    projection — a continent-sized ring at res 14 must go through
-    :func:`polygon_cover_cells`'s adaptive-res path instead, or be split by
-    compaction). The inside test is the native ray-cast fold from
-    operators/pip.py — no UDF, no shuffle: one narrow map over the polygon
-    table, output fan-out <= max_cells per row.
+    projection — a continent-sized ring at res 14 must be covered at a
+    coarser res, as :func:`point_in_polygon_join`'s adaptive cover does
+    with :func:`polygon_cover_cells`, or be split by compaction). The
+    inside test is the native ray-cast fold from operators/pip.py — no
+    UDF, no shuffle: one narrow map over the polygon table, output fan-out
+    <= max_cells per row.
     """
     from ..functions.cells import _grid_n, cell_from_xy, cell_x, cell_y
     from .pip import ray_cast_inside
@@ -989,7 +990,7 @@ def polyfill(
                     f"res {res} (polygon_id="
                 ),
                 F.col("polygon_id").cast("string"),
-                F.lit(") — use polygon_cover_cells' adaptive res or split"),
+                F.lit(") — use a coarser res or split the polygon"),
             )
         )
     )

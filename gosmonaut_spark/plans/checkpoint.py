@@ -53,10 +53,13 @@ def _parquet_meta_rows(snap_dir: str) -> list[tuple[str, int]] | None:
         return None
 
 
-def _max_partition_skew(files: list[tuple[str, int]]) -> float:
+def _max_partition_skew(files: list[tuple[str, int]]) -> float | None:
     """Largest max/mean of rows per part file within one partition
     directory: task skew, not the row mix across a hive partitioning's
-    values (``entities``' node/way/relation directories)."""
+    values (``entities``' node/way/relation directories). None when the
+    part files hold no row: there is nothing to measure."""
+    if not any(n for _d, n in files):
+        return None
     by_dir: dict[str, list[int]] = {}
     for d, n in files:
         by_dir.setdefault(d, []).append(n)

@@ -130,6 +130,8 @@ def test_empty_pages_commit_and_resume(spark, pages_t1, tmp_path):
     lineage = ck.lineage()
     assert [e["pass"] for e in lineage] == ["entities", "assembled_ways", "relations"]
     assert [e["rows_out"] for e in lineage] == [0, 0, 0]
+    # no row in any part file: skew is unmeasured, not 0
+    assert [e["max_partition_skew"] for e in lineage] == [None, None, None]
     assert {k: v.count() for k, v in dfs.items()} == dict.fromkeys(dfs, 0)
 
     ck2, dfs2 = run_pipeline_checkpointed(spark, pages_t1.limit(0), base)

@@ -103,8 +103,8 @@ def test_assemble_relations_broadcast_equals_smj(spark, pages_t1):
 # ---------------------------------------------------------------------------
 
 
-def test_knn_adaptive_brute_tail_cutover_identical(spark):
-    from gosmonaut_spark.operators.knn import knn_join_adaptive
+def test_knn_adaptive_brute_tail_cutover_identical(spark, monkeypatch):
+    from gosmonaut_spark.operators import knn
 
     n = 400
     pts = spark.range(n).select(
@@ -123,9 +123,11 @@ def test_knn_adaptive_brute_tail_cutover_identical(spark):
     )
     ts = pts.select(F.col("id").alias("target_id"), "lat", "lon")
     # huge tail bound -> cutover fires on the first uncertified tail;
-    # zero bound -> never fires (the r5 full escalation)
-    cut = knn_join_adaptive(qs, ts, k=3, res=7, ring=1, brute_tail_max=10**9)
-    full = knn_join_adaptive(qs, ts, k=3, res=7, ring=1, brute_tail_max=0)
+    # zero bound -> never fires (the full escalation)
+    monkeypatch.setattr(knn, "BRUTE_TAIL_MAX", 10**9)
+    cut = knn.knn_join_adaptive(qs, ts, k=3, res=7, ring=1)
+    monkeypatch.setattr(knn, "BRUTE_TAIL_MAX", 0)
+    full = knn.knn_join_adaptive(qs, ts, k=3, res=7, ring=1)
     assert _rows(cut) == _rows(full)
     # both exact: k rows per query (enough targets exist)
     assert cut.groupBy("query_id").count().filter(F.col("count") != 3).count() == 0

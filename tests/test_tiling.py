@@ -11,7 +11,10 @@ from pyspark.sql import functions as F
 from gosmonaut_spark.functions.cells import cell_np
 from gosmonaut_spark.operators.knn import knn_brute, knn_join, knn_join_adaptive
 from gosmonaut_spark.operators.pip import (
+    COVER_MAX_CELLS,
+    cover_res,
     point_in_polygon_join,
+    polygon_cover_cells,
     polygons_from_ways,
 )
 from gosmonaut_spark.operators.tiling import (
@@ -132,15 +135,6 @@ def test_pip_matches_bruteforce(spark, world):
             world["nodes"], polys, res=11
         ).select("id", "polygon_id").collect()
     }
-    # both exact engines must agree pair-for-pair (the call above used
-    # the default engine, "edges")
-    got_native = {
-        (r.id, r.polygon_id)
-        for r in point_in_polygon_join(
-            world["nodes"], polys, res=13, engine="native"
-        ).select("id", "polygon_id").collect()
-    }
-    assert got == got_native
     expected = set()
     for p in polys.collect():
         lats = np.array(p.lats)
@@ -172,7 +166,7 @@ def test_pip_edges_chunked_large_ring(spark):
     points = spark.createDataFrame(pts, "id long, lat double, lon double")
     got = {
         (r.id, r.polygon_id)
-        for r in point_in_polygon_join(points, polys, res=8, engine="edges").collect()
+        for r in point_in_polygon_join(points, polys, res=8).collect()
     }
     la, lo = np.array(lats), np.array(lons)
     plat = np.array([p[1] for p in pts])
@@ -207,7 +201,7 @@ def test_pip_edges_chunked_map_cols_and_duplicates(spark):
     points = spark.createDataFrame(
         pts, "id long, lat double, lon double, tags map<string,string>"
     )
-    out = point_in_polygon_join(points, polys, res=8, engine="edges").collect()
+    out = point_in_polygon_join(points, polys, res=8).collect()
     assert sorted(r.id for r in out) == [7, 7, 9]
     assert all(r.polygon_id == 1 for r in out)
     tags_of_7 = [r.tags for r in out if r.id == 7]
@@ -215,15 +209,55 @@ def test_pip_edges_chunked_map_cols_and_duplicates(spark):
 
 
 def test_pip_unknown_engine_raises(spark):
-    """Only "edges" and "native" exist: a stale engine name fails loudly
-    instead of silently running the default."""
+    """Only "edges" exists: a stale engine name fails loudly instead of
+    silently running the default."""
     polys = spark.createDataFrame(
         [(1, [0.0, 0.0, 1.0, 0.0], [0.0, 1.0, 0.0, 0.0])],
         "polygon_id long, lats array<double>, lons array<double>",
     )
     points = spark.createDataFrame([(1, 0.2, 0.2)], "id long, lat double, lon double")
     with pytest.raises(ValueError, match="unknown engine"):
-        point_in_polygon_join(points, polys, res=8, engine="vectorized")
+        point_in_polygon_join(points, polys, res=8, engine="native")
+
+
+def test_pip_mixed_resolution_cover(spark):
+    """A ~20 degree rectangle takes a coarser cover res than the small
+    rings beside it: the cover mixes resolutions, each polygon's cover
+    stays within COVER_MAX_CELLS, and the join equals the numpy oracle."""
+    rings = {  # polygon_id: (lats, lons), closed
+        1: ([2.0, 2.0, 22.0, 22.0, 2.0], [2.0, 22.0, 22.0, 2.0, 2.0]),
+        2: ([5.0, 5.5, 6.0, 5.0], [5.0, 6.0, 5.0, 5.0]),  # inside 1
+        3: ([23.0, 23.0, 24.0, 24.0, 23.0], [23.0, 24.0, 24.0, 23.0, 23.0]),
+    }
+    polys = spark.createDataFrame(
+        [(pid, la, lo) for pid, (la, lo) in rings.items()],
+        "polygon_id long, lats array<double>, lons array<double>",
+    )
+    slim = polys.withColumn("cover_res", cover_res(8))
+    levels = sorted({r.cover_res for r in slim.select("cover_res").collect()})
+    assert len(levels) >= 2
+    sizes = polygon_cover_cells(slim, levels).groupBy("polygon_id").count().collect()
+    assert sorted(r.polygon_id for r in sizes) == [1, 2, 3]
+    assert all(r["count"] <= COVER_MAX_CELLS for r in sizes)
+
+    pts = [
+        (i * 1000 + j, 0.51 + i * 0.25, 0.51 + j * 0.25)
+        for i in range(100)
+        for j in range(100)
+    ]
+    points = spark.createDataFrame(pts, "id long, lat double, lon double")
+    got = {
+        (r.id, r.polygon_id)
+        for r in point_in_polygon_join(points, polys, res=8).collect()
+    }
+    plat = np.array([p[1] for p in pts])
+    plon = np.array([p[2] for p in pts])
+    expected = set()
+    for pid, (la, lo) in rings.items():
+        mask = _numpy_raycast(plat, plon, np.array(la), np.array(lo))
+        expected |= {(pts[i][0], pid) for i in np.flatnonzero(mask)}
+    assert got == expected
+    assert {pid for _i, pid in expected} == {1, 2, 3}
 
 
 def _knn_sides(world):

@@ -9,7 +9,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROUND = "r12"
+ROUND = "r13"
 
 
 def main():
@@ -64,7 +64,7 @@ def main():
 
     nodes_slim = nodes.select("id", "lat", "lon")
     polys = polygons_from_ways(aw).filter(F.col("polygon_id") % 8 == 0)
-    cap("pip_join", point_in_polygon_join(nodes_slim, polys, res=13, engine="edges"))
+    cap("pip_join", point_in_polygon_join(nodes_slim, polys, res=13))
     cap("tile_pyramid", tile_pyramid(nodes_slim, 5, 12))
 
     pts = _pts(spark, sf_dir)
