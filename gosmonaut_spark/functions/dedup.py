@@ -30,26 +30,16 @@ def exact_dup_groups(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_ids: int | None = None,
 ) -> DataFrame:
     """Duplicate groups by exact normalized content.
-    Returns (fingerprint, n_docs, canonical_id=min id, doc_ids sorted).
-
-    ``max_ids``: at corpus scale a degenerate group (e.g. empty documents)
-    can hold millions of ids — one collect_list row blowing up an
-    aggregation task. With the cap set, ``doc_ids`` keeps only the
-    ``max_ids`` smallest ids per group (n_docs/canonical stay exact);
-    unset preserves the full roster (the oracle-checked shape)."""
-    ids = F.sort_array(F.collect_list("doc_id"))
-    if max_ids is not None:
-        ids = F.slice(ids, 1, max_ids)
+    Returns (fingerprint, n_docs, canonical_id=min id, doc_ids sorted)."""
     return (
         docs.select(F.col(id_col).alias("doc_id"), content_fingerprint(text_col).alias("fp"))
         .groupBy("fp")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("canonical_id"),
-            ids.alias("doc_ids"),
+            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
         )
         .filter(F.col("n_docs") > 1)
     )
@@ -82,7 +72,6 @@ def jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """All doc pairs (a < b) with shingle-set jaccard >= threshold.
 
@@ -90,23 +79,13 @@ def jaccard_pairs(
     candidate pruning: disjoint docs never meet) → per-pair intersection
     count → join each side's shingle count → jaccard.
 
-    ``max_doc_freq``: the skew guard. A shingle shared by d documents
-    contributes d^2 rows to the self-join — one stopword-only shingle in
-    millions of docs turns the join quadratic. With the cap set, shingles
-    whose document frequency exceeds it are dropped from the shingle space
-    entirely (candidates AND counts, so the reported jaccard is consistent
-    — it is the jaccard over the retained, discriminative shingles; a
-    shingle in >max_doc_freq docs carries ~no near-dup signal anyway).
-    Unset = exact over all shingles: right for the LSH verify stage in
-    :func:`minhash_lsh_pairs`, where candidates are already bucketed, and
-    for oracle comparisons. Standalone at corpus scale, SET THE CAP.
+    A shingle shared by d documents contributes d^2 rows to the
+    self-join, so one boilerplate shingle in millions of docs turns it
+    quadratic. At corpus scale use :func:`jaccard_prefix_pairs` (the same
+    rows from a near-linear candidate space) or :func:`minhash_lsh_pairs`
+    (banded candidates verified with exact jaccard).
     """
     sh = _shingle_table(docs, id_col, text_col, n)
-    if max_doc_freq is not None:
-        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(
-            dfreq.filter(F.col("__df") <= max_doc_freq), "sh", "left_semi"
-        )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("a"), "sh")
     b = sh.select(F.col("doc_id").alias("b"), "sh")
@@ -139,7 +118,7 @@ def jaccard_prefix_pairs(
 ) -> DataFrame:
     """:func:`jaccard_pairs` with PPJoin/AllPairs prefix filtering — the
     EXACT same result set, a candidate space that stays near-linear at
-    corpus scale without the lossy ``max_doc_freq`` cap.
+    corpus scale.
 
     Law: order every document's shingles by a global canonical order
     (document frequency ascending, shingle ascending — rarest first) and
@@ -156,7 +135,7 @@ def jaccard_prefix_pairs(
     Scale shape (100 TB lens): the self-join fans out on prefix tokens
     only — and because the canonical order is df-ascending, prefixes are
     made of the RAREST shingles, so hot stopword shingles (the d^2 blowup
-    ``max_doc_freq`` exists to cap) land in suffixes and never join.
+    of :func:`jaccard_pairs`) land in suffixes and never join.
     Costs one global df agg + one per-doc window sort on top of
     :func:`jaccard_pairs`'s plan; the verify stage touches candidate
     pairs only.
@@ -833,10 +812,11 @@ def containment_pairs(
     same passage twice. Broder's containment measure, min-normalized so
     one row covers both directions.
 
-    Plan and skew contract identical to :func:`jaccard_pairs` (shingle
-    self-join candidates, ``max_doc_freq`` cap applied to candidates
-    AND counts so the score stays self-consistent); the score is one
-    division of exact integers. Returns
+    Plan identical to :func:`jaccard_pairs` (shingle self-join
+    candidates). ``max_doc_freq`` is the skew guard: shingles in more
+    documents than the cap are dropped from candidates AND counts, so
+    the score is the containment over the retained shingles and stays
+    self-consistent; the score is one division of exact integers. Returns
     ``(a, b, n_inter, n_a, n_b, containment)``.
     """
     sh = _shingle_table(docs, id_col, text_col, n)

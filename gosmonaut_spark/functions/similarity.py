@@ -228,6 +228,20 @@ def _bucketed(
     )
 
 
+def _probe_flips(df: DataFrame, n_bits: int) -> DataFrame:
+    """Single-bit multiprobe: each row once per probe, with ``bkt`` as is
+    and with each of its ``n_bits`` bits flipped (n_bits+1 rows per row)."""
+    probes = F.array(
+        F.lit(0).cast("long"),
+        *[F.lit(1 << j).cast("long") for j in range(n_bits)],
+    )
+    return (
+        df.withColumn("__f", F.explode(probes))
+        .withColumn("bkt", F.col("bkt").bitwiseXOR(F.col("__f")))
+        .drop("__f")
+    )
+
+
 def dot_codegen(a: Column, b: Column, dim: int) -> Column:
     """Unrolled dot product for the candidate re-rank: ``dim`` literal
     ``element_at`` product terms accumulated left-to-right.
@@ -260,8 +274,6 @@ def cosine_topk_lsh(
     target_id: str = "target_id",
     vec: str = "embedding",
     multiprobe: int = 1,
-    max_bucket_targets: int | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket in >=1 table.
 
@@ -279,22 +291,14 @@ def cosine_topk_lsh(
     candidate volume of finer ones — the standard multiprobe-LSH trade.
     Only the (small) query side is exploded.
 
-    ``max_bucket_targets`` drops buckets holding more targets than the cap
-    from candidate generation entirely (a skew guard: one degenerate
-    bucket — e.g. the all-zeros region — cannot cross-product the join).
-    Recall for queries whose true neighbors sat in a dropped bucket
-    degrades; prefer raising n_bits first, the cap is the backstop.
-
-    ``broadcast_queries`` (default on): the probe-exploded query side is
-    broadcast into the bucket join, so the TARGET side — the one
-    carrying a ``dim``-float array per row × n_tables — never shuffles
-    at all; the only remaining shuffles are scalar (id, id, cos)
-    triples for dedup/top-k. This is the operator's small-query-batch
-    contract made explicit (a query batch beyond broadcast size should
-    be chunked by the caller); measured 2-vs-8-core scaling of the
-    bench ANN leg was bandwidth-bound on the target shuffle before
-    this. Set False only for huge query sets, where the plan falls back
-    to a symmetric hash join.
+    The query side is a bounded batch: it is coalesced and its
+    probe-exploded buckets are broadcast into the bucket join, so the
+    TARGET side — the one carrying a ``dim``-float array per row ×
+    n_tables — never shuffles at all; the only shuffles are scalar
+    (id, id, cos) triples for dedup/top-k. A query set beyond broadcast
+    size must be chunked by the caller. (Measured: 2-vs-8-core scaling
+    of the bench ANN leg was bandwidth-bound on the target shuffle
+    before the broadcast.)
     """
     if multiprobe not in (0, 1):
         raise ValueError("multiprobe supports 0 (off) or 1 (single-bit probes)")
@@ -307,17 +311,14 @@ def cosine_topk_lsh(
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(vec).alias("qv")
     )
-    if broadcast_queries:
-        # bounded-batch contract (see below): the probe side is small, but
-        # it inherits the caller's input partitioning — its Arrow bucket
-        # pass then demands one python worker per input split for a
-        # handful of rows each (measured: the concurrent qb/tb bucket
-        # stages spawned 2x`cores` workers; worker startup, not compute,
-        # dominated the broadcast-build job). A narrow coalesce keeps the
-        # batch's pass to a few workers without touching the target side.
-        q = q.coalesce(
-            max(q.sparkSession.sparkContext.defaultParallelism // 8, 2)
-        )
+    # bounded-batch contract (see docstring): the probe side is small, but
+    # it inherits the caller's input partitioning — its Arrow bucket pass
+    # then demands one python worker per input split for a handful of rows
+    # each (measured: the concurrent qb/tb bucket stages spawned 2x`cores`
+    # workers; worker startup, not compute, dominated the broadcast-build
+    # job). A narrow coalesce keeps the batch's pass to a few workers
+    # without touching the target side.
+    q = q.coalesce(max(q.sparkSession.sparkContext.defaultParallelism // 8, 2))
     t = targets.select(
         F.col(target_id).alias("target_id"), F.col(vec).alias("tv")
     )
@@ -325,31 +326,9 @@ def cosine_topk_lsh(
     # scans) — no interpreted norm fold anywhere in this plan
     qb = _bucketed(q, "qv", n_bits, n_tables, dim, norm_col="qn")
     tb = _bucketed(t, "tv", n_bits, n_tables, dim, norm_col="tn")
-    handles = []
-    if max_bucket_targets is not None:
-        # the cap makes tb feed two consumers (sizes agg + the join) —
-        # persist so the Arrow bucket pass runs once
-        tb = tb.persist()
-        handles.append(tb)
     if multiprobe == 1:
-        probes = F.array(
-            F.lit(0).cast("long"),
-            *[F.lit(1 << j).cast("long") for j in range(n_bits)],
-        )
-        qb = (
-            qb.withColumn("__f", F.explode(probes))
-            .withColumn("bkt", F.col("bkt").bitwiseXOR(F.col("__f")))
-            .drop("__f")
-        )
-    if max_bucket_targets is not None:
-        sizes = tb.groupBy("tbl", "bkt").agg(F.count(F.lit(1)).alias("__n"))
-        tb = tb.join(
-            sizes.filter(F.col("__n") <= max_bucket_targets),
-            ["tbl", "bkt"],
-            "left_semi",
-        )
-    if broadcast_queries:
-        qb = F.broadcast(qb)
+        qb = _probe_flips(qb, n_bits)
+    qb = F.broadcast(qb)
     # per-pair dedup via groupBy on the LONG pair key + max(cos): cos_sim
     # is functionally determined by the pair (the dot/norm expression is a
     # fixed IEEE sequence over the pair's vectors), so every duplicate row
@@ -372,12 +351,7 @@ def cosine_topk_lsh(
         .groupBy("query_id", "target_id")
         .agg(F.max("cos_sim").alias("cos_sim"))
     )
-    out = _topk(cand, k)
-    if handles:
-        from .caching import attach_cached
-
-        out = attach_cached(out, handles)
-    return out
+    return _topk(cand, k)
 
 
 def cosine_topk_ivf(
@@ -390,7 +364,6 @@ def cosine_topk_ivf(
     query_id: str = "query_id",
     target_id: str = "target_id",
     vec: str = "embedding",
-    max_list_targets: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the coarse-quantizer scale
     path that complements :func:`cosine_topk_lsh`.
@@ -416,11 +389,6 @@ def cosine_topk_ivf(
       codegen, no interpreted HOF folds, no Python) with norms as
       ``sqrt(dot_codegen(v, v))`` — the same left-to-right IEEE sequence
       as the DuckDB ``list_reduce`` twin, bit-for-bit.
-
-    ``max_list_targets``: skew backstop mirroring ``max_bucket_targets``
-    in the LSH path — inverted lists larger than the cap are dropped from
-    candidate generation (one megacity-dense region cannot quadratic the
-    probe join); prefer more centroids first.
     """
     q = queries.select(F.col(query_id).alias("query_id"), F.col(vec).alias("qv"))
     t = targets.select(F.col(target_id).alias("target_id"), F.col(vec).alias("tv"))
@@ -452,16 +420,6 @@ def cosine_topk_ivf(
     ).select(
         "target_id", "tv", "tn", (-F.col("__m.__nc")).alias("centroid_id")
     )
-    if max_list_targets is not None:
-        assigned = assigned.persist()
-        sizes = assigned.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__n"))
-        kept = assigned.join(
-            sizes.filter(F.col("__n") <= max_list_targets),
-            ["centroid_id"],
-            "left_semi",
-        )
-    else:
-        kept = assigned
     qn = F.sqrt(dot_codegen(F.col("qv"), F.col("qv"), dim))
     q_cos = q.withColumn("qn", qn).crossJoin(cents).select(
         "query_id",
@@ -479,19 +437,14 @@ def cosine_topk_ivf(
         .filter(F.col("__r") <= nprobe)
         .select("query_id", "qv", "qn", "centroid_id")
     )
-    cand = probes.join(kept, ["centroid_id"]).select(
+    cand = probes.join(assigned, ["centroid_id"]).select(
         "query_id",
         "target_id",
         (
             dot_codegen(F.col("qv"), F.col("tv"), dim) / (F.col("qn") * F.col("tn"))
         ).alias("cos_sim"),
     )
-    out = _topk(cand, k)
-    if max_list_targets is not None:
-        from .caching import attach_cached
-
-        out = attach_cached(out, [assigned])
-    return out
+    return _topk(cand, k)
 
 
 def cosine_pairs_lsh(
@@ -502,7 +455,6 @@ def cosine_pairs_lsh(
     dim: int = 64,
     id_col: str = "vec_id",
     vec: str = "embedding",
-    max_bucket: int | None = None,
     multiprobe: int = 1,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cos >= threshold).
@@ -517,35 +469,20 @@ def cosine_pairs_lsh(
     ``multiprobe=1`` probes each doc's own bucket plus every single-bit
     flip on the LEFT side of the self-join only (a pair within hamming 1
     of bucket ids is found once from whichever side flips toward the
-    other). ``max_bucket`` is the skew backstop: buckets above the cap are
-    dropped from candidate generation (the all-zeros degenerate region
-    cannot cross-product the join); raise n_bits before reaching for it."""
+    other)."""
     if multiprobe not in (0, 1):
         raise ValueError("multiprobe supports 0 (off) or 1 (single-bit probes)")
     # same Arrow-pass norm + scalar-dedup discipline as cosine_topk_lsh
     d = docs.select(F.col(id_col).alias("doc_id"), F.col(vec).alias("v"))
     b = _bucketed(d, "v", n_bits, n_tables, dim, norm_col="vn")
-    handles = []
-    if max_bucket is not None or multiprobe == 1:
-        # bucketed table feeds 2-3 consumers (sizes agg, both join sides)
+    if multiprobe == 1:
+        # without probes both join sides are one subtree and Spark reuses
+        # its exchange; the probed left side is not, so persist the bucket
+        # table to run its Arrow pass once
         b = b.persist()
-        handles.append(b)
-    if max_bucket is not None:
-        sizes = b.groupBy("tbl", "bkt").agg(F.count(F.lit(1)).alias("__n"))
-        b = b.join(
-            sizes.filter(F.col("__n") <= max_bucket), ["tbl", "bkt"], "left_semi"
-        )
     a = b.select(F.col("doc_id").alias("a"), F.col("v").alias("va"), F.col("vn").alias("na"), "tbl", "bkt")
     if multiprobe == 1:
-        probes = F.array(
-            F.lit(0).cast("long"),
-            *[F.lit(1 << j).cast("long") for j in range(n_bits)],
-        )
-        a = (
-            a.withColumn("__f", F.explode(probes))
-            .withColumn("bkt", F.col("bkt").bitwiseXOR(F.col("__f")))
-            .drop("__f")
-        )
+        a = _probe_flips(a, n_bits)
     c = b.select(F.col("doc_id").alias("b"), F.col("v").alias("vb"), F.col("vn").alias("nb"), "tbl", "bkt")
     out = (
         a.join(c, ["tbl", "bkt"])
@@ -565,10 +502,10 @@ def cosine_pairs_lsh(
         .agg(F.max("cos_sim").alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
-    if handles:
+    if multiprobe == 1:
         from .caching import attach_cached
 
-        out = attach_cached(out, handles)
+        out = attach_cached(out, [b])
     return out
 
 

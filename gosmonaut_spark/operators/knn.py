@@ -95,7 +95,10 @@ def knn_join(
     clamped to ``[-min(ring, (n-1)//2), min(ring, n//2)]`` with
     ``n = 2^res``, so at coarse resolutions, where the ring is wider than
     the grid, each cell still appears once and no target joins a query
-    twice. The whole query side is one codegen stage.
+    twice. The whole query side is one codegen stage. Once
+    ``ring >= n - 1`` the ring reaches every cell from every cell, so every
+    target is a candidate of every query and the join is
+    :func:`knn_brute`'s cross join (same rows, no explode).
 
     ``broadcast_queries``: when the query side is known small (a probe
     batch against a large target corpus), broadcasting the ring-exploded
@@ -106,6 +109,8 @@ def knn_join(
     full point set) both sides are large and the symmetric shuffle is
     correct.
     """
+    if ring >= (1 << res) - 1:
+        return knn_brute(queries, targets, k, query_id=query_id, target_id=target_id)
     q = _ring_cells(
         queries.select(
             F.col(query_id).alias("query_id"),
@@ -159,8 +164,9 @@ def _ring_coverage_m(lat: Column, res: int, ring: int) -> Column:
         F.lit(2.0 * EARTH_RADIUS_M)
         * F.asin(F.greatest(F.cos(F.radians(phi_far)), F.lit(0.0)) * F.sin(half_dlon))
     )
-    # a ring spanning the full grid in a dimension excludes nothing there
-    if 2 * ring + 1 >= n:
+    # a ring that reaches every row from every row excludes nothing
+    # (2*ring+1 >= n only wraps every column: rows beyond cov_lat stay out)
+    if ring >= n - 1:
         return F.lit(float("inf"))
     return F.least(cov_lat, cov_lon)
 

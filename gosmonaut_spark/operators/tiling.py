@@ -101,7 +101,7 @@ def tile_pyramid(
     )
 
 
-def write_tiles(tiles: DataFrame, path: str, n_buckets: int | None = None) -> None:
+def write_tiles(tiles: DataFrame, path: str) -> None:
     """Ordered tile write: range-partition by (res, cell) so each output
     file covers a contiguous spatial extent (x-major cell ids are spatially
     coherent along y-stripes) — the scale path for tile-server consumption.

@@ -209,53 +209,6 @@ def test_jaccard_prefix_filter_is_lossless(spark, docs):
         assert pre == base, f"threshold {t}: prefix filter changed the result"
 
 
-def test_jaccard_df_cap_skew_guard(spark):
-    """A boilerplate shingle shared by every doc (the quadratic-join skew
-    case) must be droppable with max_doc_freq: results then equal the
-    python-set jaccard over the df-filtered shingle space, and near-dup
-    pairs connected only through rare shingles are still found."""
-    import re as _re
-
-    boiler = "all rights reserved copyright notice"
-    rows = []
-    for i in range(60):
-        rows.append((i, f"{boiler} unique text body number {i} alpha beta gamma"))
-    # one true near-dup pair via rare shared text
-    rows.append((100, f"{boiler} the quick brown fox jumps over the lazy dog"))
-    rows.append((101, f"{boiler} the quick brown fox jumps over the lazy cat"))
-    docs60 = spark.createDataFrame(rows, "doc_id long, text string")
-
-    cap = 10
-    got = {
-        (r.a, r.b): r.jaccard
-        for r in D.jaccard_pairs(docs60, threshold=0.3, max_doc_freq=cap).collect()
-    }
-
-    def sh(text, n=3):
-        toks = _re.sub(r"[^a-z0-9]+", " ", text.lower()).split()
-        return set(" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1)))
-
-    all_sh = [(i, sh(t)) for i, t in rows]
-    dfreq = {}
-    for _i, s in all_sh:
-        for g in s:
-            dfreq[g] = dfreq.get(g, 0) + 1
-    kept = [(i, {g for g in s if dfreq[g] <= cap}) for i, s in all_sh]
-    exp = {}
-    for x in range(len(kept)):
-        for y in range(x + 1, len(kept)):
-            (ia, sa), (ib, sb) = kept[x], kept[y]
-            if not (sa | sb):
-                continue
-            j = len(sa & sb) / len(sa | sb)
-            if j >= 0.3:
-                exp[tuple(sorted((ia, ib)))] = j
-    assert set(got) == set(exp)
-    assert (100, 101) in got  # rare-shingle near-dup survives the cap
-    for k in got:
-        assert abs(got[k] - exp[k]) < 1e-12
-
-
 def test_minhash_lsh_recall(spark, docs):
     """LSH candidates must contain every true pair above the threshold
     (verified against the exhaustive jaccard join) on this corpus."""
@@ -424,12 +377,11 @@ def test_ivf_topk_exact_at_full_probe_and_recall_monotone(spark, embs):
     }
     assert full == brute  # exact: same pairs, bit-identical doubles
 
-    def recall(nprobe, cap=None):
+    def recall(nprobe):
         got = {
             (r.query_id, r.target_id)
             for r in S.cosine_topk_ivf(
-                q, t, k=5, centroid_stride=25, nprobe=nprobe, dim=64,
-                max_list_targets=cap,
+                q, t, k=5, centroid_stride=25, nprobe=nprobe, dim=64
             ).collect()
         }
         return len(got & set(brute)) / len(brute)
@@ -437,18 +389,13 @@ def test_ivf_topk_exact_at_full_probe_and_recall_monotone(spark, embs):
     r2, r8 = recall(2), recall(8)
     assert r8 >= r2, f"recall not monotone in nprobe: {r2} -> {r8}"
     assert r8 >= 0.5, f"IVF recall@8/20 lists too low: {r8}"
-    # skew-cap semantics: a loose cap changes nothing; a tight cap only
-    # ever REMOVES result pairs (lists above the cap drop out), never adds
-    assert recall(8, cap=10_000) == r8
-    assert recall(8, cap=20) <= r8
 
 
-def test_lsh_multiprobe_and_bucket_cap(spark):
+def test_lsh_multiprobe_lifts_recall(spark):
     """Scale-parameterization evidence at sf0.1 (2000 random vectors — the
     adversarial no-cluster case): single-bit multiprobe must lift recall
     substantially over probe-free LSH at the same bits/tables (measured
-    0.34 -> 0.74 here), and the bucket-size cap must only ever REMOVE
-    candidate pairs (skew guard semantics), never invent them."""
+    0.34 -> 0.74 here)."""
     e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").cache()
     q = e.filter(F.col("vec_id") % 11 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -456,12 +403,11 @@ def test_lsh_multiprobe_and_bucket_cap(spark):
     t = e.select(F.col("vec_id").alias("target_id"), "embedding")
     exact = {(r.query_id, r.target_id) for r in S.cosine_topk_brute(q, t, k=5).collect()}
 
-    def run(mp, cap=None):
+    def run(mp):
         return {
             (r.query_id, r.target_id)
             for r in S.cosine_topk_lsh(
-                q, t, k=5, n_bits=8, n_tables=8, dim=64,
-                multiprobe=mp, max_bucket_targets=cap,
+                q, t, k=5, n_bits=8, n_tables=8, dim=64, multiprobe=mp
             ).collect()
         }
 
@@ -471,17 +417,6 @@ def test_lsh_multiprobe_and_bucket_cap(spark):
     r1 = len(exact & probed) / len(exact)
     assert r1 >= 0.65, f"multiprobe recall too low: {r1}"
     assert r1 >= r0 + 0.2, f"multiprobe did not lift recall: {r0} -> {r1}"
-
-    # cap semantics: a loose cap (nothing exceeds it) must change nothing;
-    # a tight cap shrinks the CANDIDATE set, so true-pair recall can only
-    # drop — a true top-k pair surviving the cap always stays in top-k
-    # (at most k-1 pairs in the whole universe outrank it), so recall is
-    # monotone in the candidate set even though the k-th slots differ.
-    capped_loose = run(1, cap=2000)
-    assert capped_loose == probed
-    capped_tight = run(1, cap=5)
-    r_tight = len(exact & capped_tight) / len(exact)
-    assert r_tight <= r1
 
 
 def test_multimodal_plumbing(spark):
@@ -736,28 +671,22 @@ def test_pairs_lsh_default_bucket_cardinality(spark):
     assert stats["avg"] <= 2.5
 
 
-def test_cosine_pairs_lsh_finds_dups_and_cap(spark, embs):
+def test_cosine_pairs_lsh_finds_dups(spark, embs):
     """LSH near-dup pairs: injected exact duplicates must surface with
-    cos ~= 1; a loose bucket cap changes nothing, a tight one only ever
-    removes pairs (per-bucket self-join skew guard)."""
+    cos ~= 1."""
     base = embs.filter(F.col("vec_id") < 150).select("vec_id", "embedding")
     dup = base.withColumn("vec_id", F.col("vec_id") + 1_000_000)
     both = base.unionByName(dup)
 
-    def run(cap=None):
-        return {
-            (r.a, r.b)
-            for r in S.cosine_pairs_lsh(
-                both, threshold=0.999, n_bits=8, n_tables=4, dim=64, max_bucket=cap
-            ).collect()
-        }
-
-    got = run()
+    got = {
+        (r.a, r.b)
+        for r in S.cosine_pairs_lsh(
+            both, threshold=0.999, n_bits=8, n_tables=4, dim=64
+        ).collect()
+    }
     expected_dups = {(i, i + 1_000_000) for i in range(150)}
     # identical vectors always share every bucket -> recall 1.0 on true dups
     assert expected_dups <= got
-    assert run(cap=10_000) == got
-    assert run(cap=2) <= got
 
 
 # ---------------------------------------------------------------------------

@@ -293,9 +293,11 @@ def test_knn_ring_matches_brute(spark, world, brute5):
 
 
 def test_knn_ring_covers_grid_equals_brute(spark, world, brute5):
-    """When 2k+1 >= 2^res the ring is the whole grid, so the ring join is
-    exact: row for row equal to brute force, no target repeated for a
-    query (the x-wrap must not visit a grid column twice)."""
+    """When 2k+1 >= 2^res the ring wraps every grid column, so no target
+    may repeat for a query (the x-wrap must not visit a grid column
+    twice); on this fixture's extent the rows then equal brute force. At
+    (res 1, ring 1) the ring also reaches every row (k >= 2^res - 1), so
+    ``knn_join`` is brute force's cross join: no ring explode in its plan."""
     queries, targets = _knn_sides(world)
     k = 5
 
@@ -304,9 +306,13 @@ def test_knn_ring_covers_grid_equals_brute(spark, world, brute5):
 
     exact = rows(brute5)
     for res, ring in ((1, 1), (2, 2)):
-        got = rows(knn_join(queries, targets, k, res=res, ring=ring).collect())
+        df = knn_join(queries, targets, k, res=res, ring=ring)
+        got = rows(df.collect())
         assert len({(q, t) for q, t, _ in got}) == len(got), (res, ring)
         assert got == exact, (res, ring)
+        if (res, ring) == (1, 1):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Generate" not in plan, plan
 
 
 def test_knn_ring_plan_is_codegen(spark, world):
@@ -363,6 +369,27 @@ def test_knn_adaptive_is_exact(spark, world, brute5):
         knn_join_adaptive(queries, targets, k, res=6, ring=1, min_res=3).collect()
     )
     assert adaptive_coarse == exact
+
+
+def test_knn_adaptive_exact_at_coarse_rings(spark):
+    """A ring that wraps every column (2*ring+1 >= 2^res) still excludes
+    rows, so it must not certify a neighbor beyond its latitude reach.
+    The query at 46N reaches rows down to 45S only: target 10 (44.9S,
+    180E) is in the ring and ~19,900 km away, target 20 (45.1S, 0E) is
+    outside it and ~10,100 km away. The answer must be brute force's."""
+    queries = spark.createDataFrame([(1, 46.0, 0.0)], "query_id long, lat double, lon double")
+    targets = spark.createDataFrame(
+        [(10, -44.9, 180.0), (20, -45.1, 0.0)], "target_id long, lat double, lon double"
+    )
+
+    def rows(df):
+        return sorted((r.query_id, r.target_id, round(r.dist_m, 6)) for r in df.collect())
+
+    exact = rows(knn_brute(queries, targets, 1))
+    assert [t for _q, t, _d in exact] == [20]
+    for res, ring in ((2, 2), (3, 4)):
+        got = rows(knn_join_adaptive(queries, targets, 1, res=res, ring=ring, min_res=res))
+        assert got == exact, (res, ring)
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROUND = "r13"
+ROUND = "r14"
 
 
 def main():
@@ -49,6 +49,8 @@ def main():
         p = os.path.join(out_dir, f"{name}_{tag}.txt")
         txt = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        # plans are compared across hosts: print the fixture dir by name
+        txt = txt.replace(sf_dir, "$SPARK_GRAFT_SF_DIR")
         with open(p, "w") as f:
             f.write(txt)
         print(f"wrote {p} ({len(txt)} bytes)", file=sys.stderr)
