@@ -236,7 +236,7 @@ def run_suite(
         # partly bound by. ``repeat`` decodes per blob give the small
         # fixture a wall long enough to amortize per-job fixed costs (JIT
         # warmup, scheduling); both legs run the IDENTICAL job.
-        from gosmonaut_spark.sources.pages import _PKG_ROOT
+        from gosmonaut_spark import PKG_ROOT as _PKG_ROOT
 
         repeat = int(os.environ.get("SPARK_GRAFT_DECODE_REPEAT", "2"))
 

@@ -19,7 +19,17 @@ table of Common-Crawl-style web pages ``(url, warc_ts, html, text, lang)``:
   Catalyst sees ordinary equi-joins.
 
 Everything is DataFrame-first: built-in functions in the hot path, Arrow
-batched pandas UDFs only for the byte-level blob decode.
+batch UDFs (``mapInArrow``) only for the byte-level blob decode and the LSH
+bucket pass.
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# Captured driver-side and shipped inside task closures: executor Python
+# workers inherit PYTHONPATH, not the driver's sys.path, so a session driven
+# from another cwd (or a cluster without --py-files) can't resolve the
+# package. On a real cluster ship a wheel via --py-files; this fallback
+# covers local mode and shared-filesystem clusters.
+PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -11,6 +11,10 @@ then interpret the resulting int64 value stream with numpy cursor arithmetic
 (delta reconstruction = ``np.cumsum`` with per-group base subtraction; the
 0-delimited key/value tag stream splits on zero positions). No per-byte
 Python in the hot path.
+
+A page keeps its strings as raw bytes and its tags and roles as string
+indices. :class:`PageBatch` reads a batch of pages as whole-batch numpy and
+Arrow columns, so no Python object is made per entity.
 """
 
 from __future__ import annotations
@@ -19,7 +23,9 @@ import zlib
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
+from .arrow_np import arrow_to_np, map_array, np_to_arrow, utf8_array
 from .gpb import FLAG_SPARSE_NODES, FLAG_ZLIB, MAGIC
 
 _SHIFTS = (np.arange(10, dtype=np.uint64) * np.uint64(7))
@@ -68,25 +74,75 @@ def grouped_delta_cumsum(deltas: np.ndarray, group_starts: np.ndarray, group_len
     return c - base
 
 
+TagPairs = tuple[np.ndarray, np.ndarray, np.ndarray]
+
+
 @dataclass
 class NumpyPage:
-    """Arrays-of-struct view of one decoded page (engine representation)."""
+    """Flat view of one decoded page (engine representation).
+
+    String ``i`` of the page's table is ``str_data[str_offsets[i]:
+    str_offsets[i + 1]]`` (raw bytes; UTF-8 is checked where strings are
+    materialized). Each kind's tags are three parallel arrays in stream
+    order: the entity's index within the page, the key's string index and
+    the value's string index; relation roles are string indices too. Every
+    index is checked against this page's table. The ``strings``,
+    ``*_tags`` and ``rel_member_roles`` properties materialize them as
+    Python objects for the oracle tests."""
 
     text: bytes
+    str_data: np.ndarray  # uint8, the table's strings back to back
+    str_offsets: np.ndarray  # int64, n_strings + 1
     node_ids: np.ndarray
     node_lat_units: np.ndarray
     node_lon_units: np.ndarray
-    node_tags: list[dict[str, str]]
+    node_tag_kv: TagPairs
     way_ids: np.ndarray
     way_nrefs: np.ndarray
     way_refs: np.ndarray  # flat, grouped by way_nrefs
-    way_tags: list[dict[str, str]]
+    way_tag_kv: TagPairs
     rel_ids: np.ndarray
     rel_nmembers: np.ndarray
     rel_member_ids: np.ndarray  # flat
     rel_member_types: np.ndarray  # flat
-    rel_member_roles: list[str]  # flat
-    rel_tags: list[dict[str, str]]
+    rel_role_idx: np.ndarray  # flat string indices
+    rel_tag_kv: TagPairs
+
+    @property
+    def strings(self) -> list[str]:
+        d, o = self.str_data, self.str_offsets.tolist()
+        return [d[a:b].tobytes().decode("utf-8") for a, b in zip(o, o[1:])]
+
+    def _dicts(self, kv: TagPairs, n: int) -> list[dict[str, str]]:
+        strings = self.strings
+        out: list[dict[str, str]] = [{} for _ in range(n)]
+        for g, k, v in zip(*(a.tolist() for a in kv)):
+            out[g][strings[k]] = strings[v]  # last write wins
+        return out
+
+    @property
+    def node_tags(self) -> list[dict[str, str]]:
+        return self._dicts(self.node_tag_kv, len(self.node_ids))
+
+    @property
+    def way_tags(self) -> list[dict[str, str]]:
+        return self._dicts(self.way_tag_kv, len(self.way_ids))
+
+    @property
+    def rel_tags(self) -> list[dict[str, str]]:
+        return self._dicts(self.rel_tag_kv, len(self.rel_ids))
+
+    @property
+    def rel_member_roles(self) -> list[str]:
+        strings = self.strings
+        return [strings[i] for i in self.rel_role_idx.tolist()]
+
+
+def _check_strings(idx: np.ndarray, n_strings: int) -> np.ndarray:
+    """Reject a string index outside the page's own table."""
+    if idx.size and (idx.min() < 0 or idx.max() >= n_strings):
+        raise ValueError(f"string index out of range for a {n_strings}-string table")
+    return idx
 
 
 class _Cursor:
@@ -134,11 +190,12 @@ class _Cursor:
         self.pos += n
         return b
 
-    def take_keyval_stream(self, n_groups: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def take_keyval_stream(self, n_groups: int, n_strings: int) -> TagPairs:
         """Decode the 0-delimited key/value stream for ``n_groups`` entities.
 
         Returns (group_index, key_idx, val_idx) flat arrays: pair *i* belongs
-        to entity ``group_index[i]``.
+        to entity ``group_index[i]``; both indices are checked against the
+        page's ``n_strings``-string table.
         """
         if n_groups == 0:
             e = np.empty(0, dtype=np.int64)
@@ -172,20 +229,11 @@ class _Cursor:
         keep = ~zero_mask
         kv = vals_all[keep]
         grp = group_of[keep]
-        keys = kv[0::2]
-        vals = kv[1::2]
-        grp_pairs = grp[0::2]
-        return grp_pairs, keys, vals
-
-
-def _tags_from_pairs(
-    n_groups: int, grp: np.ndarray, keys: np.ndarray, vals: np.ndarray, strings: list[str]
-) -> list[dict[str, str]]:
-    out: list[dict[str, str]] = [dict() for _ in range(n_groups)]
-    # value indices are stored off-by-one in the stream (0 = delimiter)
-    for g, k, v in zip(grp.tolist(), keys.tolist(), vals.tolist()):
-        out[g][strings[k]] = strings[v - 1]  # last write wins
-    return out
+        if np.any(np.bincount(grp, minlength=n_groups) & 1):
+            raise ValueError("keyval stream: a key without a value")
+        # value indices are stored off-by-one in the stream (0 = delimiter)
+        keys = _check_strings(kv[0::2], n_strings)
+        return grp[0::2], keys, _check_strings(kv[1::2] - 1, n_strings)
 
 
 _ALL_SECTIONS = ("text", "nodes", "ways", "rels")
@@ -214,18 +262,27 @@ def decode_page_np(blob: bytes, want: tuple[str, ...] = _ALL_SECTIONS) -> NumpyP
         raise ValueError("section directory does not cover the body")
     want_entities = bool({"nodes", "ways", "rels"} & set(want))
 
-    # string table: framing is sequential, payload slices are bulk
-    strings: list[str] = [""]
+    # string table: framing is sequential, the payload gather is bulk
+    str_data = np.empty(0, dtype=np.uint8)
+    str_offsets = np.zeros(1, dtype=np.int64)
     if want_entities:
-        n_str = cur.varint()
-        strings = []
-        for _ in range(n_str):
-            ln = cur.varint()
-            strings.append(cur.take_bytes(ln).decode("utf-8"))
-        if not strings or strings[0] != "":
+        table_end = cur.pos + sec_lens[0]
+        starts, lens = [], []
+        for _ in range(cur.varint()):
+            lens.append(cur.varint())
+            starts.append(cur.pos)
+            cur.pos += lens[-1]
+        if cur.pos != table_end:
+            raise ValueError("string table does not fill its section")
+        if not lens or lens[0] != 0:
             raise ValueError("string table index 0 must be empty")
+        lens_a = np.array(lens, dtype=np.int64)
+        str_offsets = np.concatenate(([0], np.cumsum(lens_a)))
+        gather = np.repeat(np.array(starts) - str_offsets[:-1], lens_a)
+        str_data = buf[gather + np.arange(gather.size)]
     else:
         cur.pos += sec_lens[0]
+    n_str = str_offsets.size - 1
 
     text = b""
     if "text" in want:
@@ -236,7 +293,7 @@ def decode_page_np(blob: bytes, want: tuple[str, ...] = _ALL_SECTIONS) -> NumpyP
     # nodes
     nn = 0
     node_ids = node_lats = node_lons = _EMPTY_I64
-    node_tags: list[dict[str, str]] = []
+    node_kv = way_kv = rel_kv = (_EMPTY_I64,) * 3
     if "nodes" in want:
         nn = cur.varint()
         if flags & FLAG_SPARSE_NODES:
@@ -250,13 +307,12 @@ def decode_page_np(blob: bytes, want: tuple[str, ...] = _ALL_SECTIONS) -> NumpyP
             node_ids = np.cumsum(zigzag_decode_arr(cur.take_varints(nn)))
             node_lats = np.cumsum(zigzag_decode_arr(cur.take_varints(nn)))
             node_lons = np.cumsum(zigzag_decode_arr(cur.take_varints(nn)))
-        node_tags = _tags_from_pairs(nn, *cur.take_keyval_stream(nn), strings)
+        node_kv = cur.take_keyval_stream(nn, n_str)
     else:
         cur.pos += sec_lens[2]
 
     # ways
     way_ids = way_nrefs = way_refs = _EMPTY_I64
-    way_tags: list[dict[str, str]] = []
     if "ways" in want:
         nw = cur.varint()
         way_ids = np.cumsum(zigzag_decode_arr(cur.take_varints(nw)))
@@ -265,14 +321,12 @@ def decode_page_np(blob: bytes, want: tuple[str, ...] = _ALL_SECTIONS) -> NumpyP
         ref_deltas = zigzag_decode_arr(cur.take_varints(total_refs))
         group_starts = np.concatenate(([0], np.cumsum(way_nrefs)[:-1])).astype(np.int64)
         way_refs = grouped_delta_cumsum(ref_deltas, group_starts, way_nrefs)
-        way_tags = _tags_from_pairs(nw, *cur.take_keyval_stream(nw), strings)
+        way_kv = cur.take_keyval_stream(nw, n_str)
     else:
         cur.pos += sec_lens[3]
 
     # relations
-    rel_ids = rel_nmem = rel_member_ids = rel_member_types = _EMPTY_I64
-    rel_member_roles: list[str] = []
-    rel_tags: list[dict[str, str]] = []
+    rel_ids = rel_nmem = rel_member_ids = rel_member_types = role_idx = _EMPTY_I64
     if "rels" in want:
         nr = cur.varint()
         rel_ids = np.cumsum(zigzag_decode_arr(cur.take_varints(nr)))
@@ -282,9 +336,8 @@ def decode_page_np(blob: bytes, want: tuple[str, ...] = _ALL_SECTIONS) -> NumpyP
         mem_starts = np.concatenate(([0], np.cumsum(rel_nmem)[:-1])).astype(np.int64)
         rel_member_ids = grouped_delta_cumsum(mem_deltas, mem_starts, rel_nmem)
         rel_member_types = cur.take_varints(total_mem)
-        role_idx = cur.take_varints(total_mem)
-        rel_member_roles = [strings[i] for i in role_idx.tolist()]
-        rel_tags = _tags_from_pairs(nr, *cur.take_keyval_stream(nr), strings)
+        role_idx = _check_strings(cur.take_varints(total_mem), n_str)
+        rel_kv = cur.take_keyval_stream(nr, n_str)
     else:
         cur.pos += sec_lens[4]
 
@@ -293,18 +346,72 @@ def decode_page_np(blob: bytes, want: tuple[str, ...] = _ALL_SECTIONS) -> NumpyP
 
     return NumpyPage(
         text=text,
+        str_data=str_data,
+        str_offsets=str_offsets,
         node_ids=node_ids.astype(np.int64),
         node_lat_units=node_lats.astype(np.int64),
         node_lon_units=node_lons.astype(np.int64),
-        node_tags=node_tags,
+        node_tag_kv=node_kv,
         way_ids=way_ids.astype(np.int64),
         way_nrefs=way_nrefs,
         way_refs=way_refs.astype(np.int64),
-        way_tags=way_tags,
+        way_tag_kv=way_kv,
         rel_ids=rel_ids.astype(np.int64),
         rel_nmembers=rel_nmem,
         rel_member_ids=rel_member_ids.astype(np.int64),
         rel_member_types=rel_member_types,
-        rel_member_roles=rel_member_roles,
-        rel_tags=rel_tags,
+        rel_role_idx=role_idx,
+        rel_tag_kv=rel_kv,
     )
+
+
+class PageBatch:
+    """Decoded pages read as whole-batch numpy and Arrow columns. The
+    string table is every page's table back to back (index ``i`` of page
+    ``p`` is ``base[p] + i``), UTF-8-checked once; :func:`decode_page_np`
+    has checked each index against its own page's table."""
+
+    def __init__(self, pages: list[NumpyPage]):
+        self.pages = pages
+        lens = [np.diff(p.str_offsets) for p in pages]
+        self.base = np.cumsum([0] + [len(x) for x in lens[:-1]])
+        self.strings = utf8_array(self.cat("str_data", np.uint8), np.concatenate(lens))
+        # one id per distinct string: tag keys dedupe by string, not index
+        enc = self.strings.dictionary_encode()
+        self.canon, self.n_canon = arrow_to_np(enc.indices), len(enc.dictionary)
+
+    def cat(self, attr: str, dtype=np.int64) -> np.ndarray:
+        return np.concatenate([getattr(p, attr) for p in self.pages]).astype(dtype, copy=False)
+
+    def arrow(self, attr: str, dtype=np.int64) -> pa.Array:
+        return np_to_arrow(self.cat(attr, dtype))
+
+    def counts(self, attr: str) -> np.ndarray:
+        return np.array([len(getattr(p, attr)) for p in self.pages], dtype=np.int64)
+
+    def index(self, per_page: list[np.ndarray]) -> np.ndarray:
+        return np.concatenate([i + b for i, b in zip(per_page, self.base)])
+
+    def take(self, idx: np.ndarray) -> pa.Array:
+        return self.strings.take(np_to_arrow(idx))
+
+    def tags(self, kind: str) -> pa.Array:
+        """One map per entity of ``kind`` (``node``, ``way`` or ``rel``). A
+        repeated key keeps its first position and its last value, as in
+        :func:`gosmonaut_spark.format.gpb.decode_page`."""
+        counts = self.counts(f"{kind}_ids")
+        kvs = [getattr(p, f"{kind}_tag_kv") for p in self.pages]
+        first = np.cumsum(counts) - counts
+        ent = np.concatenate([kv[0] + f for kv, f in zip(kvs, first)])
+        key = self.index([kv[1] for kv in kvs])
+        val = self.index([kv[2] for kv in kvs])
+        pair = ent * self.n_canon + self.canon[key]
+        order = np.argsort(pair, kind="stable")
+        sp = pair[order]
+        head = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]])
+        if head.size < sp.size:
+            keep, last = order[head], order[np.r_[head[1:], sp.size] - 1]
+            pos = np.argsort(keep)
+            ent, key, val = ent[keep[pos]], key[keep[pos]], val[last[pos]]
+        per_entity = np.bincount(ent, minlength=int(counts.sum()))
+        return map_array(per_entity, self.take(key), self.take(val))

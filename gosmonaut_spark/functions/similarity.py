@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import PKG_ROOT
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -153,10 +155,22 @@ def lsh_bucket_table(
     extra passes; keeps the per-row interpreted ``norm`` fold out of the
     LSH hot path).
     """
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+    from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
     if n_bits > 62:
         raise ValueError("n_bits must fit a signed 64-bit bucket id")
+    fn = _lsh_batches(df.columns.index(vec), n_bits, n_tables, dim, seed, out_col, out_norm)
+    fields = list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()))]
+    if out_norm is not None:
+        fields.append(StructField(out_norm, DoubleType()))
+    return df.mapInArrow(fn, StructType(fields))
+
+
+def _lsh_batches(vi, n_bits, n_tables, dim, seed, out_col, out_norm):
+    """The :func:`lsh_bucket_table` worker: Arrow batches in, the same
+    batches plus the bucket (and norm) columns out. Vectors are read from
+    the list column's buffers; a null vector, a null element or a vector
+    not ``dim`` long raises ``ValueError``."""
     planes_all = np.stack(
         [_hyperplanes(dim, n_bits, t, seed) for t in range(n_tables)]
     )  # (T, B, D)
@@ -164,48 +178,50 @@ def lsh_bucket_table(
         planes_all.reshape(n_tables * n_bits, dim).T
     )  # (D, T*B) float64
     weights = (np.int64(1) << np.arange(n_bits, dtype=np.int64))
-    vi = df.columns.index(vec)
-    n_t = n_tables
+    pkg_root = PKG_ROOT
 
     def fn(batches):
+        import sys
+
         import pyarrow as pa
+
+        if pkg_root not in sys.path:
+            sys.path.insert(0, pkg_root)
+        from gosmonaut_spark.format.arrow_np import arrow_to_np, list_array, np_to_arrow
 
         for rb in batches:
             m = rb.num_rows
             if m == 0:
                 continue
-            vecs = rb.column(vi).to_numpy(zero_copy_only=False)
-            mat = np.stack(vecs).astype(np.float64, copy=False)
-            if mat.shape[1] != dim:
+            col = rb.column(vi)
+            if col.null_count:
+                raise ValueError(f"lsh_bucket_table: {col.null_count} null vectors")
+            offs = arrow_to_np(col.offsets)
+            lens = np.diff(offs)
+            if (lens != dim).any():
                 raise ValueError(
-                    f"lsh_bucket_table: vector length {mat.shape[1]} != dim {dim}"
+                    f"lsh_bucket_table: vector length {lens[lens != dim][0]} != dim {dim}"
                 )
+            vals = arrow_to_np(col.values.slice(offs[0], m * dim))
+            mat = vals.reshape(m, dim).astype(np.float64, copy=False)
             acc = np.zeros((m, w_mat.shape[1]))
             for i in range(dim):
                 acc += mat[:, i, None] * w_mat[i]
             bits = acc > 0.0
-            bkts = (bits.reshape(m, n_t, n_bits) * weights).sum(axis=2, dtype=np.int64)
-            flat = pa.array(bkts.reshape(-1), type=pa.int64())
-            offsets = pa.array(np.arange(m + 1, dtype=np.int32) * n_t)
-            lst = pa.ListArray.from_arrays(offsets, flat)
-            cols = list(rb.columns) + [lst]
+            bkts = (bits.reshape(m, n_tables, n_bits) * weights).sum(axis=2, dtype=np.int64)
+            cols = list(rb.columns)
+            cols.append(list_array(np.full(m, n_tables), np_to_arrow(bkts.reshape(-1))))
             names = list(rb.schema.names) + [out_col]
             if out_norm is not None:
                 sq = np.zeros(m)
                 for i in range(dim):
                     x = mat[:, i]
                     sq = sq + x * x
-                cols.append(pa.array(np.sqrt(sq), type=pa.float64()))
+                cols.append(np_to_arrow(np.sqrt(sq)))
                 names.append(out_norm)
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    from pyspark.sql.types import DoubleType
-
-    fields = list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()))]
-    if out_norm is not None:
-        fields.append(StructField(out_norm, DoubleType()))
-    schema = StructType(fields)
-    return df.mapInArrow(fn, schema)
+    return fn
 
 
 def _bucketed(

@@ -220,19 +220,9 @@ def knn_join_adaptive(
     parts: list[DataFrame] = []
     n_pending = None  # no ring level run yet: every query is pending
     for cur_res in range(res, min_res - 1, -1):
-        cand = knn_join(
-            pending.select(F.col("query_id").alias(query_id), "lat", "lon"),
-            targets,
-            k,
-            cur_res,
-            ring,
-            query_id=query_id,
-            target_id=target_id,
-        ).select(
-            F.col(query_id).alias("query_id"),
-            F.col(target_id).alias("target_id"),
-            "dist_m",
-        )
+        # knn_join and knn_brute name their output query_id/target_id
+        # whatever the input names; the caller's names return at the end
+        cand = knn_join(pending, targets, k, cur_res, ring, target_id=target_id)
         stats = cand.groupBy("query_id").agg(
             F.count(F.lit(1)).alias("__n"), F.max("dist_m").alias("__kth")
         )
@@ -259,19 +249,7 @@ def knn_join_adaptive(
         # the uncertified tail, at min_res or once it is small: one exact
         # brute round replaces every remaining ring level (identical rows
         # — see docstring)
-        parts.append(
-            knn_brute(
-                pending.select(F.col("query_id").alias(query_id), "lat", "lon"),
-                targets,
-                k,
-                query_id=query_id,
-                target_id=target_id,
-            ).select(
-                F.col(query_id).alias("query_id"),
-                F.col(target_id).alias("target_id"),
-                "dist_m",
-            )
-        )
+        parts.append(knn_brute(pending, targets, k, target_id=target_id))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -3,7 +3,7 @@
 Defaults are sized for local[N] testing but every knob is the one that
 matters on a 1000-executor cluster: AQE on (runtime re-plan + skew-join
 splitting), coalescing of tiny shuffle partitions, Arrow batches for all
-pandas UDF stages, and a runtime Bloom-filter join (the engine analog of the
+Python UDF stages, and a runtime Bloom-filter join (the engine analog of the
 reference's paged bitset trackers, /root/reference/id_tracker.go:59-138).
 """
 
@@ -97,7 +97,7 @@ def build_session(
         # for wide scalar streams like PIP candidates, where 8k-row batches
         # made per-batch Python overhead ~30% of the exact-test stage
         # runtime Bloom-filter joins re-*execute* the build-side plan to
-        # construct the filter; when that side hangs off a mapInPandas
+        # construct the filter; when that side hangs off a mapInArrow
         # decode (not a re-scannable parquet source) the construction costs
         # more than the pruning saves — measured 18% slower at t2. The
         # checkpointed pipeline reads parquet snapshots, where re-enabling
@@ -176,7 +176,7 @@ def build_session(
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # pages blobs expand ~50-100x when decoded: split scans finely so
-        # the mapInPandas decode parallelizes even over smallish files
+        # the mapInArrow decode parallelizes even over smallish files
         .config("spark.sql.files.maxPartitionBytes", "4MB")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.log.level", "WARN")

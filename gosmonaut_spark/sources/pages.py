@@ -2,11 +2,14 @@
 
 The Spark recast of the reference's parallel blob decode (reference
 decode.go:155-249): Spark's task scheduler replaces the hand-rolled
-goroutine pool, and each ``mapInPandas`` batch plays the part of one
+goroutine pool, and each ``mapInArrow`` batch plays the part of one
 PrimitiveBlock (the session pins ``maxRecordsPerBatch``). One loop,
 :func:`_extract`, decodes every page; its ``want`` selects the kinds to
 emit, and the GPB1 section directory lets the decoder seek over the
 sections no wanted kind needs (reference fast_blob_decoder.go:74-129).
+Each output batch is built from the decoder's flat arrays and offsets
+(``ListArray``/``MapArray.from_arrays``), so the workers never import
+pandas.
 Catalyst's column pruning means a pass reads only ``url``, ``html`` and the
 carried columns from parquet.
 
@@ -23,35 +26,29 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
-from itertools import chain
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import PKG_ROOT
+from ..format.arrow_np import list_array, np_to_arrow, utf8_array
 from ..format.gpb import COORD_SCALE
+from ..format.gpb_numpy import PageBatch, decode_page_np
 
-# Captured driver-side and shipped inside task closures: executor Python
-# workers inherit PYTHONPATH, not the driver's sys.path, so a session driven
-# from another cwd (or a cluster without --py-files) can't resolve the
-# package. On a real cluster ship a wheel via --py-files; this fallback
-# covers local mode and shared-filesystem clusters.
-_PKG_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-# Every column the decode loop can emit and its Spark type, in output order.
+# Every column the decode loop can emit, its Spark and its Arrow type, in
+# output order.
 _COLUMNS = {
-    "id": "long",
-    "lat": "double",
-    "lon": "double",
-    "tags": "map<string,string>",
-    "refs": "array<long>",
-    "member_ids": "array<long>",
-    "member_types": "array<int>",
-    "member_roles": "array<string>",
-    "text_extracted": "string",
+    "id": ("long", pa.int64()),
+    "lat": ("double", pa.float64()),
+    "lon": ("double", pa.float64()),
+    "tags": ("map<string,string>", pa.map_(pa.string(), pa.string())),
+    "refs": ("array<long>", pa.list_(pa.int64())),
+    "member_ids": ("array<long>", pa.list_(pa.int64())),
+    "member_types": ("array<int>", pa.list_(pa.int32())),
+    "member_roles": ("array<string>", pa.list_(pa.string())),
+    "text_extracted": ("string", pa.string()),
 }
 
 
@@ -181,49 +178,46 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return assert_pages_schema(spark.read.parquet(path))
 
 
-def _split(values: np.ndarray, counts: np.ndarray) -> list[list]:
-    """Cut a flat array into per-entity Python lists of ``counts`` items."""
-    if not len(counts):
-        return []
-    return [a.tolist() for a in np.split(values, np.cumsum(counts)[:-1])]
-
-
-def _node_columns(page) -> tuple[int, dict]:
+def _node_columns(b: PageBatch) -> tuple[np.ndarray, dict]:
     """Coordinate projection per the reference (decode.go:517-519):
     ``deg = 1e-9 * granularity * unit``, applied vectorized in numpy."""
-    return len(page.node_ids), {
-        "id": page.node_ids,
-        "lat": page.node_lat_units * COORD_SCALE,
-        "lon": page.node_lon_units * COORD_SCALE,
-        "tags": page.node_tags,
+    return b.counts("node_ids"), {
+        "id": b.arrow("node_ids"),
+        "lat": np_to_arrow(b.cat("node_lat_units") * COORD_SCALE),
+        "lon": np_to_arrow(b.cat("node_lon_units") * COORD_SCALE),
+        "tags": b.tags("node"),
     }
 
 
-def _way_columns(page) -> tuple[int, dict]:
+def _way_columns(b: PageBatch) -> tuple[np.ndarray, dict]:
     """One row per way, refs as an ordered array."""
-    return len(page.way_ids), {
-        "id": page.way_ids,
-        "tags": page.way_tags,
-        "refs": _split(page.way_refs, page.way_nrefs),
+    return b.counts("way_ids"), {
+        "id": b.arrow("way_ids"),
+        "tags": b.tags("way"),
+        "refs": list_array(b.cat("way_nrefs"), b.arrow("way_refs")),
     }
 
 
-def _relation_columns(page) -> tuple[int, dict]:
+def _relation_columns(b: PageBatch) -> tuple[np.ndarray, dict]:
     """One row per relation, parallel member arrays in input order
     (reference gosmonaut.go:427-440)."""
-    nm = page.rel_nmembers
-    return len(page.rel_ids), {
-        "id": page.rel_ids,
-        "tags": page.rel_tags,
-        "member_ids": _split(page.rel_member_ids, nm),
-        "member_types": _split(page.rel_member_types.astype("int32"), nm),
-        "member_roles": _split(np.array(page.rel_member_roles, dtype=object), nm),
+    nm = b.cat("rel_nmembers")
+    roles = b.take(b.index([p.rel_role_idx for p in b.pages]))
+    return b.counts("rel_ids"), {
+        "id": b.arrow("rel_ids"),
+        "tags": b.tags("rel"),
+        "member_ids": list_array(nm, b.arrow("rel_member_ids")),
+        "member_types": list_array(nm, b.arrow("rel_member_types", np.int32)),
+        "member_roles": list_array(nm, roles),
     }
 
 
-def _text_columns(page) -> tuple[int, dict]:
+def _text_columns(b: PageBatch) -> tuple[np.ndarray, dict]:
     """One row per page: the decoded text section."""
-    return 1, {"text_extracted": [page.text.decode("utf-8")]}
+    data = np.frombuffer(b"".join(p.text for p in b.pages), dtype=np.uint8)
+    return np.ones(len(b.pages), dtype=np.int64), {
+        "text_extracted": utf8_array(data, b.counts("text"))
+    }
 
 
 # decode section -> (etype value, columns its builder fills, builder)
@@ -239,13 +233,30 @@ _KINDS = {
 }
 
 
-def _merge(chunks: list):
-    """Concatenate per-page (or per-kind) column chunks into one column."""
-    if len(chunks) == 1:
-        return chunks[0]
-    if chunks and isinstance(chunks[0], np.ndarray):
-        return np.concatenate(chunks)
-    return list(chain.from_iterable(chunks))
+def _entity_batch(
+    rb: pa.RecordBatch, kinds: tuple[str, ...], cols: list[str], carry: tuple[str, ...]
+) -> pa.RecordBatch:
+    """Decode one Arrow batch of pages into one batch of entity rows: the
+    ``kinds`` in order, each kind's rows in page order, each row with its
+    page's ``carry`` columns; a column a kind lacks is null for that kind's
+    rows. Nested columns are built from offsets: no Python object per
+    entity."""
+    b = PageBatch([decode_page_np(h, want=kinds) for h in rb.column("html").to_pylist()])
+    built = [_KINDS[k][2](b) for k in kinds]
+    rows = [int(counts.sum()) for counts, _ in built]
+    page_of_row = np.concatenate(
+        [np.repeat(np.arange(len(b.pages)), counts) for counts, _ in built]
+    )
+    out = [rb.column(c).take(np_to_arrow(page_of_row)) for c in carry]
+    for c in cols:
+        parts = [
+            x[c] if c in x else pa.nulls(n, _COLUMNS[c][1]) for (_, x), n in zip(built, rows)
+        ]
+        out.append(parts[0] if len(parts) == 1 else pa.concat_arrays(parts))
+    names = [_KINDS[k][0].encode() for k in kinds]
+    etypes = utf8_array(np.frombuffer(b"".join(names), dtype=np.uint8), [len(n) for n in names])
+    out.append(etypes.take(np_to_arrow(np.repeat(np.arange(len(kinds)), rows))))
+    return pa.RecordBatch.from_arrays(out, names=[*carry, *cols, "etype"])
 
 
 def _extract(
@@ -258,54 +269,29 @@ def _extract(
     Output columns: ``carry``, then the wanted kinds' columns in
     ``_COLUMNS`` order, then ``etype``. A column a kind lacks is null for
     that kind's rows."""
-    kinds = [k for k in _KINDS if k in want]
+    kinds = tuple(k for k in _KINDS if k in want)
     cols = [c for c in _COLUMNS if any(c in _KINDS[k][1] for k in kinds)]
     in_types = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
     schema = ", ".join(
         [f"{c} {in_types[c]}" for c in carry]
-        + [f"{c} {_COLUMNS[c]}" for c in cols]
+        + [f"{c} {_COLUMNS[c][0]}" for c in cols]
         + ["etype string"]
     )
-    doubles = {c for c in cols if _COLUMNS[c] == "double"}
-    pkg_root = _PKG_ROOT
+    pkg_root = PKG_ROOT
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # import inside the task so only workers pay the import
         import sys
 
         if pkg_root not in sys.path:
             sys.path.insert(0, pkg_root)
-        from gosmonaut_spark.format.gpb_numpy import decode_page_np
-        from gosmonaut_spark.sources.pages import _KINDS, _merge
+        from gosmonaut_spark.sources.pages import _entity_batch
 
-        for pdf in batches:
-            # per kind: entity count of each page and per-page column chunks
-            counts = {k: [] for k in kinds}
-            chunks = {k: {c: [] for c in _KINDS[k][1]} for k in kinds}
-            for blob in pdf["html"]:
-                page = decode_page_np(bytes(blob), want=want)
-                for k in kinds:
-                    n, built = _KINDS[k][2](page)
-                    counts[k].append(n)
-                    for c, v in built.items():
-                        chunks[k][c].append(v)
-            totals = [sum(counts[k]) for k in kinds]
-            out = {
-                c: _merge([np.repeat(pdf[c].to_numpy(), counts[k]) for k in kinds])
-                for c in carry
-            }
-            for c in cols:
-                parts = []
-                for k, n in zip(kinds, totals):
-                    if c in chunks[k]:
-                        parts.append(_merge(chunks[k][c]))
-                    else:  # padded once per kind, not once per entity
-                        parts.append(np.full(n, np.nan) if c in doubles else [None] * n)
-                out[c] = _merge(parts)
-            out["etype"] = np.repeat([_KINDS[k][0] for k in kinds], totals)
-            yield pd.DataFrame(out)
+        for rb in batches:
+            if rb.num_rows:
+                yield _entity_batch(rb, kinds, cols, carry)
 
-    return pages.select(*carry, "html").mapInPandas(fn, schema)
+    return pages.select(*carry, "html").mapInArrow(fn, schema)
 
 
 def extract_entities(pages: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 The reference's ``Next()`` pull loop (reference gosmonaut.go:219-236) is a
 bounded in-process stream; the cluster-scale recast is Structured
 Streaming: a file source discovers new page batches, the batch decode loop
-(``mapInPandas`` works identically in streaming plans) extracts nodes with
+(``mapInArrow`` works identically in streaming plans) extracts nodes with
 their page's event time, and a watermarked window + cell groupBy maintains
 the tile layer with late-data tolerance. Checkpointing gives exactly-once
 sink semantics — the streaming twin of the batch pass snapshots (B11).

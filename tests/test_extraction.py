@@ -1,6 +1,6 @@
 """Pass-0 extraction vs the pure-Python oracle decoder, on real Spark.
 
-The engine path is pages parquet → mapInPandas(numpy decoder) → DataFrames;
+The engine path is pages parquet → mapInArrow(numpy decoder) → DataFrames;
 the oracle path decodes every blob with gosmonaut_spark.format.gpb (pure
 Python) on the driver. Row-for-row equality = the decoder round-trip
 invariant at the DataFrame level.

@@ -392,6 +392,31 @@ def test_knn_adaptive_exact_at_coarse_rings(spark):
         assert got == exact, (res, ring)
 
 
+def test_knn_adaptive_caller_id_names(spark):
+    """``query_id``/``target_id`` name the caller's columns: the ring round
+    (queries 1 and 2 certify) and the brute tail (query 3 has no target in
+    its ring) return the default-name rows under the caller's names."""
+    q = [(1, 46.0, 0.0), (2, 10.0, 10.0), (3, -80.0, -170.0)]
+    t = [(10, 46.001, 0.0), (20, 10.0, 10.001), (30, 0.0, 0.0)]
+    qs = spark.createDataFrame(q, "query_id long, lat double, lon double")
+    ts = spark.createDataFrame(t, "target_id long, lat double, lon double")
+    want = knn_join_adaptive(qs, ts, 1, res=6, ring=1, min_res=6)
+    got = knn_join_adaptive(
+        qs.withColumnRenamed("query_id", "qid"),
+        ts.withColumnRenamed("target_id", "tid"),
+        1,
+        res=6,
+        ring=1,
+        min_res=6,
+        query_id="qid",
+        target_id="tid",
+    )
+    assert got.columns == ["qid", "tid", "dist_m"]
+    rows = sorted((r.query_id, r.target_id, r.dist_m) for r in want.collect())
+    assert [(q, t) for q, t, _d in rows] == [(1, 10), (2, 20), (3, 30)]
+    assert sorted((r.qid, r.tid, r.dist_m) for r in got.collect()) == rows
+
+
 # ---------------------------------------------------------------------------
 # distance-band (radius) join
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ROUND = "r14"
+ROUND = "r15"
 
 
 def main():
@@ -49,8 +49,9 @@ def main():
         p = os.path.join(out_dir, f"{name}_{tag}.txt")
         txt = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        # plans are compared across hosts: print the fixture dir by name
+        # plans are compared across hosts: print the fixture dirs by name
         txt = txt.replace(sf_dir, "$SPARK_GRAFT_SF_DIR")
+        txt = txt.replace(os.path.dirname(pages_path), "$PAGES_CACHE")
         with open(p, "w") as f:
             f.write(txt)
         print(f"wrote {p} ({len(txt)} bytes)", file=sys.stderr)
